@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.SimHash64.simhash64
@@ -509,10 +510,27 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Connected components over an undirected edge set, by the alternating
-    * large-star / small-star algorithm (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014). Returns
-    * (node, component) where component = the minimum node id reachable.
+  /** Connected components over an undirected edge set. Returns
+    * (node, component) where component = the minimum node id reachable;
+    * a node whose only edges are self-loops is its own singleton.
+    *
+    * Size-adaptive, with no option of its own: the deduplicated pair set
+    * is checkpointed once with its row count observed for free, and each
+    * distributed round's checkpoint observes its own. As soon as the
+    * current edge set × 16 bytes fits `spark.sql.autoBroadcastJoinThreshold`
+    * (the size Spark already collects to the driver for a broadcast —
+    * [[org.apache.spark.sql.GraftShims.fitsOnDriver]]), the edges are
+    * collected once and the components finish on the driver as a
+    * min-label union-find over primitive arrays ([[componentsOnDriver]]).
+    * A graph that fits from the start never schedules a round and comes
+    * back as a local relation. Labels are component minima on both paths, so
+    * the rows are the same, and so are the column types and nullability
+    * (two nullable longs). A threshold of -1 keeps the distributed
+    * rounds for every size.
+    *
+    * Distributed rounds: the alternating large-star / small-star
+    * algorithm (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC 2014).
     *
     * Why not plain min-label propagation: propagation needs O(diameter)
     * rounds — a chain of near-dup docs (common in crawl data: A≈B≈C≈…)
@@ -532,21 +550,31 @@ object Dedup {
     * Each round is localCheckpoint'd: the fixpoint loop would otherwise
     * grow an exponentially deep lazy plan (the classic iterative-algorithm
     * trap on Spark).
+    *
+    * `maxRounds` bounds the distributed rounds and COUNTS the final no-op
+    * round that detects convergence (the detector reads a round's input):
+    * a graph whose star forest forms after r rounds needs maxRounds ≥
+    * r + 1. The driver finish has no rounds and cannot fail to converge.
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    def canonical(src: Column, dst: Column) =
-      Seq(least(src, dst).as("src"), greatest(src, dst).as("dst"))
-    val raw = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    // node universe BEFORE dropping self-loops: a node whose only edge is
-    // (v, v) is still a node and must come back as its own singleton
-    val allNodes = raw.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct().localCheckpoint(true)
-    var e = raw
-      .filter(col("src") =!= col("dst"))
-      .select(canonical(col("src"), col("dst")): _*)
-      .distinct()
-      .localCheckpoint(true)
+    import org.apache.spark.sql.{GraftShims, Observation}
+    val spark = edges.sparkSession
+    val (s, d) = (col("src").cast("long"), col("dst").cast("long"))
+    // canonical orientation as a per-row swap, not least/greatest: those
+    // skip nulls and would turn (null, v) into a self-loop, losing the
+    // null node the node universe keeps; a pair with a null keeps its
+    // other end in src. dst has no ELSE branch, so it is nullable, and
+    // so is every column the rounds derive from it: the output schema
+    // is the same whichever path finishes and however many rounds run.
+    // Self-loops stay in this checkpoint: (v, v) still makes v a node.
+    val (pairs0, pairsObs) = GraftShims.counted(edges
+      .select(when(s <= d, s).otherwise(coalesce(d, s)).as("src"),
+        when(s <= d, d).when(s > d, s).as("dst"))
+      .distinct())
+    val pairs = pairs0.localCheckpoint(true)
+    var rows = GraftShims.observedCount(pairs, pairsObs)
+    // |E0| with self-loops: the duplicate guard's bound (below)
+    val pairRows = rows
 
     // Convergence (r12 rewrite): the edge set is the answer shape — a
     // forest of stars rooted at component minima — exactly when EVERY
@@ -559,31 +587,31 @@ object Dedup {
     // a `u` group in bidir) folds the global AND DURING the round's own
     // checkpoint job. Per-round convergence is therefore FREE — the
     // previous shape paid a 2|E| node-keyed shuffle + a separate action
-    // (isStarForest) every round. The price: the detector reports on the
-    // round's INPUT, so the loop runs exactly one no-op round past the
-    // fixpoint (star forests are fixpoints of both stars) and returns
-    // the input edge set of the detecting round.
+    // (isStarForest) every round. The detector reports on the round's
+    // INPUT, so the loop runs exactly one no-op round past the fixpoint;
+    // star forests are fixpoints of both stars (a duplicate-free forest
+    // comes back row for row), so that round's output is the answer.
     //
     // Duplicate discipline (r11 dropped largeStar's distinct, r12 drops
     // smallStar's): largeStar emits one row per input row (the v > u
-    // half of bidir), smallStar at most input + |V'| rows, both
-    // groupBy-min aggregates absorb duplicates, and smallStar's toRoot
-    // (one row per u-group) re-emits a formed forest exactly
-    // deduplicated — so the fixpoint multiset is the DISTINCT star
-    // forest with no distinct() exchange paid per round. A duplicated
-    // edge makes its dst's bidir count 2, failing the leaf test — the
-    // detector treats dup-carrying forests as unconverged, which costs
-    // at most one extra (cheap, shrunken) round until toRoot dedups, and
-    // never a wrong answer. GRAFT_CC_PROBE=1 prints per-round row/dup
-    // counts (the d7 probe VERDICT r11 asked for; measured sf0.1: zero
-    // dup rows in every round of g3 and d7).
-    val probe = sys.env.contains("GRAFT_CC_PROBE")
+    // half of bidir); smallStar emits, per u-group, its rows with v ≠ m
+    // plus one toRoot row, and at least one row has v = m — so no round
+    // emits more rows than it reads, and every round stays within the
+    // deduplicated input's row count. Both groupBy-min aggregates absorb
+    // duplicates, and toRoot (one row per u-group) re-emits a formed
+    // forest exactly deduplicated — so the fixpoint multiset is the
+    // DISTINCT star forest with no distinct() exchange paid per round. A
+    // duplicated edge makes its dst's bidir count 2, failing the leaf
+    // test — the detector treats dup-carrying forests as unconverged,
+    // which costs at most one extra (cheap, shrunken) round until toRoot
+    // dedups, and never a wrong answer. The observed per-round count
+    // checks the row bound instead of trusting the argument: a round
+    // past it is distinct()'d.
 
     // One alternating round (largeStar then smallStar) with the inline
     // forest detector on the round's input; m ≤ u < v after largeStar,
     // m < v after smallStar.
-    def starRound(cur: DataFrame,
-        obs: org.apache.spark.sql.Observation): DataFrame = {
+    def starRound(cur: DataFrame, obs: Observation): DataFrame = {
       val bidir = cur.select(col("src").as("u"), col("dst").as("v"))
         .union(cur.select(col("dst").as("u"), col("src").as("v")))
       val mL = bidir.groupBy("u").agg(min("v").as("mv"), count(lit(1)).as("deg"))
@@ -623,42 +651,107 @@ object Dedup {
           (col("deg") === 1 && col("mv") < col("u"))), lit(true)).as("f"))
         .head().getBoolean(0)
     }
+    var e = pairs.filter(col("src") =!= col("dst"))
     var converged = false
     var round = 0
-    while (!converged && round < maxRounds) {
-      {
-        val obs = org.apache.spark.sql.Observation()
-        val next = starRound(e, obs).localCheckpoint(true)
-        converged = org.apache.spark.sql.GraftShims
-          .observedMetric(obs, "input_is_forest")
-          .map(_.asInstanceOf[Boolean])
-          .getOrElse(forestFlagJob(e))
-        if (probe) {
-          val n = next.count(); val d = n - next.distinct().count()
-          println(s"[cc-probe] round=$round rows=$n dup_rows=$d converged=$converged")
-        }
-        if (converged) {
-          // `e` (the detecting round's input) is the star forest; the
-          // just-built no-op round is dead weight
-          org.apache.spark.sql.GraftShims.unpersistCheckpoint(next)
-        } else {
-          // the new round is materialized (eager checkpoint), so the old
-          // round's blocks are dead weight — release NOW instead of
-          // waiting for driver GC; dead rounds otherwise accumulate
-          // |E|-sized RDDs in executor storage for the whole fixpoint
-          // (r11, the 8 GB sf10 discipline)
-          org.apache.spark.sql.GraftShims.unpersistCheckpoint(e)
-          e = next
-        }
+    while (!converged && round < maxRounds &&
+        !GraftShims.fitsOnDriver(spark, rows)) {
+      val forestObs = Observation()
+      val (next0, nextObs) = GraftShims.counted(starRound(e, forestObs))
+      var next = next0.localCheckpoint(true)
+      converged = GraftShims.observedMetric(spark, forestObs, "input_is_forest")
+        .map(_.asInstanceOf[Boolean])
+        .getOrElse(forestFlagJob(e))
+      rows = GraftShims.observedCount(next, nextObs)
+      if (rows > pairRows) {
+        val deduped = next.distinct().localCheckpoint(true)
+        GraftShims.unpersistCheckpoint(next)
+        next = deduped
       }
+      // the new round is materialized (eager checkpoint), so the old
+      // round's blocks are dead weight — release NOW instead of waiting
+      // for driver GC; dead rounds otherwise accumulate |E|-sized RDDs
+      // in executor storage for the whole fixpoint (r11, the 8 GB sf10
+      // discipline). Round 0's input is a filter over `pairs`, which
+      // stays: it is the node universe.
+      GraftShims.unpersistCheckpoint(e)
+      e = next
       round += 1
     }
-    require(converged, s"connectedComponents did not converge in $maxRounds rounds")
-    // fixpoint is a forest of stars: every edge is (component-min, member)
-    val members = e.select(col("dst").as("node"), col("src").as("component"))
-    val roots = allNodes.join(members, Seq("node"), "left_anti")
-      .select(col("node"), col("node").as("component"))
-    members.union(roots)
+    require(converged || GraftShims.fitsOnDriver(spark, rows),
+      s"connectedComponents did not converge in $maxRounds rounds")
+    if (round == 0) {
+      // the driver saw every pair, self-loops and nulls included
+      componentsOnDriver(pairs.collect(), spark)
+    } else {
+      val members =
+        if (converged) e.select(col("dst").as("node"), col("src").as("component"))
+        else {
+          val local = componentsOnDriver(e.collect(), spark)
+          GraftShims.unpersistCheckpoint(e)
+          local
+        }
+      // fixpoint is a forest of stars: every edge is (component-min,
+      // member); nodes outside it (self-loop-only, null) label themselves
+      val roots = pairs.select(explode(array(col("src"), col("dst"))).as("node"))
+        .distinct()
+        .join(members, Seq("node"), "left_anti")
+        .select(col("node"), col("node").as("component"))
+      members.union(roots)
+    }
+  }
+
+  /** The driver finish of [[connectedComponents]]: a min-label
+    * union-find over collected (src, dst) pairs. Node ids are sorted
+    * once into a primitive array and edges become index pairs, so
+    * nothing is boxed per step; linking the larger root under the
+    * smaller keeps every root its set's minimum index, i.e. the
+    * component's minimum id. Every non-null endpoint is a node
+    * (self-loop pairs included); a null endpoint surfaces as one
+    * (null, null) row, as the distributed node universe does.
+    */
+  private def componentsOnDriver(pairs: Array[Row],
+      spark: SparkSession): DataFrame = {
+    val ends = Array.newBuilder[Long]
+    val lo = new Array[Long](pairs.length)
+    val hi = new Array[Long](pairs.length)
+    var m = 0
+    var hasNull = false
+    for (r <- pairs) {
+      if (!r.isNullAt(0)) ends += r.getLong(0)
+      if (!r.isNullAt(1)) ends += r.getLong(1)
+      if (r.isNullAt(0) || r.isNullAt(1)) hasNull = true
+      else { lo(m) = r.getLong(0); hi(m) = r.getLong(1); m += 1 }
+    }
+    val ids = sortedIds(ends.result())
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (i <- 0 until m) {
+      val a = find(java.util.Arrays.binarySearch(ids, lo(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, hi(i)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val out = new java.util.ArrayList[Row](ids.length + 1)
+    for (i <- ids.indices) out.add(Row(ids(i), ids(find(i))))
+    if (hasNull) out.add(Row(null, null))
+    spark.createDataFrame(out, StructType(Seq(
+      StructField("node", LongType, nullable = true),
+      StructField("component", LongType, nullable = true))))
+  }
+
+  /** `ids` sorted and deduplicated (sorts in place): dense node indexing
+    * by binary search for the driver-side graph finishes.
+    */
+  private[operators] def sortedIds(ids: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(ids)
+    var m = 0
+    for (i <- ids.indices)
+      if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+    java.util.Arrays.copyOf(ids, m)
   }
 
   /** Duplicate CLUSTERS: the transitive closure of the near-dup relation.

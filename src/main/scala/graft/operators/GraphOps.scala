@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.functions.{array, broadcast, coalesce, col,
   collect_list, collect_set, count, explode, expr, lit, max, min, posexplode, row_number,
   size, sort_array, struct, sum, when}
@@ -584,14 +585,23 @@ object GraphOps {
     * k-core is unique regardless of removal order), so the result is
     * partition-invariant and engine-exact; the DuckDB oracle unrolls
     * more rounds than the fixture needs and the extra rounds are
-    * idempotent no-ops. Per round: one equi-join of the edge list
-    * against the shrinking keep-set and one map-side-combining degree
-    * count — work ∝ surviving edges, the same frontier discipline as
-    * [[bfsHops]]; the symmetrized edge list is the cached loop
+    * idempotent no-ops. Per distributed round: one equi-join of the edge
+    * list against the shrinking keep-set and one map-side-combining
+    * degree count — work ∝ surviving edges, the same frontier discipline
+    * as [[bfsHops]]; the symmetrized edge list is the cached loop
     * invariant and the keep-set is eagerly checkpointed (lineage
-    * truncation). The per-round `count()` driver actions are bounded by
-    * `maxRounds`, the documented exception to the no-driver-loops rule
-    * (shared with the CC fixpoint probe).
+    * truncation).
+    *
+    * Size-adaptive, like [[Dedup.connectedComponents]] and through the
+    * same rule ([[org.apache.spark.sql.GraftShims.fitsOnDriver]]): each
+    * keep-set checkpoint observes its size and its degree sum, and half
+    * the degree sum bounds the edges left among the kept nodes. Once
+    * that bound × 16 bytes fits `spark.sql.autoBroadcastJoinThreshold`,
+    * those edges are collected once and the same synchronous peel runs
+    * round by round on the driver ([[peelOnDriver]]) — same rounds, same
+    * round count, same convergence test, same `maxRounds` require; the
+    * result is a local relation with the keep-set's schema (g5 at sf0.01:
+    * 21 → 10 jobs). A threshold of -1 keeps every round distributed.
     *
     * Convergence past `maxRounds` fails loudly rather than returning a
     * half-peeled graph as if it were the core (at the registered k = 2
@@ -604,48 +614,106 @@ object GraphOps {
     */
   def kCore(lineitem: DataFrame, k: Long = 2L, minSupport: Long = 2L,
       maxRounds: Int = 12): DataFrame = {
+    import org.apache.spark.sql.GraftShims
+    val spark = lineitem.sparkSession
     val e0 = coPurchaseEdges(lineitem, minSupport)
     val sym = e0.select(col("src"), col("dst"))
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .cache()
-    // survivor counts ride each round's own checkpoint job via observe()
-    // (r12, the CC-loop device) — the separate per-round count() action
-    // and its jobs are gone; convergence semantics unchanged. Where the
-    // metric doesn't arrive (streaming foreachBatch bodies — see
-    // GraftShims.observedMetric), a count() of the materialized
-    // checkpoint takes over.
-    def counted(df: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-      val obs = org.apache.spark.sql.Observation()
-      (df.observe(obs, count(lit(1)).as("n")), obs)
+    // survivor count and degree sum ride each round's own checkpoint job
+    // via observe() (r12, the CC-loop device; fallback jobs where the
+    // metrics don't arrive — see GraftShims.observedMetric)
+    def peeled(surviving: DataFrame): (DataFrame, Long, Long) = {
+      val (df, obs) = GraftShims.counted(surviving
+        .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
+        .filter(col("core_deg") >= k),
+        coalesce(sum(col("core_deg")), lit(0L)).as("deg_sum"))
+      val ck = df.localCheckpoint(true)
+      (ck, GraftShims.observedCount(ck, obs),
+        GraftShims.observedLong(ck, obs, "deg_sum")(
+          ck.agg(coalesce(sum(col("core_deg")), lit(0L))).head().getLong(0)))
     }
-    def sizeOf(ck: DataFrame, obs: org.apache.spark.sql.Observation): Long =
-      org.apache.spark.sql.GraftShims.observedMetric(obs, "n")
-        .map(_.asInstanceOf[Long]).getOrElse(ck.count())
-    val (k0, obs0) = counted(sym
-      .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
-      .filter(col("core_deg") >= k))
-    var kept = k0.localCheckpoint(true)
-    var n = sizeOf(kept, obs0)
+    def small(degSum: Long) = GraftShims.fitsOnDriver(spark, (degSum + 1) / 2)
+    var (kept, n, degSum) = peeled(sym)
     var converged = false
     var round = 1
-    while (!converged && round < maxRounds) {
-      val (next0, obs) = counted(sym
+    while (!converged && round < maxRounds && !small(degSum)) {
+      val (next, n2, d2) = peeled(sym
         .join(kept.select(col("node").as("src")), Seq("src"))
-        .join(kept.select(col("node").as("dst")), Seq("dst"))
-        .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
-        .filter(col("core_deg") >= k))
-      val next = next0.localCheckpoint(true)
-      val n2 = sizeOf(next, obs)
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(kept)
+        .join(kept.select(col("node").as("dst")), Seq("dst")))
+      GraftShims.unpersistCheckpoint(kept)
       converged = n2 == n
       n = n2
+      degSum = d2
       kept = next
       round += 1
     }
+    val core =
+      if (converged || !small(degSum)) kept
+      else {
+        // the edges left among the kept nodes, each once (sym's src < dst
+        // half is e0), read from sym's cache
+        val edges = sym.filter(col("src") < col("dst"))
+          .join(kept.select(col("node").as("src")), Seq("src"))
+          .join(kept.select(col("node").as("dst")), Seq("dst"))
+          .select(col("src"), col("dst"))
+          .collect()
+        val (nodes, degs, ok) = peelOnDriver(edges, k, n, round, maxRounds)
+        converged = ok
+        // the node column keeps its input type (l_partkey's)
+        val box: Long => Any = kept.schema("node").dataType match {
+          case IntegerType => _.toInt
+          case _ => v => v
+        }
+        val rows = new java.util.ArrayList[Row](nodes.length)
+        for (j <- nodes.indices) rows.add(Row(box(nodes(j)), degs(j)))
+        val local = spark.createDataFrame(rows, kept.schema)
+        GraftShims.unpersistCheckpoint(kept)
+        local
+      }
     sym.unpersist()
     require(converged,
       s"k-core peel (k=$k) did not reach its fixpoint in $maxRounds rounds")
-    kept.orderBy("node")
+    core.orderBy("node")
+  }
+
+  /** The driver finish of [[kCore]]: the same synchronous peel over the
+    * collected edges left among the current keep-set (`n` nodes after
+    * `round` rounds), continuing the distributed loop's round count and
+    * convergence test. Ids are indexed once through a sorted primitive
+    * array; a node stays while it has ≥ max(k, 1) surviving neighbors
+    * (the distributed degree count only emits nodes that have one).
+    * Returns the kept nodes, their core degrees, and whether the
+    * fixpoint was reached.
+    */
+  private def peelOnDriver(edges: Array[Row], k: Long, n: Long, round: Int,
+      maxRounds: Int): (Array[Long], Array[Long], Boolean) = {
+    def id(r: Row, i: Int) = r.getAs[Number](i).longValue
+    val ids = Dedup.sortedIds(edges.flatMap(r => Array(id(r, 0), id(r, 1))))
+    val a = edges.map(r => java.util.Arrays.binarySearch(ids, id(r, 0)))
+    val b = edges.map(r => java.util.Arrays.binarySearch(ids, id(r, 1)))
+    val alive = Array.fill(ids.length)(true)
+    val deg = new Array[Long](ids.length)
+    var kept = n
+    var converged = false
+    var r = round
+    while (!converged && r < maxRounds) {
+      java.util.Arrays.fill(deg, 0L)
+      for (i <- a.indices if alive(a(i)) && alive(b(i))) {
+        deg(a(i)) += 1
+        deg(b(i)) += 1
+      }
+      var n2 = 0L
+      for (j <- ids.indices) {
+        alive(j) = deg(j) > 0 && deg(j) >= k
+        if (alive(j)) n2 += 1
+      }
+      converged = n2 == kept
+      kept = n2
+      r += 1
+    }
+    val keep = ids.indices.filter(alive(_)).toArray
+    (keep.map(ids(_)), keep.map(deg(_)), converged)
   }
 
   /** BOUNDED-HOP CHEAPEST PATH (g6): minimum edge-cost walk of ≤

@@ -490,17 +490,15 @@ object IvfIndex {
     // corpus-proportional shortlist sizing rides the seeds job via
     // observe() (r12): every row flows through the metrics node below
     // the TakeOrdered, so the caller's separate count() scan is gone
-    val nObs = org.apache.spark.sql.Observation()
-    val seeds = eq
-      .observe(nObs, count(lit(1)).as("n"))
+    val (eqCounted, nObs) = org.apache.spark.sql.GraftShims.counted(eq)
+    val seeds = eqCounted
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(kSub)
       .collect().map(_.getSeq[Long](1).toArray)
     val shortlistN = shortlistFor.map { f =>
       // count() fallback where observe metrics don't arrive (see
       // GraftShims.observedMetric)
-      f(org.apache.spark.sql.GraftShims.observedMetric(nObs, "n")
-        .map(_.asInstanceOf[Long]).getOrElse(eq.count()))
+      f(org.apache.spark.sql.GraftShims.observedCount(eq, nObs))
     }.getOrElse(shortlist)
     require(seeds.length == kSub, s"pqContract: corpus smaller than $kSub")
     val dim = seeds(0).length
@@ -594,15 +592,14 @@ object IvfIndex {
     // shortlist sizing rides the query-row collect via observe() (r12):
     // the metrics node sits BELOW the isin filter, so it counts every
     // corpus row and the caller's separate count() scan is gone
-    val nObs = org.apache.spark.sql.Observation()
-    val qRows = eq.observe(nObs, count(lit(1)).as("n"))
+    val (eqCounted, nObs) = org.apache.spark.sql.GraftShims.counted(eq)
+    val qRows = eqCounted
       .filter(col("vec_id").isin(queryIds: _*))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
     val shortlistN = shortlistFor.map { f =>
       // count() fallback where observe metrics don't arrive (see
       // GraftShims.observedMetric)
-      f(org.apache.spark.sql.GraftShims.observedMetric(nObs, "n")
-        .map(_.asInstanceOf[Long]).getOrElse(eq.count()))
+      f(org.apache.spark.sql.GraftShims.observedCount(eq, nObs))
     }.getOrElse(shortlist)
     val queries = {
       val spark = embeddings.sparkSession

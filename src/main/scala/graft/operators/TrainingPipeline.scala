@@ -21,8 +21,14 @@ import graft.functions.TextFunctions._
   *     language stream via a keyed window.
   *
   * Scale shape is inherited from the stages: map-side sample/gate, one
-  * dedup shuffle, banded LSH (no all-pairs), O(log² n) star rounds, and
-  * keyed windows — no stage concentrates the corpus on one task.
+  * dedup shuffle, banded LSH (no all-pairs), connected components over
+  * the near-dup pairs, and keyed windows — no stage concentrates the
+  * corpus on one task. The near-dup pair set is usually far smaller than
+  * the corpus: while it fits `spark.sql.autoBroadcastJoinThreshold` the
+  * components finish on the driver in one collect and come back as a
+  * local relation that the survivor join broadcasts, and only a pair set
+  * past that size runs the O(log² n) distributed star rounds
+  * ([[Dedup.connectedComponents]]).
   */
 object TrainingPipeline {
 

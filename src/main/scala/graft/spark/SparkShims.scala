@@ -66,12 +66,63 @@ object GraftShims {
     * nested execution. Returns None on a missing field or on timeout;
     * callers fall back to a direct aggregate job — same value, one extra
     * small job, only in contexts where the free path is unavailable.
+    *
+    * A timeout (the Observation never completes) marks `spark` as a
+    * session whose metrics do not arrive: every later read there returns
+    * None at once, so a fixpoint loop pays the wait once, not once per
+    * round.
     */
-  def observedMetric(obs: Observation, key: String,
+  def observedMetric(spark: SparkSession, obs: Observation, key: String,
       timeoutSec: Int = 30): Option[Any] =
-    try {
+    if (observeUnavailable.containsKey(spark)) None
+    else try {
       val row = scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(timeoutSec, "s"))
       scala.util.Try(row.getAs[Any](key)).toOption
-    } catch { case _: java.util.concurrent.TimeoutException => None }
+    } catch {
+      case _: java.util.concurrent.TimeoutException =>
+        observeUnavailable.put(spark, java.lang.Boolean.TRUE)
+        None
+    }
+
+  // sessions whose Observations timed out once (weak keys: a stopped,
+  // dropped session leaves no entry behind)
+  private val observeUnavailable = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** `df` with its row count observed as "n", plus any `extra` aggregate
+    * metrics: the count rides whatever job consumes `df` (typically its
+    * eager checkpoint) instead of a separate count() action.
+    */
+  def counted(df: DataFrame, extra: Column*): (DataFrame, Observation) = {
+    val obs = Observation()
+    (df.observe(obs, functions.count(functions.lit(1)).as("n"), extra: _*), obs)
+  }
+
+  /** The long metric `key` of an Observation from [[counted]], or else
+    * `fallback` (a direct job computing the same value) where metrics do
+    * not arrive.
+    */
+  def observedLong(df: DataFrame, obs: Observation, key: String)(
+      fallback: => Long): Long =
+    observedMetric(df.sparkSession, obs, key)
+      .map(_.asInstanceOf[Long]).getOrElse(fallback)
+
+  /** The observed row count of a [[counted]] frame, or else a count() of
+    * `df` — the materialized checkpoint, or the frame before the observe
+    * node (a second run of the observed frame would re-fire its metrics).
+    */
+  def observedCount(df: DataFrame, obs: Observation): Long =
+    observedLong(df, obs, "n")(df.count())
+
+  /** Whether a graph of `edges` edges (two longs, 16 bytes each) is small
+    * enough to finish on the driver: the size Spark already lets the
+    * driver collect for a broadcast (`spark.sql.autoBroadcastJoinThreshold`,
+    * same `>= 0` and `<=` rule as its broadcast check). A threshold of -1
+    * keeps every fixpoint on its distributed rounds.
+    */
+  def fitsOnDriver(spark: SparkSession, edges: Long): Boolean = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && edges <= limit / 16
+  }
 }

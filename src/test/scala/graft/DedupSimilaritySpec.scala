@@ -418,22 +418,62 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(got.collect().head.getLong(0) === 5L)
   }
 
+  // Connected components and k-core finish on the driver while their
+  // edges fit spark.sql.autoBroadcastJoinThreshold; -1 keeps their
+  // distributed rounds. Each graph spec runs on both paths.
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
+  private def withThreshold[T](t: String)(body: => T): T = {
+    val prev = spark.conf.get(threshold)
+    try { spark.conf.set(threshold, t); body }
+    finally spark.conf.set(threshold, prev)
+  }
+  private def onBothPaths[T](body: Boolean => T): Seq[T] =
+    Seq(spark.conf.get(threshold) -> true, "-1" -> false).map {
+      case (t, driver) => withThreshold(t)(body(driver))
+    }
+  // a driver finish comes back as (or over) a local relation; the
+  // distributed rounds end in checkpoints
+  private def finishedOnDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.isDefined
+  private def componentMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+  // driver-side union-find as independent ground truth: node -> min id
+  // of its component
+  private def unionFindTruth(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(v => v -> find(v)).toMap
+  }
+
   test("connected components: chain graph collapses to one component in few rounds") {
     // a 30-node chain is the worst case for min-label PROPAGATION
     // (diameter rounds); the alternating star algorithm must still
     // converge well inside its O(log² n) budget
     val chain = (0L until 29L).map(i => (i, i + 1)).toDF("src", "dst")
-    val labels = Dedup.connectedComponents(chain, maxRounds = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(labels.size === 30)
-    assert(labels.values.toSet === Set(0L), s"all nodes must label 0: $labels")
+    onBothPaths { driver =>
+      val cc = Dedup.connectedComponents(chain, maxRounds = 12)
+      assert(finishedOnDriver(cc) === driver)
+      val labels = componentMap(cc)
+      assert(labels.size === 30)
+      assert(labels.values.toSet === Set(0L), s"all nodes must label 0: $labels")
+    }
   }
 
   test("connected components keep self-loop-only nodes as singletons") {
     val e = Seq((5L, 5L), (1L, 2L)).toDF("src", "dst")
-    val got = Dedup.connectedComponents(e)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
+    onBothPaths { _ =>
+      assert(componentMap(Dedup.connectedComponents(e)) ===
+        Map(5L -> 5L, 1L -> 1L, 2L -> 1L))
+    }
   }
 
   test("connected components match union-find ground truth on random graphs") {
@@ -442,24 +482,60 @@ class DedupSimilaritySpec extends SparkTestBase {
       val n = 60
       val edges = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      // driver-side union-find as independent ground truth
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      val want = unionFindTruth(edges)
+      onBothPaths { driver =>
+        val got = componentMap(Dedup.connectedComponents(edges.toDF("src", "dst")))
+        assert(got === want, s"seed $seed, driver finish $driver")
       }
-      val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(v => v -> {
-          // component label = min node id in the component
-          val r = find(v.toInt)
-          edges.flatMap(e => Seq(e._1, e._2)).distinct
-            .filter(u => find(u.toInt) == r).min
-        }).toMap
-      val got = Dedup.connectedComponents(edges.toDF("src", "dst"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got === want, s"seed $seed")
     }
+  }
+
+  test("connected components: an empty edge set gives no rows on either path") {
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(onBothPaths(_ => Dedup.connectedComponents(none).count()) === Seq(0L, 0L))
+  }
+
+  test("connected components: duplicate and reversed edges count once") {
+    val edges = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 2L), (7L, 9L),
+      (9L, 7L), (9L, 7L))
+    onBothPaths { driver =>
+      val rows = Dedup.connectedComponents(edges.toDF("src", "dst")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.sorted.toSeq === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L,
+        9L -> 7L), s"one row per node, driver finish $driver")
+    }
+  }
+
+  test("connected components: both paths return the same schema and rows") {
+    // non-nullable ids; an input that is already a star forest (the
+    // distributed loop stops after its first, detecting round); nullable
+    // ids with a null endpoint, which surfaces as one (null, null) row
+    val forest = Seq((1L, 2L), (1L, 3L), (4L, 5L)).toDF("src", "dst")
+    val nullable = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (None, Some(5L)), (Some(6L), Some(6L))).toDF("src", "dst")
+    for (edges <- Seq(forest, nullable)) {
+      val results = onBothPaths { _ =>
+        val cc = Dedup.connectedComponents(edges)
+        (cc.schema, cc.collect().map(_.toSeq).toSet)
+      }
+      assert(results.distinct.size === 1, results.toString)
+    }
+    val withNull = withThreshold("-1")(Dedup.connectedComponents(nullable).collect())
+    assert(withNull.count(_.isNullAt(0)) === 1 && withNull.length === 5)
+  }
+
+  test("connected components hand a shrinking edge set to the driver mid-loop") {
+    // K8 (28 edges) plus a 3-edge chain: 31 pairs do not fit 30 edges'
+    // worth of threshold, but the first star round leaves 7 + 3 edges
+    val k8 = for (a <- 0L until 8L; b <- a + 1 until 8L) yield (a, b)
+    val edges = k8 ++ Seq((10L, 11L), (11L, 12L), (12L, 13L))
+    val want = unionFindTruth(edges)
+    val (midLoop, distributed) = (
+      withThreshold((16 * 30).toString)(Dedup.connectedComponents(edges.toDF("src", "dst"))),
+      withThreshold("-1")(Dedup.connectedComponents(edges.toDF("src", "dst"))))
+    assert(finishedOnDriver(midLoop) && !finishedOnDriver(distributed))
+    assert(componentMap(midLoop) === want && componentMap(distributed) === want)
+    assert(midLoop.schema === distributed.schema)
   }
 
   test("pagerank: hand-computed star graph, symmetric fixed point, partition-invariant") {
@@ -863,29 +939,52 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
 
-  test("kCore: pendant cascade peels multi-round; cycle survives with degrees") {
-    // co-purchase planting: each desired edge gets two 2-part baskets so
-    // it clears support >= 2. Graph: triangle {1,2,3} + chain 3-4-5 +
-    // star 6-(7,8,9). The star hub has degree 3 — ABOVE k — yet must fall
-    // out after its pendants peel (the structural-embeddedness case), and
-    // the chain needs two rounds (5 first, then 4): the fixpoint loop is
-    // what's under test, not one filter pass.
-    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
-      (6L, 7L), (6L, 8L), (6L, 9L))
-    val li = edges.zipWithIndex.flatMap { case ((u, v), i) =>
+  // co-purchase planting: each desired edge gets two 2-part baskets so
+  // it clears support >= 2. Graph: triangle {1,2,3} + chain 3-4-5 +
+  // star 6-(7,8,9). The star hub has degree 3 — ABOVE k — yet must fall
+  // out after its pendants peel (the structural-embeddedness case), and
+  // the chain needs two rounds (5 first, then 4): the fixpoint loop is
+  // what's under test, not one filter pass. Rounds: {1,2,3,4,6} (degree
+  // sum 12), {1,2,3} (degree sum 7), {1,2,3} again — converged when the
+  // third round runs.
+  private def kCoreBaskets = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
+      (4L, 5L), (6L, 7L), (6L, 8L), (6L, 9L)).zipWithIndex.flatMap {
+    case ((u, v), i) =>
       Seq((i * 2L, u), (i * 2L, v), (i * 2L + 1, u), (i * 2L + 1, v))
-    }.toDF("l_orderkey", "l_partkey")
-    val got = GraphOps.kCore(li, k = 2L, minSupport = 2L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 2L, 2L -> 2L, 3L -> 2L),
-      s"only the triangle is the 2-core, with within-core degree 2: $got")
+  }.toDF("l_orderkey", "l_partkey")
+
+  test("kCore: pendant cascade peels multi-round; cycle survives with degrees") {
+    onBothPaths { driver =>
+      val core = GraphOps.kCore(kCoreBaskets, k = 2L, minSupport = 2L)
+      assert(finishedOnDriver(core) === driver)
+      val got = core.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === Map(1L -> 2L, 2L -> 2L, 3L -> 2L),
+        s"only the triangle is the 2-core, with within-core degree 2: $got")
+    }
+  }
+
+  test("kCore: maxRounds require fires on both paths; schema is path-independent") {
+    // 80 bytes: the first keep-set (≤ 6 edges, 96 bytes) stays
+    // distributed, the second (≤ 4 edges) finishes on the driver
+    val paths = Seq(spark.conf.get(threshold), "80", "-1")
+    for (t <- paths) withThreshold(t) {
+      val e = intercept[IllegalArgumentException](
+        GraphOps.kCore(kCoreBaskets, k = 2L, minSupport = 2L, maxRounds = 2))
+      assert(e.getMessage.contains("did not reach its fixpoint"), s"threshold $t")
+    }
+    val results = paths.map(t => withThreshold(t) {
+      val core = GraphOps.kCore(kCoreBaskets, k = 2L, minSupport = 2L, maxRounds = 3)
+      (finishedOnDriver(core), core.schema, core.collect().toSeq)
+    })
+    assert(results.map(_._1) === Seq(true, true, false))
+    assert(results.map(r => (r._2, r._3)).distinct.size === 1, results.toString)
   }
 
   test("kCore converges well inside the round budget on the fixtures") {
     // guard for the oracle's 11 unrolled rounds: if a regenerated fixture
     // peels longer, this (and kCore's own require at 12) fails loudly
     // before the driver sees an opaque hash mismatch
-    for (sfDir <- Seq(sf0001, sf001)) {
+    for (sfDir <- Seq(sf0001, sf001)) onBothPaths { _ =>
       val core = GraphOps.kCore(Tables.lineitem(spark, sfDir), maxRounds = 8)
       assert(core.count() >= 0L) // force the fixpoint loop
     }

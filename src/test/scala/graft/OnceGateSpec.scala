@@ -29,6 +29,10 @@ class OnceGateSpec extends SparkTestBase {
     // the filter must sit ABOVE the projection computing e — pushing it
     // below would re-derive the kernel at two sites
     val plan = df.queryExecution.optimizedPlan.toString
+    // both nodes present first: indexOf's -1 would make the order
+    // check pass with the Filter optimized away
+    assert(plan.contains("once_gate") && plan.contains("Filter"),
+      s"gate or filter missing from the plan:\n$plan")
     assert(plan.indexOf("once_gate") > plan.indexOf("Filter"),
       s"filter was pushed below the gate:\n$plan")
     assert(df.count() == 2) // 4 and 6
