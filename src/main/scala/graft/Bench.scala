@@ -30,35 +30,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Let AQE re-plan the output partitioning of cached plans (default
-      // false). The iterative operators pin loop invariants with
-      // .cache(); without this, the cached relation keeps the static
-      // shuffle partition count and every iteration scans it at that
-      // width — measured at sf0.1 (r11 StatsProbe): g1_pagerank 216→81
-      // tasks, task time 121→52 s; g4/g5/g6/g11 tasks −60%, task time
-      // −50%. At production scale the same flag sizes cached partitions
-      // from actual bytes (advisory size) instead of a static count —
-      // scale-adaptive in both directions, not a local[32] tune.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // AQE coalescing sizes partitions by BYTES; several operators here
-      // are compute-dense over byte-small shuffles (7-row rolling-median
-      // windows, weighted-median cells, boilerplate n-gram regroups), and
-      // the 1 MiB default floor collapses them to 1-6 tasks on a 32-core
-      // box (measured r11: dq11 3.75 s → 1.71 s warm at 256 KiB). The
-      // floor only binds when a shuffle is smaller than cores × floor —
-      // at production scale partitions dwarf either value and the
-      // advisory size (64 MiB default) governs, so this is a small-input
-      // parallelism fix, not a cluster tune. Env-overridable for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     // The ~21 whitelisted bounded-domain global windows each emit a
     // WindowExec single-partition WARN — silence the logger and replace
     // the noise with an explicit audit against GlobalWindows.whitelist

@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** The single source of truth for the §R10.12 expensive-kernel sweep,
-  * shared by [[JoinCondAudit]] (dev probe) and `PlanHygieneSpec` (the CI
-  * gate) so the two lists can never drift (they had, r10: `zip_with(`
-  * vs `zip_with`).
+/** The §R10.12 expensive-kernel sweep that `PlanHygieneSpec` runs over
+  * every registered query's plan: the kernel list and the call-site
+  * matcher.
   */
 object PlanKernels {
   /** Kernels that scan a whole array/string payload per call; cheap
@@ -94,48 +92,4 @@ object GlobalWindows {
       case w: org.apache.spark.sql.execution.window.WindowExec
           if w.partitionSpec.isEmpty => w
     }.size
-}
-
-/** Dev-only sweep for the SURVEY §R10.12 lesson: a filter over an
-  * expensive projected column gets alias-inlined PER OCCURRENCE into the
-  * pushed join condition, and join-condition codegen has no
-  * subexpression elimination — so a kernel appearing N times in one
-  * "Join condition:" line runs N times per candidate row. Scans every
-  * registered query's formatted plan and prints any join condition (or
-  * post-join Filter) where an expensive kernel repeats. Exits nonzero
-  * when anything is flagged OR any query fails to plan, so the probe can
-  * gate a sweep directly.
-  */
-object JoinCondAudit {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    var flagged = 0
-    var planErrors = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString()
-        val suspects = PlanKernels.repeatedKernelLines(plan)
-        if (suspects.nonEmpty) {
-          flagged += 1
-          println(s"[audit] $name:")
-          suspects.foreach(l => println(s"  ${l.take(300)}"))
-        }
-      } catch {
-        case e: Throwable =>
-          planErrors += 1
-          val msg = Option(e.getMessage).getOrElse("")
-            .linesIterator.take(1).mkString.take(200)
-          println(s"[audit] $name PLAN-ERROR ${e.getClass.getSimpleName}: $msg")
-      }
-    }
-    println(s"[audit] done: $flagged flagged, $planErrors plan errors " +
-      s"of ${SparkEntry.queries.size}")
-    spark.stop()
-    if (flagged > 0 || planErrors > 0) sys.exit(1)
-  }
 }

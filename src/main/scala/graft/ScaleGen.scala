@@ -30,16 +30,9 @@ object ScaleGen {
     val src = args(0); val dst = args(1); val k = args(2).toInt
     require(k >= 1, "factor must be >= 1")
     // a caller's running session is used as found and left running;
-    // only a session built here is configured and stopped here
+    // only a session built here is stopped here
     val found = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = found.getOrElse {
-      val s = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    val spark = found.getOrElse(GraftSession.create())
 
     def rep(table: String)(remap: (DataFrame, Int) => DataFrame): Unit = {
       val df = spark.read.parquet(s"$src/$table.parquet")

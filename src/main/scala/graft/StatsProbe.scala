@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Scratch measurement probe (dev tooling, not part of the driver
@@ -12,41 +11,30 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * Separates the two optimization regimes the bench mixes together:
   * driver-side constant (plan/codegen/job launch — dominates the ~0.7 s
   * sub-second tail at sf0.1) vs genuine executor compute (the heavy
-  * iterative/quadratic tier). SPARK_GRAFT_QUERIES selects queries;
-  * SPARK_GRAFT_CONF adds A/B session confs (PerfProbe convention).
+  * iterative/quadratic tier). SPARK_GRAFT_QUERIES selects queries
+  * (comma-separated, or ALL), SPARK_GRAFT_SF_DIR the fixture and
+  * SPARK_GRAFT_CPUS the width ([[GraftSession]]):
+  * {{{
+  * SPARK_GRAFT_QUERIES=g3_components,g5_kcore SPARK_GRAFT_SF_DIR=<sf-dir> \
+  *   sbt "runMain graft.StatsProbe"
+  * }}}
+  * A/B a conf with a `-D` JVM property on the forked run: SparkConf loads
+  * `spark.*` system properties, as build.sbt's `-Dspark.ui.enabled=false`
+  * does. [[GraftSession]]'s own confs take precedence over them.
+  * {{{
+  * sbt 'set javaOptions += "-Dspark.sql.autoBroadcastJoinThreshold=-1"' \
+  *   "runMain graft.StatsProbe"
+  * }}}
   */
 object StatsProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').map(_.trim)
-      .filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
-    val dumpStages = sys.env.get("SPARK_GRAFT_STAGES").contains("1")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
         stages.incrementAndGet()
-        if (dumpStages) {
-          val si = s.stageInfo
-          val m = si.taskMetrics
-          println(f"[stage] id=${si.stageId} tasks=${si.numTasks} " +
-            f"run=${m.executorRunTime / 1e3}%.2fs gc=${m.jvmGCTime / 1e3}%.2fs " +
-            f"cpu=${m.executorCpuTime / 1e9}%.2fs " +
-            f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e6}%.1fMB " +
-            f"sw=${m.shuffleWriteMetrics.bytesWritten / 1e6}%.1fMB " +
-            f"${si.name.takeWhile(_ != '\n').take(90)}")
-        }
-      }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         tasks.incrementAndGet()
         if (t.taskMetrics != null) taskMs.addAndGet(t.taskMetrics.executorRunTime)

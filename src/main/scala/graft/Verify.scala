@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r11: AQE re-plans cached-plan partitioning (see Bench.scala note)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // r11: byte-small compute-dense shuffles keep real parallelism
-      // (see Bench.scala note)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // Optional dev-loop filter (comma-separated names). The driver never
     // sets it, so the contract — dump EVERY query — is unchanged.
@@ -35,30 +20,33 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Scale referees for tools/scalecheck.py (wide gates only — the
     // driver reads oracle_sql.json exclusively): per query, a tractable
     // oracle reformulation plus an optional spark-side slice selector.
     val ref = SparkEntry.scaleOracleSql.map { case (k, v) =>
       val sparkSide = SparkEntry.scaleSparkSql.get(k)
-        .map(sql => s""""spark": ${q(sql)}""").getOrElse(""""spark": null""")
-      s"${q(k)}: {\"oracle\": ${q(v)}, $sparkSide}"
+        .map(sql => s""""spark": ${jsonString(sql)}""").getOrElse(""""spark": null""")
+      s"${jsonString(k)}: {\"oracle\": ${jsonString(v)}, $sparkSide}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/scale_referee.json"), ref)
     spark.stop()
   }
+
+  /** A JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in builder-authored SQL would otherwise
+    * make the driver's json.load fail and silently zero the round's
+    * correctness.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-only single-query verify dump (not part of the driver contract):
@@ -14,42 +13,31 @@ import java.nio.file.{Files, Paths}
   * types. The full-registry gate remains [[Verify]].
   */
 object VerifyOne {
+  import Verify.jsonString
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val lintAll = names.isEmpty
     val keep: String => Boolean =
       if (lintAll) _ => true else names.contains(_)
     val json = SparkEntry.oracleSql.view.filterKeys(keep)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (lintAll) {
       // Analyzed (not executed) schemas: name -> {col -> simpleString}.
       val schemas = SparkEntry.queries.toSeq.sortBy(_._1).map {
         case (name, fn) =>
           val fields = fn(spark, sfDir).schema.fields
-            .map(f => s"${q(f.name)}: ${q(f.dataType.simpleString)}")
+            .map(f =>
+              s"${jsonString(f.name)}: ${jsonString(f.dataType.simpleString)}")
             .mkString("{", ",", "}")
-          s"${q(name)}: $fields"
+          s"${jsonString(name)}: $fields"
       }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/spark_schema.json"), schemas)
     }

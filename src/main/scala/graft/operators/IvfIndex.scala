@@ -628,21 +628,6 @@ object IvfIndex {
         col("n_exact"), col("n_match"))
   }
 
-  /** Dev-only: the measured truncated-scan recall behind s13's boolean. */
-  private[graft] def truncProbeRecall(embeddings: DataFrame,
-      queryIds: Seq[Long], keepDims: Int, k: Int, shortlist: Int): Double = {
-    val row = truncatedDebug(embeddings, queryIds, keepDims, k, shortlist, 0.0).head()
-    row.getLong(4).toDouble / math.max(row.getLong(3), 1L)
-  }
-
-  /** Dev-only: the measured ADC recall behind [[pqContract]]'s boolean. */
-  private[graft] def pqProbeRecall(embeddings: DataFrame, queryIds: Seq[Long],
-      m: Int, kSub: Int, k: Int, shortlist: Int = 64): Double = {
-    val row = pqContractDebug(embeddings, queryIds, m, kSub, k,
-      shortlist = shortlist).head()
-    row.getLong(5).toDouble / math.max(row.getLong(4), 1L)
-  }
-
   /** Driver-side cosine for centroid ranking (k values, not data-sized). */
   private def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0

@@ -38,10 +38,8 @@ class PlanHygieneSpec extends SparkTestBase {
     GlobalWindows.whitelist
 
   /** §R10.12 alias-inlining gate — kernel list and matcher live in
-    * [[PlanKernels]], SHARED with the `graft.JoinCondAudit` dev probe so
-    * the two sweeps can never drift, and counting `kernel(` call sites
-    * at identifier boundaries so `minhash(` no longer matches inside
-    * `minhash_tokens(`.
+    * [[PlanKernels]], counting `kernel(` call sites at identifier
+    * boundaries so `minhash(` does not match inside `minhash_tokens(`.
     */
   private def repeatedKernelLines(plan: String): Seq[String] =
     PlanKernels.repeatedKernelLines(plan).map(_.take(220))

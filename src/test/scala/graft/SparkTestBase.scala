@@ -5,22 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for the whole suite (one JVM, one context). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      // the same extensions the production entry points install — every
-      // spec runs with the guard rules + SQL function surface live
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine's session at a fixed 4 cores, so test widths do not
+    * follow the box; only the warehouse dir is the suite's own.
+    */
+  lazy val spark: SparkSession = GraftSession.create(4, Map(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
