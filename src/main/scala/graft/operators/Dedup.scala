@@ -1111,50 +1111,16 @@ object Dedup {
     */
   private def editDistanceMatches(documents: DataFrame, k: Int,
       prefixLen: Int): DataFrame = {
-    require(k >= 1, s"editDistanceJoin: k=$k must be >= 1")
-    val nSeg = k + 2
-    require(prefixLen >= 2 * nSeg,
-      s"editDistanceJoin: prefixLen=$prefixLen too short for k=$k (needs ${2 * nSeg})")
-    val base = prefixLen / nSeg
-    val rem = prefixLen % nSeg
-    def segStart(i: Int): Int = i * base + math.min(i, rem) // 0-based
-    def segLen(i: Int): Int = segStart(i + 1) - segStart(i)
-    val combos = (0 until nSeg).combinations(2).map { c => (c(0), c(1)) }.toSeq
-    // |s₁| + |s₂−s₁| ≤ k: ops before segment i bound the first drift,
-    // ops between i and j the second, and the op sets are disjoint
-    val shiftPairs = for {
-      s1 <- -k to k; s2 <- -k to k
-      if math.abs(s1) + math.abs(s2 - s1) <= k
-    } yield (s1, s2)
-    val docs = documents
-      .filter(length(col("text")) >= prefixLen)
-      .select(col("doc_id"), substring(col("text"), 1, prefixLen).as("s"))
-    def pairKey(pi: Int, li: Int, pj: Int, lj: Int) = concat(
-      substring(col("s"), pi + 1, li), lit(""),
-      substring(col("s"), pj + 1, lj))
-    val idx = docs.select(col("doc_id"), col("s"),
-      explode(array(combos.map { case (i, j) =>
-        struct(lit(i).as("i"), lit(j).as("j"),
-          pairKey(segStart(i), segLen(i), segStart(j), segLen(j)).as("sub"))
-      }: _*)).as("g"))
-      .select(col("doc_id"), col("s"),
-        col("g.i").as("i"), col("g.j").as("j"), col("g.sub").as("sub"))
-    // one union branch per combo keeps each explode at ≤ 41 literal
-    // substring pairs — small enough for whole-stage codegen, and the
-    // per-doc array_distinct stays local (on self-similar text several
-    // shifts yield the same pair key; each duplicate would multiply the
-    // join's matched rows for no new pair)
-    val probes = combos.map { case (i, j) =>
-      val arms = shiftPairs.flatMap { case (s1, s2) =>
-        val pi = segStart(i) + s1; val pj = segStart(j) + s2
-        if (pi >= 0 && pi + segLen(i) <= prefixLen &&
-            pj >= 0 && pj + segLen(j) <= prefixLen)
-          Some(pairKey(pi, segLen(i), pj, segLen(j)))
-        else None
-      }
-      docs.select(col("doc_id"), col("s"), lit(i).as("i"), lit(j).as("j"),
-        explode(array_distinct(array(arms: _*))).as("sub"))
-    }.reduce(_ union _)
+    val docs = editDistancePrefixes(documents, prefixLen)
+    // One generator per side, one scan of the corpus each. Composed from
+    // builtins, the keys need one union branch per segment pair (15 at
+    // k = 4), each re-scanning the documents and exploding up to 41
+    // concat(substring, ...) arms, and that plan costs more to build and
+    // plan than to run: traced on the sf0.01 benchmark fixture (seed 12,
+    // local[2]), d20 took 0.62 s to build, 0.20 s to plan and 36 tasks
+    // that way, against 0.07 s, 0.04 s and 8 tasks with the generator.
+    def keys(probe: Boolean) = docs.select(col("doc_id"), col("s"),
+      graft.functions.PigeonholeKeys.pigeonholeKeys(col("s"), k, prefixLen, probe))
     // The pigeonhole guarantee is SYMMETRIC: an optimal ≤ k-edit
     // alignment touches ≤ k segments of EITHER side's segmentation, so
     // ≥ 2 of the INDEX side's segments always survive verbatim in the
@@ -1165,7 +1131,7 @@ object Dedup {
     // HALVES the matched-row stream — half the levenshtein kernels and
     // half the distinct's input. Strings ride both sides so the verify
     // needs no re-join (levenshtein is symmetric).
-    probes.as("a").join(idx.as("b"),
+    keys(probe = true).as("a").join(keys(probe = false).as("b"),
         col("a.i") === col("b.i") && col("a.j") === col("b.j") &&
           col("a.sub") === col("b.sub") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -1179,13 +1145,18 @@ object Dedup {
     */
   private[graft] def editDistancePrune(documents: DataFrame, k: Int,
       prefixLen: Int): (DataFrame, DataFrame) = {
-    val docs = documents
-      .filter(length(col("text")) >= prefixLen)
-      .select(col("doc_id"), substring(col("text"), 1, prefixLen).as("s"))
     val cand = editDistanceMatches(documents, k, prefixLen)
       .select("doc_a", "doc_b").distinct()
-    (docs, cand)
+    (editDistancePrefixes(documents, prefixLen), cand)
   }
+
+  /** (doc_id, s): the first `prefixLen` characters of every document that
+    * has at least that many — the only documents [[editDistanceJoin]] pairs.
+    */
+  private def editDistancePrefixes(documents: DataFrame, prefixLen: Int): DataFrame =
+    documents
+      .filter(length(col("text")) >= prefixLen)
+      .select(col("doc_id"), substring(col("text"), 1, prefixLen).as("s"))
 
   /** (doc_id, sig, chunk_id, chunk_val): the 64-bit SimHash split into
     * `numChunks` contiguous chunks with widths differing by at most 1.

@@ -250,11 +250,12 @@ private[graft] object RegistryDedup {
     // all tokens — the asymmetric complement of d18.
     "d19_containment" -> ((s, dir) =>
       Dedup.containmentJoin(Tables.documents(s, dir), 4, 5, materialize = true)),
-    // EXACT edit-distance join (PassJoin segment pigeonhole) at k=4 on
+    // EXACT edit-distance join (two-segment pigeonhole) at k=4 on
     // 32-char prefixes: character-SEQUENCE closeness — the typo/OCR
     // regime where one edit kills every shingle crossing it, invisible
     // to the token-set joins d18/d19. Candidates from one equi-join on
-    // (segment_index, substring); verification is codegen'd levenshtein.
+    // the (i, j, pair-key) triple that the PigeonholeKeys generator cuts
+    // on each side; verification is codegen'd levenshtein.
     "d20_edit_distance" -> ((s, dir) =>
       Dedup.editDistanceJoin(Tables.documents(s, dir), 4, 32)),
     // Crawl-overlap matrix: exact-duplicate pairs within and across

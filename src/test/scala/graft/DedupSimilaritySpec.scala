@@ -1028,15 +1028,9 @@ class DedupSimilaritySpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
   }
 
-  test("editDistanceJoin equals brute force on planted edits and the fixture") {
-    // Planted set exercises each edit kind within the 32-char prefix —
-    // substitution, deletion, insertion, a k-edit combination just at the
-    // bound, a (k+1)-edit pair just past it, and the token-set blind spot
-    // this operator exists for: doc 6 is doc 0 with one char flipped in
-    // every 8th position, whose shingle Jaccard is tiny but edit distance
-    // exactly 4. Shorter-than-prefix docs must be excluded, not crash.
+  private def editPlanted = {
     val base = "abcdefgh ijklmnop qrstuvwx yzabcd fill tail beyond prefix"
-    val planted = Seq(
+    Seq(
       (0L, base),
       (1L, "Xbcdefgh ijklmnop qrstuvwx yzabcd fill"), // 1 substitution
       (2L, "bcdefgh ijklmnop qrstuvwx yzabcde fill"), // 1 deletion (shifted)
@@ -1047,6 +1041,16 @@ class DedupSimilaritySpec extends SparkTestBase {
       (7L, "totally different text with nothing shared at all here ok"),
       (8L, "short doc") // < 32 chars: excluded by contract
     ).toDF("doc_id", "text")
+  }
+
+  test("editDistanceJoin equals brute force on planted edits and the fixture") {
+    // Planted set exercises each edit kind within the 32-char prefix —
+    // substitution, deletion, insertion, a k-edit combination just at the
+    // bound, a (k+1)-edit pair just past it, and the token-set blind spot
+    // this operator exists for: doc 6 is doc 0 with one char flipped in
+    // every 8th position, whose shingle Jaccard is tiny but edit distance
+    // exactly 4. Shorter-than-prefix docs must be excluded, not crash.
+    val planted = editPlanted
     val got = Dedup.editDistanceJoin(planted, 4, 32).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val want = bruteEditPairs(planted, 4, 32)
@@ -1079,6 +1083,105 @@ class DedupSimilaritySpec extends SparkTestBase {
     val cand = Dedup.editDistancePrune(fixture, 4, 32)._2.count()
     assert(cand * 10 < allPairs,
       s"pigeonhole stage generated $cand of $allPairs pairs — not pruning")
+  }
+
+  test("editDistanceJoin plan: one generator per side, no union, one levenshtein site") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Union}
+    val plan = Dedup.editDistanceJoin(editPlanted, 4, 32).queryExecution.optimizedPlan
+    val unions = plan.collect { case u: Union => u }
+    val generates = plan.collect { case g: Generate => g }
+    assert(unions.isEmpty, s"per-segment-pair union is back:\n$plan")
+    assert(generates.size == 2, s"expected 2 Generate nodes, found ${generates.size}:\n$plan")
+    val sites = plan.toString.linesIterator
+      .map(PlanKernels.callCount(_, "levenshtein")).sum
+    assert(sites == 1, s"expected 1 levenshtein call site, found $sites:\n$plan")
+  }
+
+  /** The pigeonhole keys of `text` in plain Scala over Unicode code
+    * points: (i, j, seg_i ⧺ U+0001 ⧺ seg_j), distinct within each (i, j).
+    */
+  private def referenceKeys(text: String, k: Int, prefixLen: Int,
+      probe: Boolean): Seq[(Int, Int, String)] = {
+    val cps = if (text == null) Array.empty[Int] else text.codePoints().toArray
+    if (cps.length < prefixLen) return Seq.empty
+    val nSeg = k + 2
+    val lens = Array.tabulate(nSeg)(i => prefixLen / nSeg + (if (i < prefixLen % nSeg) 1 else 0))
+    val starts = lens.scanLeft(0)(_ + _)
+    def cut(at: Int, len: Int) = new String(cps, at, len)
+    for {
+      i <- 0 until nSeg; j <- i + 1 until nSeg
+      key <- (for {
+        s1 <- -k to k; s2 <- -k to k
+        if (probe || (s1 == 0 && s2 == 0)) && math.abs(s1) + math.abs(s2 - s1) <= k
+        pi = starts(i) + s1; pj = starts(j) + s2
+        if pi >= 0 && pi + lens(i) <= prefixLen && pj >= 0 && pj + lens(j) <= prefixLen
+      } yield cut(pi, lens(i)) + "\u0001" + cut(pj, lens(j))).distinct
+    } yield (i, j, key)
+  }
+
+  private def kernelKeys(documents: org.apache.spark.sql.DataFrame, k: Int,
+      prefixLen: Int, probe: Boolean): Map[Long, Seq[(Int, Int, String)]] = {
+    import graft.functions.PigeonholeKeys.pigeonholeKeys
+    documents.select(col("doc_id"), pigeonholeKeys(col("text"), k, prefixLen, probe))
+      .collect().toSeq
+      .groupBy(_.getLong(0))
+      .map { case (id, rows) =>
+        id -> rows.map(r => (r.getInt(1), r.getInt(2), r.getString(3))).sorted }
+  }
+
+  test("PigeonholeKeys equals a code-point reference on planted edits and the fixture") {
+    for (documents <- Seq(editPlanted, Tables.documents(spark, sf001))) {
+      val texts = documents.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      for (k <- 1 to 4; probe <- Seq(true, false)) {
+        val got = kernelKeys(documents, k, 32, probe)
+        val want = texts.map { case (id, t) => id -> referenceKeys(t, k, 32, probe).sorted }
+          .filter(_._2.nonEmpty)
+        assert(got.keySet === want.keySet, s"k=$k probe=$probe: documents with keys differ")
+        for ((id, w) <- want)
+          assert(got(id) === w, s"k=$k probe=$probe doc $id: keys differ")
+      }
+    }
+  }
+
+  test("PigeonholeKeys cuts code points as Spark's substring does") {
+    import graft.functions.PigeonholeKeys
+    // a supplementary-plane emoji (two UTF-16 units, one code point) and
+    // a combining acute accent (its own code point) inside the prefix:
+    // a UTF-16 cut would shift every later segment by one
+    val text = "ab\uD83D\uDE00cde\u0301fghijklmnopqrstuvwxyz0123456789 tail"
+    val df = Seq((0L, text)).toDF("doc_id", "text")
+      .select(col("doc_id"), substring(col("text"), 1, 32).as("s"))
+    val (k, prefixLen) = (4, 32)
+    val arms = PigeonholeKeys.armsByPair(k, prefixLen, probe = true)
+    val lens = (0 to k + 1).map(i =>
+      PigeonholeKeys.segStart(k, prefixLen, i + 1) - PigeonholeKeys.segStart(k, prefixLen, i))
+    val row = df.select(arms.map { case ((i, j), cuts) =>
+      array_distinct(array(cuts.map { case (pi, pj) =>
+        concat(substring(col("s"), pi + 1, lens(i)), lit("\u0001"),
+          substring(col("s"), pj + 1, lens(j)))
+      }: _*)).as(s"p${i}_$j")
+    }: _*).head()
+    val want = arms.zipWithIndex.flatMap { case (((i, j), _), c) =>
+      row.getSeq[String](c).map(sub => (i, j, sub)) }.sorted
+    val got = kernelKeys(Seq((0L, text)).toDF("doc_id", "text"), k, prefixLen, probe = true)
+    assert(got(0L) === want)
+    assert(got(0L).exists(_._3.contains("\uD83D\uDE00")),
+      "the emoji must survive whole inside some key")
+  }
+
+  test("PigeonholeKeys: null and short text give no rows; the index gives C(k+2, 2)") {
+    import graft.functions.PigeonholeKeys.pigeonholeKeys
+    val odd = Seq((0L, null: String), (1L, "x" * 31), (2L, "")).toDF("doc_id", "text")
+    for (probe <- Seq(true, false))
+      assert(odd.select(pigeonholeKeys(col("text"), 4, 32, probe)).count() == 0)
+    val fixture = Tables.documents(spark, sf001).filter(length(col("text")) >= 32)
+    val n = fixture.count()
+    for (k <- 1 to 4) {
+      val perDoc = fixture.select(col("doc_id"), pigeonholeKeys(col("text"), k, 32, probe = false))
+        .groupBy("doc_id").count().collect().map(_.getLong(1))
+      assert(perDoc.length == n && perDoc.forall(_ == (k + 2) * (k + 1) / 2),
+        s"k=$k: index rows per document ${perDoc.distinct.mkString(",")}")
+    }
   }
 
   test("hammingPrerank: packed-word popcount equals planted sign flips") {
