@@ -12,7 +12,7 @@ object PlanKernels {
     "long_dot", "long_sqdist", "ann_plane_dots", "ann_cos_verify",
     "cosine_similarity", "dot_product", "levenshtein", "array_intersect",
     "array_union", "aggregate", "zip_with", "minhash", "minhash_tokens",
-    "simhash64", "repetition_counts")
+    "simhash64", "repetition_counts", "nearest_codewords")
 
   /** Call-sites of `kernel` in one plan line: occurrences of `kernel(`
     * whose preceding char is not an identifier char — so `minhash(`

@@ -5,7 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
+import graft.functions.{NearestCodewords, VectorFunctions}
 
 /** IVF (inverted-file) ANN index over an embedding column — the
   * k-means-quantizer scale path, complementing [[SimilarityIndex]]'s
@@ -82,13 +82,17 @@ object IvfIndex {
     * 2.6·10¹⁴ — int64-safe through sf 1), centroid updates use long sums
     * with TRUNCATING division (JVM `/` == DuckDB `//`), seeding is the
     * content-addressed md5 order (derivable in SQL, unlike xxhash64), and
-    * ties in the argmin break to the smallest centroid id via struct
-    * ordering. Empty clusters keep their previous centroid.
+    * ties in the argmin break to the smallest centroid id (the oracle's
+    * `ORDER BY dist, cid`). Empty clusters keep their previous centroid.
     *
-    * Scale shape per iteration: one scan with k codegen'd distance
-    * expressions against BROADCAST centroid literals (k·dim longs —
-    * kilobytes), then one mergeable [[graft.functions.CentroidAgg]]
-    * aggregate whose shuffle carries k×(dim+1) longs per map partition.
+    * Scale shape per iteration: one scan in which each row makes ONE
+    * [[graft.functions.NearestCodewords]] call (m = 1: the k centroids
+    * are the single subspace's codebook, fixed in the expression, so the
+    * plan stays the same size whatever k is), then one mergeable
+    * [[graft.functions.CentroidAgg]] aggregate whose shuffle carries
+    * k×(dim+1) longs per map partition. A vector with fewer than `dim`
+    * components, or a null one, goes to cluster 0 with a null distance;
+    * a longer one is scored on its first `dim` components.
     * The driver holds only the k×dim centroid table between iterations —
     * the same coarse-codebook footprint [[sampleCentroids]] already
     * collects. Returns per-cluster (n_vecs, inertia, centroid_sum) —
@@ -96,9 +100,8 @@ object IvfIndex {
     */
   def kmeansExact(embeddings: DataFrame, k: Int = 8,
       iterations: Int = 2): DataFrame = {
-    import org.apache.spark.sql.functions.{aggregate, array, array_min,
-      count => fcount, md5, struct, sum => fsum, transform, typedlit,
-      zip_with}
+    import org.apache.spark.sql.functions.{count => fcount, md5, sum => fsum,
+      transform}
     val e = embeddings.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"),
         transform(col("embedding"),
@@ -110,16 +113,12 @@ object IvfIndex {
       .collect().map(_.getSeq[Long](1).toArray)
     require(seeds.nonEmpty, "kmeansExact: no non-null vectors to seed from")
     val dim = seeds(0).length
-    def assign(cents: Array[Array[Long]]): DataFrame = {
-      val scored = cents.zipWithIndex.map { case (c, j) =>
-        struct(
-          VectorFunctions.longSqDist(col("qe"), typedlit(c.toSeq)).as("dist"),
-          lit(j).as("cid"))
-      }
-      e.withColumn("best", array_min(array(scored.toIndexedSeq: _*)))
+    def assign(cents: Array[Array[Long]]): DataFrame =
+      e.select(col("vec_id"), col("embedding"),
+          NearestCodewords.nearestCodewords(col("qe"), Array(cents), cents.length)
+            .as("best"))
         .select(col("vec_id"), col("embedding"),
-          col("best.cid").as("cid"), col("best.dist").as("dist"))
-    }
+          col("best.codes").getItem(0).as("cid"), col("best.dist").as("dist"))
     var centroids = seeds
     for (_ <- 1 to iterations) {
       val updated = assign(centroids)
@@ -180,13 +179,15 @@ object IvfIndex {
 
   /** Nearest-centroid assignment: argmax of cosine over the k broadcast
     * centroid literals via `array_max` on (sim, list_id) structs — struct
-    * ordering makes ties break to the larger id, deterministically.
+    * ordering makes ties break to the larger id, deterministically. Each
+    * centroid is a plain array literal (`lit` on the `Array[Float]`),
+    * typed from its JVM class rather than through Scala reflection.
     */
   def assignLists(embeddings: DataFrame,
       centroids: Array[Array[Float]]): DataFrame = {
     val scored = centroids.zipWithIndex.map { case (c, i) =>
       struct(
-        VectorFunctions.cosineSim(col("embedding"), typedlit(c.toSeq)).as("sim"),
+        VectorFunctions.cosineSim(col("embedding"), lit(c)).as("sim"),
         lit(i).as("list_id"))
     }
     embeddings.withColumn("list_id",
@@ -462,13 +463,20 @@ object IvfIndex {
     * Codebooks are the md5-seeded corpus draw ([[sampleCentroids]]'s
     * rationale: contract tests exercise the encode/ADC machinery, not
     * codeword quality; production would train each subspace with
-    * [[kmeansExact]] on a sample). Scale shape: codebooks are
-    * m × kSub × (dim/m) literals broadcast into one codegen'd projection —
-    * encoding is scan-bound, no shuffle; the ADC/exact legs join the
-    * corpus against |Q| broadcast query rows and take windowed top-k,
-    * exactly the s8 probe shape. Subvectors are projected ONCE before the
-    * per-codeword distance battery (the shingles3Tokens lesson: HOF
-    * arguments referenced k times re-evaluate k times).
+    * [[kmeansExact]] on a sample). Scale shape: the encode is one
+    * projection with ONE [[graft.functions.NearestCodewords]] call per
+    * row — codes, full and prefix errors and the reconstruction in one
+    * pass, the m × kSub codebook fixed in the expression — so encoding
+    * is scan-bound with no shuffle. Why a kernel: the composed
+    * `array_min(struct(long_sqdist(slice, codeword), code))` form puts
+    * m × (kSub + kPrefix) distance terms and m codeword maps into the
+    * plan; building, analysing and printing it made s12's operator
+    * build take 2.4 s at sf0.01, against 0.9 s with the kernel (traced,
+    * 4-core VM, 2 task slots). The exact and ADC rankings share one
+    * pass: the corpus joins the |Q| broadcast query rows once, both
+    * distances are projected, two `row_number` windows over `query_id`
+    * rank them, and one aggregate counts the exact top-`k` and its
+    * members inside the ADC top-`shortlist`.
     */
   def pqContract(embeddings: DataFrame, queryIds: Seq[Long], m: Int = 8,
       kSub: Int = 16, kPrefix: Int = 4, k: Int = 10,
@@ -478,6 +486,9 @@ object IvfIndex {
       shortlist, shortlistFor)
       .select("n_vectors", "err_monotone", "nonempty", "recall_ok")
 
+  /** [[pqContract]] plus its raw counts: `n_exact`, `n_match`, and the
+    * summed full (`ef`) and prefix (`ep`) quantization errors.
+    */
   private[graft] def pqContractDebug(embeddings: DataFrame, queryIds: Seq[Long],
       m: Int = 8, kSub: Int = 16, k: Int = 10, kPrefix: Int = 4,
       threshold: Double = 0.4, shortlist: Int = 64,
@@ -502,30 +513,13 @@ object IvfIndex {
     }.getOrElse(shortlist)
     require(seeds.length == kSub, s"pqContract: corpus smaller than $kSub")
     val dim = seeds(0).length
-    require(dim % m == 0, s"pqContract: dim $dim not divisible by m=$m")
+    require(m >= 1 && dim % m == 0, s"pqContract: dim $dim not divisible by m=$m")
     val d0 = dim / m
     // codebooks(mi)(j) = j-th codeword of subspace mi
     val codebooks = Array.tabulate(m, kSub)((mi, j) =>
       seeds(j).slice(mi * d0, (mi + 1) * d0))
-    val sub = eq.select(col("vec_id") +: col("qe") +:
-      (0 until m).map(mi => slice(col("qe"), mi * d0 + 1, d0).as(s"s$mi")): _*)
-    def best(mi: Int, kk: Int) = array_min(array((0 until kk).map { j =>
-      struct(
-        VectorFunctions.longSqDist(col(s"s$mi"), typedlit(codebooks(mi)(j).toSeq))
-          .as("dist"),
-        lit(j).as("code"))
-    }: _*))
-    val enc = sub.select(col("vec_id") +: col("qe") +:
-      ((0 until m).map(mi => best(mi, kSub).as(s"b$mi")) ++
-        (0 until m).map(mi => best(mi, kPrefix).as(s"p$mi"))): _*)
-    def codeMap(mi: Int) = map((0 until kSub).flatMap(j =>
-      Seq(lit(j), typedlit(codebooks(mi)(j).toSeq))): _*)
-    val recon = concat((0 until m).map(mi =>
-      element_at(codeMap(mi), col(s"b$mi.code"))): _*)
-    val withErr = enc.select(col("vec_id"), col("qe"),
-      (0 until m).map(mi => col(s"b$mi.dist")).reduce(_ + _).as("err_full"),
-      (0 until m).map(mi => col(s"p$mi.dist")).reduce(_ + _).as("err_prefix"),
-      recon.as("recon")).localCheckpoint(true) // feeds err agg + ADC leg
+    val withErr = pqEncode(eq, codebooks, kPrefix)
+      .localCheckpoint(true) // feeds err agg + the ranking pass
     val qRows = eq.filter(col("vec_id").isin(queryIds: _*))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
     val queries = {
@@ -534,29 +528,36 @@ object IvfIndex {
       qRows.toSeq.toDF("query_id", "q_micro")
     }
     def l2(v: Column) = VectorFunctions.longSqDist(v, col("q_micro"))
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))
-    def topK(base: DataFrame, v: Column, kk: Int) = base
+    val w = Window.partitionBy("query_id")
+    val counts = withErr
       .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), l2(v).as("d"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kk)
-      .select("query_id", "vec_id")
-    val exact = topK(eq, col("qe"), k)
-    val adc = topK(withErr.select("vec_id", "recon"), col("recon"), shortlistN)
-    val nMatch = exact.join(adc, Seq("query_id", "vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_match")).withColumn("j", lit(1))
-    val nExact = exact.agg(count(lit(1)).as("n_exact")).withColumn("j", lit(1))
+      .select(col("query_id"), col("vec_id"), l2(col("qe")).as("de"),
+        l2(col("pq.recon")).as("da"))
+      .withColumn("re", row_number().over(w.orderBy(col("de"), col("vec_id"))))
+      .withColumn("ra", row_number().over(w.orderBy(col("da"), col("vec_id"))))
+      .agg(count(when(col("re") <= k, true)).as("n_exact"),
+        count(when(col("re") <= k && col("ra") <= shortlistN, true)).as("n_match"))
+      .withColumn("j", lit(1))
     val errs = withErr
-      .agg(count(lit(1)).as("n_vectors"), sum("err_full").as("ef"),
-        sum("err_prefix").as("ep")).withColumn("j", lit(1))
-    errs.join(broadcast(nExact), "j").join(broadcast(nMatch), "j")
+      .agg(count(lit(1)).as("n_vectors"), sum(col("pq.dist")).as("ef"),
+        sum(col("pq.prefix_dist")).as("ep")).withColumn("j", lit(1))
+    errs.join(broadcast(counts), "j")
       .select(col("n_vectors"),
         (col("ef") <= col("ep")).as("err_monotone"),
         (col("n_exact") >= queryIds.size).as("nonempty"),
         (col("n_match").cast("double") >= lit(threshold) * col("n_exact"))
           .as("recall_ok"),
-        col("n_exact"), col("n_match"))
+        col("n_exact"), col("n_match"), col("ef"), col("ep"))
   }
+
+  /** PQ encode of micro-unit vectors `(vec_id, qe)`: one kernel call a row
+    * yields `pq = (codes, dist, prefix_dist, recon)` against `codebooks`
+    * (see [[graft.functions.NearestCodewords]]).
+    */
+  private[graft] def pqEncode(eq: DataFrame, codebooks: Array[Array[Array[Long]]],
+      prefix: Int): DataFrame =
+    eq.select(col("vec_id"), col("qe"),
+      NearestCodewords.nearestCodewords(col("qe"), codebooks, prefix).as("pq"))
 
   /** TRUNCATED-DIMENSION retrieval contract (s13): candidate scan over
     * only the first `keepDims` vector components, exact rerank of the
