@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.SimHash64.simhash64
+import ContractOps.{diffCounts, oneRow, rowCount}
 
 /** Deduplication family for the training-data pipeline tier: exact,
   * MinHash+LSH near-dup, SimHash near-dup, n-gram Jaccard.
@@ -382,16 +383,9 @@ object Dedup {
     val batch = documents.filter(TextOps.hexNibble("doc_id") === 7)
     val merged = mergeCorpusSignatures(
       corpusSignatures(corpus, numHashes), corpusSignatures(batch, numHashes))
-      .localCheckpoint(true) // feeds both exceptAll directions
-    val full = corpusSignatures(documents, numHashes).localCheckpoint(true)
-    def agg1(df: DataFrame, out: String): DataFrame =
-      df.agg(count(lit(1)).as(out)).withColumn("k", lit(1))
-    Seq(
-      agg1(batch, "n_batch"), // an empty batch passes vacuously
-      agg1(corpus, "n_corpus"),
-      agg1(merged.exceptAll(full), "extra"),
-      agg1(full.exceptAll(merged), "missing"))
-      .reduce((a, b) => a.join(broadcast(b), "k"))
+    oneRow(rowCount(batch, "n_batch"), // an empty batch passes vacuously
+        rowCount(corpus, "n_corpus"),
+        diffCounts(merged, corpusSignatures(documents, numHashes), "extra", "missing"))
       .select(
         (col("n_batch") > 0 && col("n_corpus") > 0).as("split_nonempty"),
         (col("extra") === 0 && col("missing") === 0).as("merge_equal"))
@@ -458,12 +452,9 @@ object Dedup {
       .filter(bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= maxHamming)
       .select("doc_a", "doc_b")
     val banded = simhashPairs(sampled, maxHamming).select("doc_a", "doc_b")
-    val nBrute = brute.agg(count(lit(1)).as("n_brute")).withColumn("k", lit(1))
-    val missed = brute.join(banded, Seq("doc_a", "doc_b"), "left_anti")
-      .agg(count(lit(1)).as("n_missed")).withColumn("k", lit(1))
-    val spurious = banded.join(brute, Seq("doc_a", "doc_b"), "left_anti")
-      .agg(count(lit(1)).as("n_spurious")).withColumn("k", lit(1))
-    nBrute.join(broadcast(missed), "k").join(broadcast(spurious), "k")
+    oneRow(rowCount(brute, "n_brute"),
+        rowCount(brute.join(banded, Seq("doc_a", "doc_b"), "left_anti"), "n_missed"),
+        rowCount(banded.join(brute, Seq("doc_a", "doc_b"), "left_anti"), "n_spurious"))
       .select(
         (col("n_brute") > 0).as("nonempty"), // guards a vacuous pass
         (col("n_missed") === 0).as("complete"),

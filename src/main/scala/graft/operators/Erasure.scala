@@ -102,7 +102,7 @@ object Erasure {
     val erasedDocs = Quality.eraseKeys(documents, "doc_id", deleteDocs)
     val erasedVecs = Quality.eraseKeys(embeddings, "vec_id", deleteVecs)
 
-    // each artifact below feeds BOTH diff directions plus a cleanliness
+    // each artifact below feeds its diff plus a count or cleanliness
     // probe — materialize once (the nearDupPairs materializeCandidates
     // rationale; a contract query is a batch job, not a plan-inspection
     // surface). The six artifact builds are INDEPENDENT DAGs, so their
@@ -126,12 +126,6 @@ object Erasure {
     // fixed quantizer, so centroid quality is irrelevant — use the
     // scan-bound deterministic sampler, not iterative k-means training
     val centroids = IvfIndex.sampleCentroids(embeddings, ivfK)
-    // null embeddings carry no direction to index — same rule as
-    // IvfIndex.writeQuantizedIndex's storage layout
-    def quantLists(e: DataFrame): DataFrame =
-      Similarity.withQuantization(
-        IvfIndex.assignLists(e.filter(col("embedding").isNotNull), centroids))
-        .select("vec_id", "qmin", "qrange", "codes", "list_id")
 
     val Seq(bandsRepaired, bandsRebuilt, sigsRepaired, sigsRebuilt,
         ivfRepaired, ivfRebuilt) = mats(Seq(
@@ -145,55 +139,26 @@ object Erasure {
       Dedup.corpusSignatures(erasedDocs, numHashes),
       // IVF quantized lists: entry removal vs re-assign/re-quantize of
       // the erased set under the SAME centroids (derived once, shared)
-      repairIvfLists(quantLists(embeddings), deleteVecs),
-      quantLists(erasedVecs)))
+      repairIvfLists(IvfIndex.quantizedLists(embeddings, centroids), deleteVecs),
+      IvfIndex.quantizedLists(erasedVecs, centroids)))
 
-    // multiset equality per artifact: the signed-count diff is empty in
-    // both directions (catches lost rows AND phantom survivors, incl.
-    // duplicates). r11 optimization round: both exceptAll directions are
-    // FUSED into one pass — union the two sides with +1/−1 weights,
-    // groupBy every column (null-safe by construction: grouping treats
-    // NULL as a value, exactly like exceptAll's row equality), then fold
-    // the positive and negative remainders separately.
-    // |repaired ∖ rebuilt| = Σ max(diff, 0) and |rebuilt ∖ repaired| =
-    // Σ max(−diff, 0) — identical numbers to the two exceptAll counts,
-    // for ONE (|A|+|B|) shuffle instead of two.
-    def agg1(df: DataFrame, out: String): DataFrame =
-      df.agg(count(lit(1)).as(out)).withColumn("k", lit(1))
-    // r12 same-session A/B settled the r11 question (driver saw e8b
-    // 0.69×): this fused form measured FASTER than the two-exceptAll
-    // form on identical inputs — warm 5.26 s vs 5.45 s, exec 1.23 vs
-    // 1.79 s, task time 41 vs 51 s, jobs 57 vs 66 (StatsProbe, sf0.1,
-    // bench confs). The r11 regression reading was cross-session box
-    // noise; the fusion stays.
-    def diffCounts(a: DataFrame, b: DataFrame,
-        extraName: String, missingName: String): DataFrame = {
-      val cols = a.columns.toSeq
-      val signed = a.withColumn("_d", lit(1L))
-        .unionByName(b.withColumn("_d", lit(-1L)))
-      signed.groupBy(cols.map(col): _*).agg(sum(col("_d")).as("diff"))
-        .agg(
-          coalesce(sum(when(col("diff") > 0, col("diff"))), lit(0L))
-            .as(extraName),
-          coalesce(sum(when(col("diff") < 0, -col("diff"))), lit(0L))
-            .as(missingName))
-        .withColumn("k", lit(1))
-    }
-    val parts = Seq(
+    // multiset equality per artifact: the diff is empty in both directions
+    // (catches lost rows AND phantom survivors, incl. duplicates)
+    import ContractOps.{diffCounts, oneRow, rowCount}
+    oneRow(
       // an empty delete list would pass every equality vacuously — the
       // contract must witness that something was actually erased
-      agg1(deleteDocs, "n_del_docs"),
-      agg1(deleteVecs, "n_del_vecs"),
-      agg1(bandsRebuilt, "n_bands"),
+      rowCount(deleteDocs, "n_del_docs"),
+      rowCount(deleteVecs, "n_del_vecs"),
+      rowCount(bandsRebuilt, "n_bands"),
       diffCounts(bandsRepaired, bandsRebuilt, "bands_extra", "bands_missing"),
-      agg1(bandsRepaired.join(broadcast(deleteDocs), Seq("doc_id"),
+      rowCount(bandsRepaired.join(broadcast(deleteDocs), Seq("doc_id"),
         "left_semi"), "bands_erased"),
       diffCounts(sigsRepaired, sigsRebuilt, "sigs_extra", "sigs_missing"),
-      agg1(ivfRebuilt, "n_ivf"),
+      rowCount(ivfRebuilt, "n_ivf"),
       diffCounts(ivfRepaired, ivfRebuilt, "ivf_extra", "ivf_missing"),
-      agg1(ivfRepaired.join(broadcast(deleteVecs), Seq("vec_id"),
+      rowCount(ivfRepaired.join(broadcast(deleteVecs), Seq("vec_id"),
         "left_semi"), "ivf_erased"))
-    parts.reduce((a, b) => a.join(broadcast(b), "k"))
       .select(
         (col("n_del_docs") > 0 && col("n_del_vecs") > 0)
           .as("erasure_nonempty"), // guards a vacuous pass

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NearestCodewords, VectorFunctions}
+import ContractOps.{diffCounts, oneRow, recallCounts, rowCount}
 
 /** IVF (inverted-file) ANN index over an embedding column — the
   * k-means-quantizer scale path, complementing [[SimilarityIndex]]'s
@@ -100,12 +101,9 @@ object IvfIndex {
     */
   def kmeansExact(embeddings: DataFrame, k: Int = 8,
       iterations: Int = 2): DataFrame = {
-    import org.apache.spark.sql.functions.{count => fcount, md5, sum => fsum,
-      transform}
     val e = embeddings.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * lit(1e6)).cast("long")).as("qe"))
+        micro(col("embedding")).as("qe"))
     val seeds = e
       .select(col("vec_id"), col("qe"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
@@ -139,7 +137,7 @@ object IvfIndex {
         Seq(lit(j), lit(c.sum)) }.toIndexedSeq: _*)
     assign(centroids)
       .groupBy("cid")
-      .agg(fcount(lit(1)).as("n_vecs"), fsum(col("dist")).as("inertia"))
+      .agg(count(lit(1)).as("n_vecs"), sum(col("dist")).as("inertia"))
       .select(col("cid").as("cluster_id"), col("n_vecs"), col("inertia"),
         org.apache.spark.sql.functions.element_at(sumMap, col("cid"))
           .as("centroid_sum"))
@@ -273,7 +271,7 @@ object IvfIndex {
       queryVec: Array[Float], centroids: Array[Array[Float]], k: Int,
       nprobe: Int = 2): DataFrame = {
     val probes = rankProbes(queryVec, centroids, nprobe)
-    val qMicro = queryVec.map(v => math.floor(v.toDouble * 1e6).toLong)
+    val qMicro = microOf(queryVec)
     val qLit = array(qMicro.map(lit).toIndexedSeq: _*)
     // the query self-dot is a constant: computed ONCE on the driver, not
     // as an interpreted lambda chain per scanned row
@@ -282,9 +280,6 @@ object IvfIndex {
     // score 0/0 = NaN, and NaN sorts ABOVE every real double under desc —
     // the same trap the nr > 0 filter guards on the stored side
     require(nq > 0, "queryQuantizedIndex: query vector has zero norm")
-    val recon = transform(col("codes"), c =>
-      col("qmin") + floor(((c.cast("long") + 128L) * col("qrange")).cast("double") / 255)
-        .cast("long"))
     val dot = VectorFunctions.longDot(col("r"), qLit)
     val nr = VectorFunctions.longDot(col("r"), col("r"))
     spark.read.parquet(path)
@@ -315,10 +310,17 @@ object IvfIndex {
     */
   def appendQuantized(lists: DataFrame, incoming: DataFrame,
       centroids: Array[Array[Float]]): DataFrame =
-    lists.unionByName(
-      Similarity.withQuantization(
-        assignLists(incoming.filter(col("embedding").isNotNull), centroids))
-        .select("vec_id", "qmin", "qrange", "codes", "list_id"))
+    lists.unionByName(quantizedLists(incoming, centroids))
+
+  /** The quantized inverted-list rows `(vec_id, qmin, qrange, codes,
+    * list_id)` of `embeddings` under fixed `centroids`; null embeddings
+    * carry no direction to index and are dropped.
+    */
+  def quantizedLists(embeddings: DataFrame,
+      centroids: Array[Array[Float]]): DataFrame =
+    Similarity.withQuantization(
+      assignLists(embeddings.filter(col("embedding").isNotNull), centroids))
+      .select("vec_id", "qmin", "qrange", "codes", "list_id")
 
   /** Driver-witnessed maintenance contract (s9, the d5b/e8b pattern):
     * content-addressed corpus/batch split, then the incrementally
@@ -333,21 +335,10 @@ object IvfIndex {
     // centroids from the CORPUS only: the batch arrives after training,
     // which is exactly the frozen-quantizer serving situation
     val centroids = sampleCentroids(corpus, ivfK)
-    def quantLists(e: DataFrame): DataFrame =
-      Similarity.withQuantization(
-        assignLists(e.filter(col("embedding").isNotNull), centroids))
-        .select("vec_id", "qmin", "qrange", "codes", "list_id")
-    val appended = appendQuantized(quantLists(corpus), batch, centroids)
-      .localCheckpoint(true) // feeds both exceptAll directions
-    val rebuilt = quantLists(embeddings).localCheckpoint(true)
-    def agg1(df: DataFrame, out: String): DataFrame =
-      df.agg(count(lit(1)).as(out)).withColumn("k", lit(1))
-    Seq(
-      agg1(batch, "n_batch"), // an empty batch passes vacuously
-      agg1(corpus, "n_corpus"),
-      agg1(appended.exceptAll(rebuilt), "extra"),
-      agg1(rebuilt.exceptAll(appended), "missing"))
-      .reduce((a, b) => a.join(broadcast(b), "k"))
+    val appended = appendQuantized(quantizedLists(corpus, centroids), batch, centroids)
+    oneRow(rowCount(batch, "n_batch"), // an empty batch passes vacuously
+        rowCount(corpus, "n_corpus"),
+        diffCounts(appended, quantizedLists(embeddings, centroids), "extra", "missing"))
       .select(
         (col("n_batch") > 0 && col("n_corpus") > 0).as("split_nonempty"),
         (col("extra") === 0 && col("missing") === 0).as("append_equal"))
@@ -369,68 +360,64 @@ object IvfIndex {
     * Measured on the fixtures: 0.67-0.72 at sf0.001/0.01/0.1 with the
     * default nprobe=4 of ivfK=8 over [[sampleCentroids]] — the 0.55
     * threshold leaves ≥ 12 points of margin.
-    * Scale shape: queries broadcast; the corpus is scanned once for the
-    * exact side and once (probed lists only) for the ANN side; both
-    * rankings are WindowGroupLimit top-k heaps.
+    * Scale shape: queries broadcast; the corpus is read once (assigned,
+    * quantized, reconstructed per row) and joined with the |Q| query rows;
+    * each pair carries the exact cosine and, in a probed list, the ADC
+    * score; [[ContractOps.recallCounts]] sorts all |Q|×n pairs (the trade
+    * against two top-k heaps is measured there).
     */
   def annRecallContract(embeddings: DataFrame, queryIds: Seq[Long],
       k: Int = 10, ivfK: Int = 8, nprobe: Int = 4,
-      threshold: Double = 0.55): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val clean = embeddings.filter(col("embedding").isNotNull)
-    val centroids = sampleCentroids(clean, ivfK)
-    val lists = Similarity.withQuantization(assignLists(clean, centroids))
-      .select("vec_id", "qmin", "qrange", "codes", "list_id")
-      .localCheckpoint(true) // feeds |Q| probe joins below
-    // probe selection is driver-side BY DESIGN (same as queryQuantizedIndex:
-    // ivfK centroid cosines per query, never data-sized); ship one
-    // (query_id, probed list, micro query vector, query self-dot) row per
-    // probe and broadcast it into the list scan
-    val qRows = clean.filter(col("vec_id").isin(queryIds: _*))
-      .select("vec_id", "embedding").collect()
-    val probeRows = qRows.flatMap { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Float](1).toArray
-      val qMicro = qv.map(v => math.floor(v.toDouble * 1e6).toLong)
-      val nq = qMicro.map(x => x * x).sum
-      if (nq == 0L) Seq.empty // zero-norm query: no cosine direction
-      else rankProbes(qv, centroids, nprobe)
-        .map(listId => (qid, listId, qMicro.toSeq, nq))
-    }.toSeq
-    val probes = probeRows.toDF("query_id", "list_id", "q_micro", "nq")
-    val recon = transform(col("codes"), c =>
-      col("qmin") + floor(((c.cast("long") + 128L) * col("qrange")).cast("double") / 255)
-        .cast("long"))
-    val dot = VectorFunctions.longDot(col("r"), col("q_micro"))
-    val nr = VectorFunctions.longDot(col("r"), col("r"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("vec_id"))
-    val annTopK = lists.join(broadcast(probes), Seq("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("nq"), col("q_micro"),
-        recon.as("r"))
-      .select(col("query_id"), col("vec_id"), col("nq"),
-        dot.as("dot"), nr.as("nr"))
-      .filter(col("nr") > 0) // zero recon has no direction (NaN-sorts-first)
-      .select(col("query_id"), col("vec_id"),
-        (col("dot").cast("double") /
-          (sqrt(col("nr").cast("double")) * sqrt(col("nq").cast("double"))))
-          .as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id")
-    val exact = Similarity.knnJoin(clean, queryIds, k)
-      .select("query_id", "vec_id")
-    val matched = exact.join(annTopK, Seq("query_id", "vec_id"), "left_semi")
-    val nExact = exact.agg(count(lit(1)).as("n_exact")).withColumn("j", lit(1))
-    val nMatch = matched.agg(count(lit(1)).as("n_match")).withColumn("j", lit(1))
-    nExact.join(broadcast(nMatch), "j")
+      threshold: Double = 0.55): DataFrame =
+    annRecallDebug(embeddings, queryIds, k, ivfK, nprobe, threshold)
+      .select("nonempty", "recall_ok")
+
+  /** [[annRecallContract]] plus its raw counts `n_exact` and `n_match`. */
+  private[graft] def annRecallDebug(embeddings: DataFrame, queryIds: Seq[Long],
+      k: Int, ivfK: Int, nprobe: Int, threshold: Double): DataFrame =
+    recallCounts(annRecallScored(embeddings, queryIds, ivfK, nprobe), k, k)
       .select(
         (col("n_exact") >= queryIds.size).as("nonempty"), // guards vacuity
         (col("n_match").cast("double") >= lit(threshold) * col("n_exact"))
-          .as("recall_ok"))
+          .as("recall_ok"),
+        col("n_exact"), col("n_match"))
+
+  /** s8's scored `(query_id, vec_id, exact, approx)` pairs (self
+    * excluded): `exact` is the negated `round(cosine, 6)` knnJoin ranks,
+    * null where it is NaN (a zero norm); `approx` the negated ADC score,
+    * null unless the list is probed for the query and `nr > 0`.
+    */
+  private[graft] def annRecallScored(embeddings: DataFrame, queryIds: Seq[Long],
+      ivfK: Int, nprobe: Int): DataFrame = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    val clean = embeddings.filter(col("embedding").isNotNull)
+    val centroids = sampleCentroids(clean, ivfK)
+    // probe selection is driver-side BY DESIGN (same as queryQuantizedIndex:
+    // ivfK centroid cosines per query, never data-sized); ship one
+    // (query_id, float query, micro query vector, query self-dot, probed
+    // lists) row per query and broadcast it into the corpus scan
+    val queries = clean.filter(col("vec_id").isin(queryIds: _*))
+      .select("vec_id", "embedding").collect().toSeq.map { r =>
+        val qv = r.getSeq[Float](1).toArray
+        val qMicro = microOf(qv)
+        val nq = qMicro.map(x => x * x).sum
+        // zero-norm query: no cosine direction, so no list is probed
+        val probes = if (nq == 0L) Seq.empty[Int] else rankProbes(qv, centroids, nprobe)
+        (r.getLong(0), qv.toSeq, qMicro.toSeq, nq, probes)
+      }.toDF("query_id", "q_emb", "q_micro", "nq", "probes")
+    val cos = round(VectorFunctions.cosineSim(col("embedding"), col("q_emb")), 6)
+    val adc = VectorFunctions.longDot(col("r"), col("q_micro")).cast("double") /
+      (sqrt(col("nr").cast("double")) * sqrt(col("nq").cast("double")))
+    Similarity.withQuantization(assignLists(clean, centroids))
+      .select(col("vec_id"), col("embedding"), col("list_id"), recon.as("r"))
+      .withColumn("nr", VectorFunctions.longDot(col("r"), col("r")))
+      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        nanvl(-cos, lit(null).cast("double")).as("exact"),
+        // a zero recon has no direction (NaN-sorts-first)
+        when(array_contains(col("probes"), col("list_id")) && col("nr") > 0, -adc)
+          .as("approx"))
   }
 
   /** PRODUCT QUANTIZATION contract (s12): split the `dim`-dimensional
@@ -474,15 +461,14 @@ object IvfIndex {
     * build take 2.4 s at sf0.01, against 0.9 s with the kernel (traced,
     * 4-core VM, 2 task slots). The exact and ADC rankings share one
     * pass: the corpus joins the |Q| broadcast query rows once, both
-    * distances are projected, two `row_number` windows over `query_id`
-    * rank them, and one aggregate counts the exact top-`k` and its
-    * members inside the ADC top-`shortlist`.
+    * distances are projected, and [[ContractOps.recallCounts]] counts the
+    * exact top-`k` and its members inside the ADC top-`shortlist`.
     */
   def pqContract(embeddings: DataFrame, queryIds: Seq[Long], m: Int = 8,
       kSub: Int = 16, kPrefix: Int = 4, k: Int = 10,
       threshold: Double = 0.4, shortlist: Int = 64,
       shortlistFor: Option[Long => Int] = None): DataFrame =
-    pqContractDebug(embeddings, queryIds, m, kSub, k, kPrefix, threshold,
+    pqContractDebug(embeddings, queryIds, m, kSub, kPrefix, k, threshold,
       shortlist, shortlistFor)
       .select("n_vectors", "err_monotone", "nonempty", "recall_ok")
 
@@ -490,14 +476,11 @@ object IvfIndex {
     * summed full (`ef`) and prefix (`ep`) quantization errors.
     */
   private[graft] def pqContractDebug(embeddings: DataFrame, queryIds: Seq[Long],
-      m: Int = 8, kSub: Int = 16, k: Int = 10, kPrefix: Int = 4,
+      m: Int = 8, kSub: Int = 16, kPrefix: Int = 4, k: Int = 10,
       threshold: Double = 0.4, shortlist: Int = 64,
       shortlistFor: Option[Long => Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val clean = embeddings.filter(col("embedding").isNotNull)
-    val eq = clean.select(col("vec_id"),
-      transform(col("embedding"),
-        x => floor(x.cast("double") * lit(1e6)).cast("long")).as("qe"))
+    val eq = clean.select(col("vec_id"), micro(col("embedding")).as("qe"))
     // corpus-proportional shortlist sizing rides the seeds job via
     // observe() (r12): every row flows through the metrics node below
     // the TakeOrdered, so the caller's separate count() scan is gone
@@ -506,11 +489,8 @@ object IvfIndex {
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(kSub)
       .collect().map(_.getSeq[Long](1).toArray)
-    val shortlistN = shortlistFor.map { f =>
-      // count() fallback where observe metrics don't arrive (see
-      // GraftShims.observedMetric)
-      f(org.apache.spark.sql.GraftShims.observedCount(eq, nObs))
-    }.getOrElse(shortlist)
+    val shortlistN = shortlistFor.fold(shortlist)(f =>
+      f(org.apache.spark.sql.GraftShims.observedCount(eq, nObs)))
     require(seeds.length == kSub, s"pqContract: corpus smaller than $kSub")
     val dim = seeds(0).length
     require(m >= 1 && dim % m == 0, s"pqContract: dim $dim not divisible by m=$m")
@@ -522,26 +502,17 @@ object IvfIndex {
       .localCheckpoint(true) // feeds err agg + the ranking pass
     val qRows = eq.filter(col("vec_id").isin(queryIds: _*))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
-    val queries = {
-      val spark = embeddings.sparkSession
-      import spark.implicits._
-      qRows.toSeq.toDF("query_id", "q_micro")
-    }
+    val queries = embeddings.sparkSession.createDataFrame(qRows.toSeq)
+      .toDF("query_id", "q_micro")
     def l2(v: Column) = VectorFunctions.longSqDist(v, col("q_micro"))
-    val w = Window.partitionBy("query_id")
-    val counts = withErr
+    val scored = withErr
       .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), l2(col("qe")).as("de"),
-        l2(col("pq.recon")).as("da"))
-      .withColumn("re", row_number().over(w.orderBy(col("de"), col("vec_id"))))
-      .withColumn("ra", row_number().over(w.orderBy(col("da"), col("vec_id"))))
-      .agg(count(when(col("re") <= k, true)).as("n_exact"),
-        count(when(col("re") <= k && col("ra") <= shortlistN, true)).as("n_match"))
-      .withColumn("j", lit(1))
+      .select(col("query_id"), col("vec_id"), l2(col("qe")).as("exact"),
+        l2(col("pq.recon")).as("approx"))
     val errs = withErr
       .agg(count(lit(1)).as("n_vectors"), sum(col("pq.dist")).as("ef"),
-        sum(col("pq.prefix_dist")).as("ep")).withColumn("j", lit(1))
-    errs.join(broadcast(counts), "j")
+        sum(col("pq.prefix_dist")).as("ep"))
+    oneRow(errs, recallCounts(scored, k, shortlistN))
       .select(col("n_vectors"),
         (col("ef") <= col("ep")).as("err_monotone"),
         (col("n_exact") >= queryIds.size).as("nonempty"),
@@ -572,6 +543,9 @@ object IvfIndex {
     * recall approaches 1; the fixture's random vectors spread signal
     * uniformly — recall ≈ the information fraction kept — so the
     * registered keepDims/shortlist are chosen to pass on the worst case.)
+    * Scale shape: queries broadcast; the corpus joins the |Q| query rows
+    * once, each pair carries the full and the truncated distance, and
+    * [[ContractOps.recallCounts]] sorts all |Q|×n pairs.
     */
   def truncatedRecallContract(embeddings: DataFrame, queryIds: Seq[Long],
       keepDims: Int = 32, k: Int = 10, shortlist: Int = 100,
@@ -584,11 +558,8 @@ object IvfIndex {
   private[graft] def truncatedDebug(embeddings: DataFrame, queryIds: Seq[Long],
       keepDims: Int, k: Int, shortlist: Int, threshold: Double,
       shortlistFor: Option[Long => Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val eq = embeddings.filter(col("embedding").isNotNull)
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * lit(1e6)).cast("long")).as("qe"))
+      .select(col("vec_id"), micro(col("embedding")).as("qe"))
       .withColumn("tq", slice(col("qe"), 1, keepDims))
     // shortlist sizing rides the query-row collect via observe() (r12):
     // the metrics node sits BELOW the isin filter, so it counts every
@@ -597,37 +568,35 @@ object IvfIndex {
     val qRows = eqCounted
       .filter(col("vec_id").isin(queryIds: _*))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
-    val shortlistN = shortlistFor.map { f =>
-      // count() fallback where observe metrics don't arrive (see
-      // GraftShims.observedMetric)
-      f(org.apache.spark.sql.GraftShims.observedCount(eq, nObs))
-    }.getOrElse(shortlist)
-    val queries = {
-      val spark = embeddings.sparkSession
-      import spark.implicits._
-      qRows.toSeq.toDF("query_id", "q_full", "q_trunc")
-    }
-    def l2(v: Column, q: Column) = VectorFunctions.longSqDist(v, q)
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))
-    def topK(v: Column, q: Column, kk: Int) = eq
+    val shortlistN = shortlistFor.fold(shortlist)(f =>
+      f(org.apache.spark.sql.GraftShims.observedCount(eq, nObs)))
+    val queries = embeddings.sparkSession.createDataFrame(qRows.toSeq)
+      .toDF("query_id", "q_full", "q_trunc")
+    val scored = eq
       .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), l2(v, q).as("d"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kk)
-      .select("query_id", "vec_id")
-    val exact = topK(col("qe"), col("q_full"), k)
-    val trunc = topK(col("tq"), col("q_trunc"), shortlistN)
-    val nMatch = exact.join(trunc, Seq("query_id", "vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_match")).withColumn("j", lit(1))
-    val nExact = exact.agg(count(lit(1)).as("n_exact")).withColumn("j", lit(1))
-    val nVec = eq.agg(count(lit(1)).as("n_vectors")).withColumn("j", lit(1))
-    nVec.join(broadcast(nExact), "j").join(broadcast(nMatch), "j")
+      .select(col("query_id"), col("vec_id"),
+        VectorFunctions.longSqDist(col("qe"), col("q_full")).as("exact"),
+        VectorFunctions.longSqDist(col("tq"), col("q_trunc")).as("approx"))
+    oneRow(rowCount(eq, "n_vectors"), recallCounts(scored, k, shortlistN))
       .select(col("n_vectors"),
         (col("n_exact") >= queryIds.size).as("nonempty"),
         (col("n_match").cast("double") >= lit(threshold) * col("n_exact"))
           .as("recall_ok"),
         col("n_exact"), col("n_match"))
   }
+
+  /** Micro-unit integer vector: each component floor(x · 10⁶) as a long. */
+  private def micro(v: Column): Column =
+    transform(v, x => floor(x.cast("double") * lit(1e6)).cast("long"))
+
+  /** [[micro]] of a driver-side vector. */
+  private def microOf(v: Array[Float]): Array[Long] =
+    v.map(x => math.floor(x.toDouble * 1e6).toLong)
+
+  /** Integer reconstruction `r` of the stored one-byte `codes`. */
+  private def recon: Column = transform(col("codes"), c =>
+    col("qmin") + floor(((c.cast("long") + 128L) * col("qrange")).cast("double") / 255)
+      .cast("long"))
 
   /** Driver-side cosine for centroid ranking (k values, not data-sized). */
   private def cosine(a: Array[Float], b: Array[Float]): Double = {

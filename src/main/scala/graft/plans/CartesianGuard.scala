@@ -18,7 +18,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * developer's signed claim that the side is small (the engine's own
   * brute-force-similarity and range-join queries do exactly this), and
   * the resulting BroadcastNestedLoopJoin is bounded by |small| per row.
-  * Opt out per session with `graft.cartesianGuard.enabled=false`.
   *
   * Registered through [[graft.GraftExtensions]] (`injectOptimizerRule`,
   * which runs AFTER hint resolution folds `broadcast()` into the Join's
@@ -26,23 +25,21 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 object CartesianGuard extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("graft.cartesianGuard.enabled", "true") == "true")
-      plan.foreach {
-        case j @ Join(_, _, Inner | Cross, None, hint) =>
-          // ONLY a broadcast hint blesses: it bounds the work at |small|
-          // per probe row. A merge/shuffle_hash hint on a condition-less
-          // join still computes the full cartesian — no escape for those.
-          val blessed = (hint.leftHint ++ hint.rightHint)
-            .exists(_.strategy.contains(BROADCAST))
-          if (!blessed)
-            throw new IllegalStateException(
-              "CartesianGuard: condition-less inner join would compute a " +
-                "cartesian product (|L| x |R| at cluster scale). Add the " +
-                "join condition, or mark the intentionally-small side with " +
-                "broadcast(), or set graft.cartesianGuard.enabled=false. " +
-                s"Join: ${j.simpleString(3)}")
-        case _ => ()
-      }
+    plan.foreach {
+      case j @ Join(_, _, Inner | Cross, None, hint) =>
+        // ONLY a broadcast hint blesses: it bounds the work at |small|
+        // per probe row. A merge/shuffle_hash hint on a condition-less
+        // join still computes the full cartesian — no escape for those.
+        val blessed = (hint.leftHint ++ hint.rightHint)
+          .exists(_.strategy.contains(BROADCAST))
+        if (!blessed)
+          throw new IllegalStateException(
+            "CartesianGuard: condition-less inner join would compute a " +
+              "cartesian product (|L| x |R| at cluster scale). Add the " +
+              "join condition, or mark the intentionally-small side with " +
+              s"broadcast(). Join: ${j.simpleString(3)}")
+      case _ => ()
+    }
     plan
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{IvfIndex, Similarity}
+import graft.operators.{ContractOps, IvfIndex, Similarity}
 
 /** IVF ANN index: centroid training determinism, inverted-list layout,
   * partition-pruned probes, recall vs exact brute force.
@@ -143,6 +143,11 @@ class IvfIndexSpec extends SparkTestBase {
     val rebuilt = lists(plantedVectors, c1)
     assert(drifted.exceptAll(rebuilt).count() > 0,
       "drifted centroids must be detectable")
+    // the contract's fused diff reads the drift as the two exceptAll counts
+    val d = ContractOps.diffCounts(drifted, rebuilt, "extra", "missing").head()
+    assert((d.getLong(0), d.getLong(1)) === ((19L, 19L)))
+    assert((drifted.exceptAll(rebuilt).count(), rebuilt.exceptAll(drifted).count()) ===
+      ((19L, 19L)))
   }
 
   test("ann recall contract: quantized probes recover the exact knn above threshold") {
@@ -155,6 +160,33 @@ class IvfIndexSpec extends SparkTestBase {
     assert(got.length === 1)
     assert(got.head.getBoolean(0), "contract must not be vacuous")
     assert(got.head.getBoolean(1), "full-probe recall must clear 0.9")
+  }
+
+  test("s8 counts equal the two-leg form's values; its exact top-k is knnJoin's") {
+    val emb = Tables.embeddings(spark, sf0001)
+    def counts(df: org.apache.spark.sql.DataFrame) = {
+      val r = df.select("n_exact", "n_match").head()
+      (r.getLong(0), r.getLong(1))
+    }
+    // (ivfK, nprobe) -> the two-leg form's (n_exact, n_match) at k = 10
+    for (((ivfK, nprobe), parent) <- Seq((8, 4) -> ((160L, 107L)), (4, 1) -> ((160L, 56L))))
+      assert(counts(IvfIndex.annRecallDebug(emb, 0L until 16L, k = 10, ivfK = ivfK,
+        nprobe = nprobe, threshold = 0.55)) === parent, s"ivfK=$ivfK nprobe=$nprobe")
+    // a zero-norm corpus vector has no cosine and no ADC direction: it
+    // takes no slot in either ranking
+    val withZero = plantedVectors.unionByName(
+      Seq((99L, Seq.fill(64)(0.0f))).toDF("vec_id", "embedding")
+        .withColumn("embedding", col("embedding").cast("array<float>")))
+    for (vecs <- Seq(plantedVectors, withZero);
+        (nprobe, parent) <- Seq(4 -> ((40L, 40L)), 1 -> ((40L, 20L))))
+      assert(counts(IvfIndex.annRecallDebug(vecs, 0L until 8L, k = 5, ivfK = 4,
+        nprobe = nprobe, threshold = 0.9)) === parent, s"planted nprobe=$nprobe")
+    val ranked = ContractOps.recallRanks(IvfIndex.annRecallScored(emb, 0L until 16L, 8, 4))
+      .filter(col("re") <= 10).select("query_id", "vec_id")
+    val knn = Similarity.knnJoin(emb.filter(col("embedding").isNotNull), 0L until 16L, 10)
+      .select("query_id", "vec_id")
+    assert(ranked.count() === 160L)
+    assert(ranked.exceptAll(knn).count() === 0L && knn.exceptAll(ranked).count() === 0L)
   }
 
   test("pq contract: monotone codebook error, shortlist recall, fixture booleans") {

@@ -72,14 +72,6 @@ class OptimizerRuleSpec extends SparkTestBase {
     assert(out.collect().length === 3)
   }}
 
-  test("guard is conf-disableable per session") { withGuard {
-    val a = Seq(1).toDF("x")
-    val b = Seq(2).toDF("y")
-    spark.conf.set("graft.cartesianGuard.enabled", "false")
-    try assert(a.crossJoin(b).collect().length === 1)
-    finally spark.conf.set("graft.cartesianGuard.enabled", "true")
-  }}
-
   test("equi and non-equi conditioned joins are untouched by the guard") { withGuard {
     val a = Seq((1, 10), (2, 20)).toDF("k", "va")
     val b = Seq((1, 5), (2, 30)).toDF("k2", "vb")
