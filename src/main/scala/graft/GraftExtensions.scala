@@ -1,20 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{GraftShims, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CosineSimilarity, LongDot, LongSqDist, LshSignature, MinHash, MinHashTokens, RepetitionCounts, SimHash64}
 
 /** SQL surface for the engine's custom Catalyst expressions.
   *
-  * Two registration paths:
-  *  - `spark.sql.extensions=graft.GraftExtensions` at session build
-  *    (cluster-wide, the production path), or
-  *  - [[GraftFunctions.registerAll]] on a live session (notebooks, the
-  *    driver harness).
-  *
-  * After either, plain SQL can use `simhash64(array<string>)`,
-  * `cosine_similarity(array<float>, array<float>)`,
+  * One registration path: `spark.sql.extensions=graft.GraftExtensions`
+  * at session build, which every session the engine builds sets
+  * ([[GraftSession]]); sessions derived from one (`newSession()`, a
+  * streaming batch's clone) inherit it. Plain SQL can then use
+  * `simhash64(array<string>)`, `cosine_similarity(array<float>, array<float>)`,
   * `minhash(array<string>, k)`, `minhash_tokens(array<string>, k)`,
   * `lsh_signature(array<float>[, planes[, offset]])`,
   * `long_dot(array<bigint>, array<bigint>)`,
@@ -72,10 +69,4 @@ object GraftFunctions {
     "long_dot" -> (args => { val (a, b) = two("long_dot", args); LongDot(a, b) }),
     "long_sqdist" -> (args => { val (a, b) = two("long_sqdist", args); LongSqDist(a, b) }),
     "repetition_counts" -> (args => RepetitionCounts(one("repetition_counts", args))))
-
-  /** Register all custom functions on a live session. */
-  def registerAll(spark: SparkSession): Unit =
-    specs.foreach { case (name, builder) =>
-      GraftShims.registerFunction(spark, name, builder)
-    }
 }

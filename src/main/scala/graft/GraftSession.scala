@@ -31,7 +31,7 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     // Let AQE re-plan the output partitioning of cached plans (default
     // false). The iterative operators pin loop invariants with
-    // .cache(); without this, the cached relation keeps the static
+    // Materialize.cached; without this, the cached relation keeps the static
     // shuffle partition count and every iteration scans it at that
     // width — measured at sf0.1 (r11 StatsProbe): g1_pagerank 216→81
     // tasks, task time 121→52 s; g4/g5/g6/g11 tasks −60%, task time

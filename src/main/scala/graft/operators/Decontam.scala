@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.{tokens, shinglesKTokens, shingles3Tokens}
+import graft.spark.Materialize
 
 /** Benchmark DECONTAMINATION: flag training documents that share any
   * token n-gram with an evaluation/benchmark set — the standard guard
@@ -125,8 +126,8 @@ object Decontam {
     * strictly better.)
     */
   def fuzzyDecontaminate(train: DataFrame, evalSet: DataFrame,
-      minJaccard: Double = 0.5, materialize: Boolean = false): DataFrame =
-    fuzzyCandidates(train, evalSet, minJaccard, materialize)
+      minJaccard: Double = 0.5): DataFrame =
+    fuzzyCandidates(train, evalSet, minJaccard)
       // OnceGate pins array_intersect — the per-candidate O(|A|+|B|)
       // verification kernel — to ONE evaluation site (r12, guide §4.4's
       // mechanism): without it the optimizer pushes the jaccard filter
@@ -148,7 +149,7 @@ object Decontam {
     * colliding-pair count.
     */
   private[graft] def fuzzyCandidates(train: DataFrame, evalSet: DataFrame,
-      minJaccard: Double, materialize: Boolean = false): DataFrame = {
+      minJaccard: Double): DataFrame = {
     // ONE tagged scan feeds everything: the two sides union FIRST (side
     // tag 0/1 keeps same-id docs on opposite sides distinct), so the
     // expensive tokenize→shingle pipeline and the df aggregate run over
@@ -170,19 +171,19 @@ object Decontam {
     // Prefix length n − ceil(t·n) + 1, with an epsilon slack inside the
     // ceil so FP rounding can only LENGTHEN a prefix (hurts pruning a
     // hair, never recall).
-    val ordered0 = tok.join(dfreq, "gram")
+    //
+    // The ordered-array frame is consumed FOUR times (two prefix sides,
+    // two verification joins); without truncation the shingle+df+sort
+    // lineage re-executes per consumer — measured 17.6 s → ~3 s at sf0.1
+    // with the checkpoint.
+    val ordered = Materialize(tok.join(dfreq, "gram")
       .groupBy("doc_id", "side")
       .agg(array_sort(collect_list(struct(col("df"), col("gram")))).as("ord"),
         count(lit(1)).as("n"))
       .select(col("doc_id"), col("side"), col("n"),
         expr("transform(ord, x -> x.gram)").as("sh"))
       .withColumn("p",
-        (col("n") - ceil(lit(minJaccard) * col("n") - lit(1e-9)) + 1).cast("int"))
-    // The ordered-array frame is consumed FOUR times (two prefix sides,
-    // two verification joins); without truncation the shingle+df+sort
-    // lineage re-executes per consumer — measured 17.6 s → ~3 s at sf0.1
-    // with the checkpoint. Lazy default for plan-inspection specs.
-    val ordered = if (materialize) ordered0.localCheckpoint(true) else ordered0
+        (col("n") - ceil(lit(minJaccard) * col("n") - lit(1e-9)) + 1).cast("int")))
     val tArr = ordered.filter(col("side") === 0)
       .select(col("doc_id").as("train_doc"), col("n").as("n_t"),
         col("sh").as("sh_t"), col("p"))
@@ -230,7 +231,7 @@ object Decontam {
       minJaccard: Double = 0.5): DataFrame = {
     val nb = TextOps.hexNibble("doc_id")
     fuzzyDecontaminate(documents.filter(nb < 15), documents.filter(nb === 15),
-      minJaccard, materialize = true)
+      minJaccard)
   }
 
   /** Deterministic corpus split for the registered query: docs whose

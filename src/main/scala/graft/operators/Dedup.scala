@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.SimHash64.simhash64
+import graft.spark.Materialize
 import ContractOps.{diffCounts, oneRow, rowCount}
 
 /** Deduplication family for the training-data pipeline tier: exact,
@@ -85,19 +86,12 @@ object Dedup {
     * verification on the candidates only (never all pairs).
     */
   def nearDupPairs(documents: DataFrame, threshold: Double = 0.8,
-      numHashes: Int = 32, bands: Int = 8,
-      materializeCandidates: Boolean = false): DataFrame = {
+      numHashes: Int = 32, bands: Int = 8): DataFrame = {
     // The candidate set feeds BOTH the semi-join pruning and the pair
-    // join below (a diamond DAG — the signature lineage executes twice
-    // when lazy). `materializeCandidates` truncates it via localCheckpoint
-    // for batch jobs; the default stays LAZY because checkpointing runs a
-    // Spark job at DataFrame-CONSTRUCTION time (surprising for explain/
-    // plan-inspection callers) and hides the candidate join from the plan.
-    val candidatesLazy = candidatePairs(lshBuckets(
-      minhashSignatures(documents, numHashes), bands, numHashes / bands))
-    val candidates =
-      if (materializeCandidates) candidatesLazy.localCheckpoint(true)
-      else candidatesLazy
+    // join below (a diamond DAG: lazy, the signature lineage would
+    // execute twice), so it is materialized once.
+    val candidates = Materialize(candidatePairs(lshBuckets(
+      minhashSignatures(documents, numHashes), bands, numHashes / bands)))
     // Exact-verify ONLY docs that appear in some candidate pair: shingle
     // materialization is the expensive step (interpreted higher-order
     // functions), and candidates are a vanishing fraction of the corpus at
@@ -287,20 +281,16 @@ object Dedup {
     */
   def incrementalNearDups(corpusIndex: DataFrame, corpus: DataFrame,
       incoming: DataFrame, threshold: Double = 0.9,
-      numHashes: Int = 32, bands: Int = 8,
-      materializeCandidates: Boolean = false): DataFrame = {
+      numHashes: Int = 32, bands: Int = 8): DataFrame = {
     val newBands = bandIndex(incoming, numHashes, bands)
     // same diamond as nearDupPairs: the candidate set feeds both semi
-    // joins and the pair join — materialize for batch jobs (3× otherwise),
-    // lazy by default for plan-inspection callers
-    val candLazy = corpusIndex
+    // joins and the pair join (3 reads), so it is materialized once
+    val cand = Materialize(corpusIndex
       .select(col("band_key"), col("doc_id").as("corpus_doc"))
       .join(newBands.select(col("band_key"), col("doc_id").as("new_doc")),
         Seq("band_key"))
       .select("new_doc", "corpus_doc")
-      .distinct()
-    val cand =
-      if (materializeCandidates) candLazy.localCheckpoint(true) else candLazy
+      .distinct())
     val shC = corpus
       .join(cand.select(col("corpus_doc").as("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("corpus_doc"),
@@ -452,9 +442,15 @@ object Dedup {
       .filter(bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= maxHamming)
       .select("doc_a", "doc_b")
     val banded = simhashPairs(sampled, maxHamming).select("doc_a", "doc_b")
-    oneRow(rowCount(brute, "n_brute"),
-        rowCount(brute.join(banded, Seq("doc_a", "doc_b"), "left_anti"), "n_missed"),
-        rowCount(banded.join(brute, Seq("doc_a", "doc_b"), "left_anti"), "n_spurious"))
+    // both legs are pair SETS (distinct doc ids, doc_a < doc_b), so one
+    // full outer join counts both / brute only / banded only in one
+    // aggregate, and the quadratic brute leg runs once
+    brute.withColumn("in_brute", lit(true))
+      .join(banded.withColumn("in_banded", lit(true)), Seq("doc_a", "doc_b"),
+        "full_outer")
+      .agg(count(col("in_brute")).as("n_brute"),
+        count(when(col("in_banded").isNull, true)).as("n_missed"),
+        count(when(col("in_brute").isNull, true)).as("n_spurious"))
       .select(
         (col("n_brute") > 0).as("nonempty"), // guards a vacuous pass
         (col("n_missed") === 0).as("complete"),
@@ -510,7 +506,7 @@ object Dedup {
     * distributed round's checkpoint observes its own. As soon as the
     * current edge set × 16 bytes fits `spark.sql.autoBroadcastJoinThreshold`
     * (the size Spark already collects to the driver for a broadcast —
-    * [[org.apache.spark.sql.GraftShims.fitsOnDriver]]), the edges are
+    * [[graft.spark.Materialize.fitsOnDriver]]), the edges are
     * collected once and the components finish on the driver as a
     * min-label union-find over primitive arrays ([[componentsOnDriver]]).
     * A graph that fits from the start never schedules a round and comes
@@ -538,9 +534,10 @@ object Dedup {
     *  - small-star: every node connects its smaller-or-equal neighbors
     *    to their collective minimum — stars re-root at the true minimum.
     *
-    * Each round is localCheckpoint'd: the fixpoint loop would otherwise
-    * grow an exponentially deep lazy plan (the classic iterative-algorithm
-    * trap on Spark).
+    * Each round is materialized ([[graft.spark.Materialize.round]], which
+    * also releases the round it supersedes): the fixpoint loop would
+    * otherwise grow an exponentially deep lazy plan (the classic
+    * iterative-algorithm trap on Spark).
     *
     * `maxRounds` bounds the distributed rounds and COUNTS the final no-op
     * round that detects convergence (the detector reads a round's input):
@@ -548,7 +545,7 @@ object Dedup {
     * r + 1. The driver finish has no rounds and cannot fail to converge.
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.sql.{GraftShims, Observation}
+    import org.apache.spark.sql.Observation
     val spark = edges.sparkSession
     val (s, d) = (col("src").cast("long"), col("dst").cast("long"))
     // canonical orientation as a per-row swap, not least/greatest: those
@@ -558,14 +555,12 @@ object Dedup {
     // so is every column the rounds derive from it: the output schema
     // is the same whichever path finishes and however many rounds run.
     // Self-loops stay in this checkpoint: (v, v) still makes v a node.
-    val (pairs0, pairsObs) = GraftShims.counted(edges
+    // pairRows, |E0| with self-loops, is the duplicate guard's bound (below).
+    val (pairs, pairRows) = Materialize.counted(edges
       .select(when(s <= d, s).otherwise(coalesce(d, s)).as("src"),
         when(s <= d, d).when(s > d, s).as("dst"))
       .distinct())
-    val pairs = pairs0.localCheckpoint(true)
-    var rows = GraftShims.observedCount(pairs, pairsObs)
-    // |E0| with self-loops: the duplicate guard's bound (below)
-    val pairRows = rows
+    var rows = pairRows
 
     // Convergence (r12 rewrite): the edge set is the answer shape — a
     // forest of stars rooted at component minima — exactly when EVERY
@@ -646,30 +641,25 @@ object Dedup {
     var converged = false
     var round = 0
     while (!converged && round < maxRounds &&
-        !GraftShims.fitsOnDriver(spark, rows)) {
+        !Materialize.fitsOnDriver(spark, rows)) {
       val forestObs = Observation()
-      val (next0, nextObs) = GraftShims.counted(starRound(e, forestObs))
-      var next = next0.localCheckpoint(true)
-      converged = GraftShims.observedMetric(spark, forestObs, "input_is_forest")
-        .map(_.asInstanceOf[Boolean])
-        .getOrElse(forestFlagJob(e))
-      rows = GraftShims.observedCount(next, nextObs)
-      if (rows > pairRows) {
-        val deduped = next.distinct().localCheckpoint(true)
-        GraftShims.unpersistCheckpoint(next)
-        next = deduped
-      }
-      // the new round is materialized (eager checkpoint), so the old
-      // round's blocks are dead weight — release NOW instead of waiting
-      // for driver GC; dead rounds otherwise accumulate |E|-sized RDDs
+      // the new round supersedes `e`, whose blocks are released once it
+      // is materialized: dead rounds would otherwise hold |E|-sized RDDs
       // in executor storage for the whole fixpoint (r11, the 8 GB sf10
       // discipline). Round 0's input is a filter over `pairs`, which
       // stays: it is the node universe.
-      GraftShims.unpersistCheckpoint(e)
-      e = next
+      e = Materialize.round(e) {
+        val (next, n) = Materialize.counted(starRound(e, forestObs))
+        converged = Materialize.observedMetric(spark, forestObs, "input_is_forest")
+          .map(_.asInstanceOf[Boolean])
+          .getOrElse(forestFlagJob(e))
+        rows = n
+        if (rows > pairRows) Materialize.round(next)(Materialize(next.distinct()))
+        else next
+      }
       round += 1
     }
-    require(converged || GraftShims.fitsOnDriver(spark, rows),
+    require(converged || Materialize.fitsOnDriver(spark, rows),
       s"connectedComponents did not converge in $maxRounds rounds")
     if (round == 0) {
       // the driver saw every pair, self-loops and nulls included
@@ -677,11 +667,7 @@ object Dedup {
     } else {
       val members =
         if (converged) e.select(col("dst").as("node"), col("src").as("component"))
-        else {
-          val local = componentsOnDriver(e.collect(), spark)
-          GraftShims.unpersistCheckpoint(e)
-          local
-        }
+        else Materialize.round(e)(componentsOnDriver(e.collect(), spark))
       // fixpoint is a forest of stars: every edge is (component-min,
       // member); nodes outside it (self-loop-only, null) label themselves
       val roots = pairs.select(explode(array(col("src"), col("dst"))).as("node"))
@@ -754,7 +740,7 @@ object Dedup {
     * label set is only docs that appear in some pair).
     */
   def dupClusters(documents: DataFrame, threshold: Double = 0.9): DataFrame = {
-    val edges = nearDupPairs(documents, threshold, materializeCandidates = true)
+    val edges = nearDupPairs(documents, threshold)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val labels = connectedComponents(edges)
     val labeled = documents.select(col("doc_id"))
@@ -854,17 +840,16 @@ object Dedup {
     * twice (measured ~2 s of the query at sf0.1 on its own). Tokens are
     * projected BEFORE the shingle builder (the shingles3Tokens contract:
     * the inline form re-splits the text per reference, ~7 s extra here).
-    * materialize=true truncates the triple lineage for batch jobs (lazy
-    * default for the same plan-inspection reason as nearDupPairs).
+    * The frame is materialized: both self-join sides and the
+    * verification read it.
     */
-  private def allPairsDocs(documents: DataFrame, num: Long, den: Long,
-      materialize: Boolean): DataFrame = {
+  private def allPairsDocs(documents: DataFrame, num: Long, den: Long): DataFrame = {
     val tok = documents
       .select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         explode(array_distinct(shingles3Tokens(col("toks"), col("text")))).as("shingle"))
     val dfreq = tok.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val docsArr0 = tok.join(dfreq, "shingle")
+    Materialize(tok.join(dfreq, "shingle")
       .withColumn("h", pmod(xxhash64(col("shingle")), lit(128)).cast("int"))
       .groupBy("doc_id")
       .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("ord"),
@@ -876,17 +861,16 @@ object Dedup {
       .select(col("doc_id"), col("n"), col("ord"), col("mask0"), col("mask1"),
         expr("transform(ord, x -> x.shingle)").as("sh"))
       // p = n − ceil(num·n/den) + 1 ≥ 1, in exact integer arithmetic
-      .withColumn("p", col("n") - expr(s"($num * n + ${den - 1}) div $den") + 1)
-    if (materialize) docsArr0.localCheckpoint(true) else docsArr0
+      .withColumn("p", col("n") - expr(s"($num * n + ${den - 1}) div $den") + 1))
   }
 
   def prefixFilterJoin(documents: DataFrame, thresholdNum: Int = 4,
-      thresholdDen: Int = 5, materialize: Boolean = false): DataFrame = {
+      thresholdDen: Int = 5): DataFrame = {
     require(thresholdNum > 0 && thresholdNum <= thresholdDen,
       s"prefixFilterJoin: threshold $thresholdNum/$thresholdDen not in (0, 1]")
     val (num, den) = (thresholdNum.toLong, thresholdDen.toLong)
     // consumed by both self-join sides AND verification
-    val docsArr = allPairsDocs(documents, num, den, materialize)
+    val docsArr = allPairsDocs(documents, num, den)
     // df=1 prefix tokens are dropped AFTER posexplode (original positions
     // kept for the PPJoin bound): a globally-unique shingle can't match
     // another doc, and dropping it is completeness-safe — a qualifying
@@ -972,11 +956,11 @@ object Dedup {
     * the size filter |B|·den ≥ |A|·num prunes inside the join condition.
     */
   def containmentJoin(documents: DataFrame, thresholdNum: Int = 4,
-      thresholdDen: Int = 5, materialize: Boolean = false): DataFrame = {
+      thresholdDen: Int = 5): DataFrame = {
     require(thresholdNum > 0 && thresholdNum <= thresholdDen,
       s"containmentJoin: threshold $thresholdNum/$thresholdDen not in (0, 1]")
     val (num, den) = (thresholdNum.toLong, thresholdDen.toLong)
-    val docsArr = allPairsDocs(documents, num, den, materialize)
+    val docsArr = allPairsDocs(documents, num, den)
     // contained role: prefix tokens only; container role: every token —
     // both sides drop df=1 shingles BEFORE exploding: a globally-unique
     // shingle exists in exactly one doc, so it can never equi-match a

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.spark.Materialize
 
 /** Right-to-erasure propagation into DERIVED artifacts.
   *
@@ -103,9 +104,8 @@ object Erasure {
     val erasedVecs = Quality.eraseKeys(embeddings, "vec_id", deleteVecs)
 
     // each artifact below feeds its diff plus a count or cleanliness
-    // probe — materialize once (the nearDupPairs materializeCandidates
-    // rationale; a contract query is a batch job, not a plan-inspection
-    // surface). The six artifact builds are INDEPENDENT DAGs, so their
+    // probe — materialize once (the nearDupPairs candidate rationale).
+    // The six artifact builds are INDEPENDENT DAGs, so their
     // checkpoint jobs overlap from a small thread pool instead of running
     // back-to-back — the next build's tasks back-fill executors freed by
     // the current build's tail (guide §2.6; actions are only sequential
@@ -117,7 +117,7 @@ object Erasure {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
       try Await.result(
-        Future.sequence(dfs.map(df => Future(df.localCheckpoint(true)))),
+        Future.sequence(dfs.map(df => Future(Materialize(df)))),
         Duration.Inf)
       finally pool.shutdown()
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.functions.{array, broadcast, coalesce, col,
   collect_list, collect_set, count, explode, expr, lit, max, min, posexplode, row_number,
   size, sort_array, struct, sum, when}
+import graft.spark.Materialize
 
 /** Iterative graph ranking over edge tables (the crawl-frontier /
   * entity-importance tier of a training-data pipeline: PageRank over the
@@ -54,7 +55,6 @@ object GraphOps {
     *    worth the wedge volume.
     */
   def triangleCount(lineitem: DataFrame,
-      materialize: Boolean = false,
       maxBasket: Int = Int.MaxValue,
       vertexMod: Long = 1L): DataFrame = {
     // r11: basket-array edge build (see orderBaskets) — the maxBasket cap
@@ -71,21 +71,19 @@ object GraphOps {
     val baskets =
       if (maxBasket == Int.MaxValue) baskets0
       else baskets0.filter(size(col("ps")) <= maxBasket)
-    val e0raw = basketPairs(baskets)
-      .select(col("src").as("u"), col("dst").as("v")).distinct()
     // consumed by degree agg, orientation, AND the closing-edge join
-    val e = if (materialize) e0raw.localCheckpoint(true) else e0raw
+    val e = Materialize(basketPairs(baskets)
+      .select(col("src").as("u"), col("dst").as("v")).distinct())
     val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
       .groupBy("x").agg(count(lit(1)).as("d"))
     // orient by (degree, id): struct comparison gives the total order
-    val oriented0 = e
+    val oriented = Materialize(e
       .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
       .select(when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
           struct(col("u").as("s"), col("v").as("t")))
         .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"))
-    val oriented = if (materialize) oriented0.localCheckpoint(true) else oriented0
+      .select(col("e.s").as("s"), col("e.t").as("t")))
     // out-neighbor wedges; x.t < y.t emits each unordered pair once,
     // already id-ordered to match the closing edge's u < v normal form
     val wedges = oriented.as("x").join(oriented.as("y"),
@@ -143,7 +141,7 @@ object GraphOps {
       minSupport: Long = 2L): DataFrame = {
     // the edge build (distinct + self-join) feeds FIVE consumers across
     // the two phases — materialize it once or each one re-runs it
-    val e = coPurchaseEdges(lineitem, minSupport).localCheckpoint(true)
+    val e = Materialize(coPurchaseEdges(lineitem, minSupport))
     val e1 = e.filter((col("src") + col("dst")) % 2 === 0)
     val e2 = e.filter((col("src") + col("dst")) % 2 =!= 0)
     val c1 = Dedup.connectedComponents(e1)
@@ -244,30 +242,28 @@ object GraphOps {
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int = 3): DataFrame = {
     require(maxHops >= 0 && maxHops <= 12, "bounded BFS only")
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .cache()
-    var dist = seeds.select(col("node"), lit(0L).as("hops")).localCheckpoint(true)
-    var frontier = dist.select("node")
-    var h = 1
-    while (h <= maxHops) {
-      val next = frontier.join(sym, frontier("node") === sym("src"))
-        .select(sym("dst").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(h.toLong).as("hops"))
-        .localCheckpoint(true)
-      // dist stays the LAZY union of the materialized frontiers (r12):
-      // the old shape re-checkpointed the whole accumulated dist every
-      // round — an O(|V|) extra materialization per hop whose only
-      // benefit was early block release; the frontiers are disjoint, so
-      // their union holds the same rows once, the plan depth is ≤
-      // maxHops unions of LogicalRDDs, and one action per hop is saved.
-      dist = dist.union(next)
-      frontier = next.select("node")
-      h += 1
+    Materialize.cached(edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst")))) { sym =>
+      var dist = Materialize(seeds.select(col("node"), lit(0L).as("hops")))
+      var frontier = dist.select("node")
+      var h = 1
+      while (h <= maxHops) {
+        val next = Materialize(frontier.join(sym, frontier("node") === sym("src"))
+          .select(sym("dst").as("node")).distinct()
+          .join(dist, Seq("node"), "left_anti")
+          .select(col("node"), lit(h.toLong).as("hops")))
+        // dist stays the LAZY union of the materialized frontiers (r12):
+        // the old shape re-checkpointed the whole accumulated dist every
+        // round — an O(|V|) extra materialization per hop whose only
+        // benefit was early block release; the frontiers are disjoint, so
+        // their union holds the same rows once, the plan depth is ≤
+        // maxHops unions of LogicalRDDs, and one action per hop is saved.
+        dist = dist.union(next)
+        frontier = next.select("node")
+        h += 1
+      }
+      dist.orderBy("node")
     }
-    sym.unpersist()
-    dist.orderBy("node")
   }
 
   /** Registered-query harness (g4_bfs_hops): hop distance from the
@@ -304,7 +300,7 @@ object GraphOps {
     */
   def linkPrediction(lineitem: DataFrame, minSupport: Long = 2L,
       k: Int = 25): DataFrame = {
-    val e = coPurchaseEdges(lineitem, minSupport).localCheckpoint(true)
+    val e = Materialize(coPurchaseEdges(lineitem, minSupport))
     val sym = e.select(col("src").as("x"), col("dst").as("y"))
       .union(e.select(col("dst").as("x"), col("src").as("y")))
     val deg = sym.groupBy(col("x")).agg(count(lit(1)).as("d"))
@@ -403,7 +399,7 @@ object GraphOps {
     // order count (= basket rows), item counts (one explode), and
     // task-local pair generation (no o-keyed self-join); see
     // orderBaskets. Same counts by construction.
-    val baskets = orderBaskets(lineitem).localCheckpoint(true)
+    val baskets = Materialize(orderBaskets(lineitem))
     val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
     val itemCounts = baskets.select(explode(col("ps")).as("p"))
       .groupBy("p").agg(count(lit(1)).as("n_item"))
@@ -473,57 +469,54 @@ object GraphOps {
     // edge derivation just to feed two readers. The cached eDeg keeps
     // its src hash-partitioning, so each iteration's score join only
     // shuffles the (small) score side.
-    val eDeg = e.withColumn("outdeg",
-      count(lit(1)).over(Window.partitionBy("src"))).cache()
+    val annotated = e.withColumn("outdeg", count(lit(1)).over(Window.partitionBy("src")))
     val initScore = lit(1000000L).as("score")
     val update = expr(
       "150000 + 85 * coalesce(mass, CAST(0 AS BIGINT)) DIV 100").as("score")
-    // Either branch ends with an EAGER localCheckpoint so the loop
-    // invariants can be unpersisted before returning: the lazily-returned
-    // DataFrame would otherwise pin the edge caches in executor storage
-    // for the rest of the session (the trainCentroids unpersist
-    // convention, adapted to a lazy return value).
-    if (allNodesReceiveMass) {
-      // Iteration 1 needs NO score join: the init score is uniform, so
-      // each edge's contribution is the constant-score floor division —
-      // computable straight off the annotated edge list. This also
-      // removes the node-set seed entirely (at scale that seed is a
-      // distinct over 2·|E| rows — a whole shuffle for nothing).
-      var scores = eDeg
-        .groupBy("dst")
-        .agg(sum(expr("1000000 DIV outdeg")).as("mass"))
-        .select(col("dst").as("node"), update)
-      for (_ <- 2 to iterations) {
-        scores = scores
-          .join(eDeg, col("node") === col("src"))
-          .select(col("dst"), expr("score DIV outdeg").as("c"))
+    // Either branch ends with an EAGER checkpoint so the loop invariants
+    // can be unpersisted before returning: the lazily-returned DataFrame
+    // would otherwise pin the edge caches in executor storage for the
+    // rest of the session (the trainCentroids unpersist convention,
+    // adapted to a lazy return value).
+    Materialize.cached(annotated) { eDeg =>
+      if (allNodesReceiveMass) {
+        // Iteration 1 needs NO score join: the init score is uniform, so
+        // each edge's contribution is the constant-score floor division —
+        // computable straight off the annotated edge list. This also
+        // removes the node-set seed entirely (at scale that seed is a
+        // distinct over 2·|E| rows — a whole shuffle for nothing).
+        var scores = eDeg
           .groupBy("dst")
-          .agg(sum(col("c")).as("mass"))
+          .agg(sum(expr("1000000 DIV outdeg")).as("mass"))
           .select(col("dst").as("node"), update)
+        for (_ <- 2 to iterations) {
+          scores = scores
+            .join(eDeg, col("node") === col("src"))
+            .select(col("dst"), expr("score DIV outdeg").as("c"))
+            .groupBy("dst")
+            .agg(sum(col("c")).as("mass"))
+            .select(col("dst").as("node"), update)
+        }
+        Materialize(scores)
+      } else {
+        // seed off the CACHED annotated edges, not `e` — two reads of `e`
+        // would recompute the caller's edge derivation twice
+        Materialize.cached(eDeg.select(col("src").as("node"))
+            .union(eDeg.select(col("dst").as("node"))).distinct()) { nodes =>
+          var scores = nodes.select(col("node"), initScore)
+          for (_ <- 1 to iterations) {
+            val inMass = scores
+              .join(eDeg, col("node") === col("src"))
+              .select(col("dst"), expr("score DIV outdeg").as("c"))
+              .groupBy("dst")
+              .agg(sum(col("c")).as("mass"))
+            scores = nodes
+              .join(inMass, nodes("node") === inMass("dst"), "left")
+              .select(col("node"), update)
+          }
+          Materialize(scores)
+        }
       }
-      val out = scores.localCheckpoint(eager = true)
-      eDeg.unpersist(blocking = false)
-      out
-    } else {
-      // seed off the CACHED annotated edges, not `e` — two reads of `e`
-      // would recompute the caller's edge derivation twice
-      val nodes = eDeg.select(col("src").as("node"))
-        .union(eDeg.select(col("dst").as("node"))).distinct().cache()
-      var scores = nodes.select(col("node"), initScore)
-      for (_ <- 1 to iterations) {
-        val inMass = scores
-          .join(eDeg, col("node") === col("src"))
-          .select(col("dst"), expr("score DIV outdeg").as("c"))
-          .groupBy("dst")
-          .agg(sum(col("c")).as("mass"))
-        scores = nodes
-          .join(inMass, nodes("node") === inMass("dst"), "left")
-          .select(col("node"), update)
-      }
-      val out = scores.localCheckpoint(eager = true)
-      eDeg.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-      out
     }
   }
 
@@ -593,7 +586,7 @@ object GraphOps {
     * truncation).
     *
     * Size-adaptive, like [[Dedup.connectedComponents]] and through the
-    * same rule ([[org.apache.spark.sql.GraftShims.fitsOnDriver]]): each
+    * same rule ([[graft.spark.Materialize.fitsOnDriver]]): each
     * keep-set checkpoint observes its size and its degree sum, and half
     * the degree sum bounds the edges left among the kept nodes. Once
     * that bound × 16 bytes fits `spark.sql.autoBroadcastJoinThreshold`,
@@ -614,67 +607,57 @@ object GraphOps {
     */
   def kCore(lineitem: DataFrame, k: Long = 2L, minSupport: Long = 2L,
       maxRounds: Int = 12): DataFrame = {
-    import org.apache.spark.sql.GraftShims
     val spark = lineitem.sparkSession
     val e0 = coPurchaseEdges(lineitem, minSupport)
-    val sym = e0.select(col("src"), col("dst"))
-      .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .cache()
-    // survivor count and degree sum ride each round's own checkpoint job
-    // via observe() (r12, the CC-loop device; fallback jobs where the
-    // metrics don't arrive — see GraftShims.observedMetric)
-    def peeled(surviving: DataFrame): (DataFrame, Long, Long) = {
-      val (df, obs) = GraftShims.counted(surviving
-        .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
-        .filter(col("core_deg") >= k),
-        coalesce(sum(col("core_deg")), lit(0L)).as("deg_sum"))
-      val ck = df.localCheckpoint(true)
-      (ck, GraftShims.observedCount(ck, obs),
-        GraftShims.observedLong(ck, obs, "deg_sum")(
-          ck.agg(coalesce(sum(col("core_deg")), lit(0L))).head().getLong(0)))
-    }
-    def small(degSum: Long) = GraftShims.fitsOnDriver(spark, (degSum + 1) / 2)
-    var (kept, n, degSum) = peeled(sym)
-    var converged = false
-    var round = 1
-    while (!converged && round < maxRounds && !small(degSum)) {
-      val (next, n2, d2) = peeled(sym
-        .join(kept.select(col("node").as("src")), Seq("src"))
-        .join(kept.select(col("node").as("dst")), Seq("dst")))
-      GraftShims.unpersistCheckpoint(kept)
-      converged = n2 == n
-      n = n2
-      degSum = d2
-      kept = next
-      round += 1
-    }
-    val core =
-      if (converged || !small(degSum)) kept
-      else {
-        // the edges left among the kept nodes, each once (sym's src < dst
-        // half is e0), read from sym's cache
-        val edges = sym.filter(col("src") < col("dst"))
+    Materialize.cached(e0.select(col("src"), col("dst"))
+        .union(e0.select(col("dst").as("src"), col("src").as("dst")))) { sym =>
+      // survivor count and degree sum ride each round's own checkpoint job
+      // via observe() (r12, the CC-loop device; fallback jobs where the
+      // metrics don't arrive — see Materialize.observedMetric)
+      def peeled(surviving: DataFrame): (DataFrame, Long, Long) =
+        Materialize.counted(surviving
+          .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
+          .filter(col("core_deg") >= k),
+          coalesce(sum(col("core_deg")), lit(0L)))
+      def small(degSum: Long) = Materialize.fitsOnDriver(spark, (degSum + 1) / 2)
+      var (kept, n, degSum) = peeled(sym)
+      var converged = false
+      var round = 1
+      while (!converged && round < maxRounds && !small(degSum)) {
+        val (next, n2, d2) = Materialize.round(kept)(peeled(sym
           .join(kept.select(col("node").as("src")), Seq("src"))
-          .join(kept.select(col("node").as("dst")), Seq("dst"))
-          .select(col("src"), col("dst"))
-          .collect()
-        val (nodes, degs, ok) = peelOnDriver(edges, k, n, round, maxRounds)
-        converged = ok
-        // the node column keeps its input type (l_partkey's)
-        val box: Long => Any = kept.schema("node").dataType match {
-          case IntegerType => _.toInt
-          case _ => v => v
-        }
-        val rows = new java.util.ArrayList[Row](nodes.length)
-        for (j <- nodes.indices) rows.add(Row(box(nodes(j)), degs(j)))
-        val local = spark.createDataFrame(rows, kept.schema)
-        GraftShims.unpersistCheckpoint(kept)
-        local
+          .join(kept.select(col("node").as("dst")), Seq("dst"))))
+        converged = n2 == n
+        n = n2
+        degSum = d2
+        kept = next
+        round += 1
       }
-    sym.unpersist()
-    require(converged,
-      s"k-core peel (k=$k) did not reach its fixpoint in $maxRounds rounds")
-    core.orderBy("node")
+      val core =
+        if (converged || !small(degSum)) kept
+        else Materialize.round(kept) {
+          // the edges left among the kept nodes, each once (sym's src < dst
+          // half is e0), read from sym's cache
+          val edges = sym.filter(col("src") < col("dst"))
+            .join(kept.select(col("node").as("src")), Seq("src"))
+            .join(kept.select(col("node").as("dst")), Seq("dst"))
+            .select(col("src"), col("dst"))
+            .collect()
+          val (nodes, degs, ok) = peelOnDriver(edges, k, n, round, maxRounds)
+          converged = ok
+          // the node column keeps its input type (l_partkey's)
+          val box: Long => Any = kept.schema("node").dataType match {
+            case IntegerType => _.toInt
+            case _ => v => v
+          }
+          val rows = new java.util.ArrayList[Row](nodes.length)
+          for (j <- nodes.indices) rows.add(Row(box(nodes(j)), degs(j)))
+          spark.createDataFrame(rows, kept.schema)
+        }
+      require(converged,
+        s"k-core peel (k=$k) did not reach its fixpoint in $maxRounds rounds")
+      core.orderBy("node")
+    }
   }
 
   /** The driver finish of [[kCore]]: the same synchronous peel over the
@@ -746,25 +729,18 @@ object GraphOps {
       .agg(count(lit(1)).as("c"))
       .filter(col("c") >= minSupport)
       .select(col("src"), col("dst"), expr("1000000 div c").as("w"))
-    val sym = e0.select(col("src"), col("dst"), col("w"))
-      .union(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .cache()
-    var dist = part.filter(col("p_brand") === brand)
-      .select(col("p_partkey").as("node"), lit(0L).as("cost"))
-      .localCheckpoint(true)
-    var h = 0
-    while (h < maxHops) {
-      val relaxed = dist.join(sym, dist("node") === sym("src"))
-        .select(sym("dst").as("node"), (dist("cost") + sym("w")).as("cost"))
-      val prev = dist
-      dist = dist.union(relaxed)
-        .groupBy("node").agg(min(col("cost")).as("cost"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(prev)
-      h += 1
+    Materialize.cached(e0.select(col("src"), col("dst"), col("w"))
+        .union(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))) { sym =>
+      var dist = Materialize(part.filter(col("p_brand") === brand)
+        .select(col("p_partkey").as("node"), lit(0L).as("cost")))
+      for (_ <- 1 to maxHops) {
+        val relaxed = dist.join(sym, dist("node") === sym("src"))
+          .select(sym("dst").as("node"), (dist("cost") + sym("w")).as("cost"))
+        dist = Materialize.round(dist)(Materialize(dist.union(relaxed)
+          .groupBy("node").agg(min(col("cost")).as("cost"))))
+      }
+      dist.orderBy("node")
     }
-    sym.unpersist()
-    dist.orderBy("node")
   }
 
   /** COMMUNITY DETECTION via synchronous label propagation (LPA) — the
@@ -800,29 +776,22 @@ object GraphOps {
     */
   def lpaOnEdges(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1 && iterations <= 10, "bounded synchronous LPA")
-    val eu = edges
-    val sym = eu.select(col("src").as("u"), col("dst").as("v"))
-      .union(eu.select(col("dst").as("u"), col("src").as("v")))
-      .cache()
-    var labels = sym.select(col("u").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      val prev = labels
-      labels = sym
-        .join(labels, sym("v") === labels("node"))
-        .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("c"))
-        .groupBy(col("u").as("node"))
-        .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
-        .select(col("node"), (-col("m.neg")).as("lbl"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(prev)
+    Materialize.cached(edges.select(col("src").as("u"), col("dst").as("v"))
+        .union(edges.select(col("dst").as("u"), col("src").as("v")))) { sym =>
+      var labels = Materialize(sym.select(col("u").as("node")).distinct()
+        .withColumn("lbl", col("node")))
+      for (_ <- 1 to iterations)
+        labels = Materialize.round(labels)(Materialize(sym
+          .join(labels, sym("v") === labels("node"))
+          .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("c"))
+          .groupBy(col("u").as("node"))
+          .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
+          .select(col("node"), (-col("m.neg")).as("lbl"))))
+      labels
+        .groupBy(col("lbl").as("community"))
+        .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"))
+        .orderBy("community")
     }
-    sym.unpersist(blocking = false)
-    labels
-      .groupBy(col("lbl").as("community"))
-      .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"))
-      .orderBy("community")
   }
 
   /** DEGREE ASSORTATIVITY sufficient statistics — do high-degree nodes

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NearestCodewords, VectorFunctions}
+import graft.spark.Materialize
 import ContractOps.{diffCounts, oneRow, recallCounts, rowCount}
 
 /** IVF (inverted-file) ANN index over an embedding column — the
@@ -61,15 +62,13 @@ object IvfIndex {
     // sample by design (O(k·dim) evidence), and every k-means iteration
     // schedules one task per partition — hundreds of near-empty tasks
     // per iteration is pure scheduling overhead, not parallelism.
-    val train = withNorm.select(array_to_vector(
-      transform(col("embedding"), x => x.cast("double") / col("nrm"))).as("features"))
-      .coalesce(8)
-      .cache()
-    try {
+    Materialize.cached(withNorm.select(array_to_vector(
+        transform(col("embedding"), x => x.cast("double") / col("nrm"))).as("features"))
+        .coalesce(8)) { train =>
       val model = new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
         .fit(train)
       model.clusterCenters.map(_.toArray.map(_.toFloat))
-    } finally train.unpersist(blocking = false)
+    }
   }
 
   /** Fixed-iteration Lloyd k-means, INTEGER-EXACT — the oracle-checkable
@@ -484,13 +483,13 @@ object IvfIndex {
     // corpus-proportional shortlist sizing rides the seeds job via
     // observe() (r12): every row flows through the metrics node below
     // the TakeOrdered, so the caller's separate count() scan is gone
-    val (eqCounted, nObs) = org.apache.spark.sql.GraftShims.counted(eq)
+    val (eqCounted, nObs) = Materialize.observeCount(eq)
     val seeds = eqCounted
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(kSub)
       .collect().map(_.getSeq[Long](1).toArray)
     val shortlistN = shortlistFor.fold(shortlist)(f =>
-      f(org.apache.spark.sql.GraftShims.observedCount(eq, nObs)))
+      f(Materialize.observedCount(eq, nObs)))
     require(seeds.length == kSub, s"pqContract: corpus smaller than $kSub")
     val dim = seeds(0).length
     require(m >= 1 && dim % m == 0, s"pqContract: dim $dim not divisible by m=$m")
@@ -498,8 +497,7 @@ object IvfIndex {
     // codebooks(mi)(j) = j-th codeword of subspace mi
     val codebooks = Array.tabulate(m, kSub)((mi, j) =>
       seeds(j).slice(mi * d0, (mi + 1) * d0))
-    val withErr = pqEncode(eq, codebooks, kPrefix)
-      .localCheckpoint(true) // feeds err agg + the ranking pass
+    val withErr = Materialize(pqEncode(eq, codebooks, kPrefix)) // feeds err agg + the ranking pass
     val qRows = eq.filter(col("vec_id").isin(queryIds: _*))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
     val queries = embeddings.sparkSession.createDataFrame(qRows.toSeq)
@@ -564,12 +562,12 @@ object IvfIndex {
     // shortlist sizing rides the query-row collect via observe() (r12):
     // the metrics node sits BELOW the isin filter, so it counts every
     // corpus row and the caller's separate count() scan is gone
-    val (eqCounted, nObs) = org.apache.spark.sql.GraftShims.counted(eq)
+    val (eqCounted, nObs) = Materialize.observeCount(eq)
     val qRows = eqCounted
       .filter(col("vec_id").isin(queryIds: _*))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
     val shortlistN = shortlistFor.fold(shortlist)(f =>
-      f(org.apache.spark.sql.GraftShims.observedCount(eq, nObs)))
+      f(Materialize.observedCount(eq, nObs)))
     val queries = embeddings.sparkSession.createDataFrame(qRows.toSeq)
       .toDF("query_id", "q_full", "q_trunc")
     val scored = eq

@@ -135,11 +135,12 @@ object Similarity {
       .orderBy("query_id", "rank")
 
   /** Shared anchor-broadcast cosine ranking ([[knnJoin]] keeps the top-k
-    * prefix; [[hardNegatives]] a mid-rank slice). The `score >= minScore`
-    * filter doubles as the zero-norm guard: cosine against a zero-norm
-    * vector is NaN, NaN sorts ABOVE every double under desc, and
-    * `NaN >= -1.0` is false — without it one zero-norm corpus vector
-    * would seize rank 1 for every anchor.
+    * prefix; [[hardNegatives]] a mid-rank slice). Cosine against a
+    * zero-norm vector is NaN, and Spark orders NaN ABOVE every double
+    * (`score desc` puts it first) and as equal-or-greater in comparisons
+    * (`NaN >= -1.0` is true), so the `score >= minScore` filter alone
+    * lets it through; the explicit `isnan` guard keeps one zero-norm
+    * corpus vector from seizing rank 1 for every anchor.
     */
   private def rankedByCosine(embeddings: DataFrame, queryIds: Seq[Long],
       minScore: Double): DataFrame = {
@@ -150,7 +151,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(cosineSim(col("embedding"), col("q_emb")), 6).as("score"))
-      .filter(col("score") >= minScore)
+      .filter(!isnan(col("score")) && col("score") >= minScore)
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))

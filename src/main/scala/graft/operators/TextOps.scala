@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{broadcast, col, count, countDistinct,
   explode, expr, greatest, length, lit, lower, max, min, regexp_count,
   regexp_replace, row_number, size, split, sum, when}
 import graft.functions.TextFunctions._
+import graft.spark.Materialize
 
 /** Query-shaped text analysis + JSON extraction over `documents`/`events`
   * (training-data pipeline tier).
@@ -598,9 +599,9 @@ object TextOps {
     *
     * Scale shape: ONE corpus scan, map-side-combined down to the
     * (group, split) count table — bounded by |groups|, not rows — which
-    * is MATERIALIZED (the nearDupPairs materializeCandidates precedent:
-    * it feeds two different re-groupings — per-split totals and the
-    * per-group leakage witness — and Spark cannot reuse one exchange
+    * is MATERIALIZED (the nearDupPairs candidate precedent: it feeds
+    * two different re-groupings — per-split totals and the per-group
+    * leakage witness — and Spark cannot reuse one exchange
     * across differently-pruned consumers, so the lazy form would scan
     * the corpus twice). The one-row witness rides in on a broadcast.
     */
@@ -610,14 +611,13 @@ object TextOps {
     require(trainSixteenths > 0 && valSixteenths > 0
       && trainSixteenths + valSixteenths < 16)
     val nb = hexNibble(groupCol)
-    val groupCounts = documents
+    val groupCounts = Materialize(documents
       .select(col(groupCol).as("grp"),
         when(nb < trainSixteenths, "train")
           .when(nb < trainSixteenths + valSixteenths, "val")
           .otherwise("test").as("split"))
       .groupBy("grp", "split")
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n")))
     // each (grp, split) row is unique, so count(*) per split IS the
     // distinct-source count — no distinct-rewrite Expand needed
     val perSplit = groupCounts.groupBy("split")
@@ -1190,7 +1190,7 @@ object TextOps {
       .select(col("w"),
         concat(lit("||"), array_join(split(col("w"), ""), "||"),
           lit("||")).as("s"), col("wc"))
-    var cur = words.localCheckpoint(true) // the loop re-reads it k times
+    var cur = Materialize(words) // the loop re-reads it k times
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (rank <- 1 to k) {
       val top = cur
@@ -1206,9 +1206,8 @@ object TextOps {
         .limit(1).head()
       val (a, b, c) = (top.getString(0), top.getString(1), top.getLong(2))
       merges += ((rank, a, b, c))
-      cur = cur.select(col("w"),
-        replace(col("s"), lit(s"|$a||$b|"), lit(s"|$a$b|")).as("s"), col("wc"))
-        .localCheckpoint(true)
+      cur = Materialize.round(cur)(Materialize(cur.select(col("w"),
+        replace(col("s"), lit(s"|$a||$b|"), lit(s"|$a$b|")).as("s"), col("wc"))))
     }
     (cur, merges.result())
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.spark.Materialize
 
 /** End-to-end training-data preparation — the capstone composition of the
   * pipeline tier, every stage of which is individually oracle-proven:
@@ -74,16 +75,14 @@ object TrainingPipeline {
     // materialized once: the survivor set feeds LSH signature building,
     // candidate shingle verification AND the representative join — left
     // lazy, the sample+gate+dedup lineage would execute three times
-    val deduped = curated
+    val deduped = Materialize(curated
       .groupBy("text")
       .agg(min("doc_id").as("doc_id"),
         min_by(col("lang"), col("doc_id")).as("lang"),
         min(tokenCount(col("text"))).as("nt"))
-      .select(col("doc_id"), col("text"), col("lang"), col("nt"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("text"), col("lang"), col("nt")))
     // 4: near-dup clusters among the survivors, keep component minima
-    val edges = Dedup.nearDupPairs(deduped, nearDupThreshold,
-      materializeCandidates = true)
+    val edges = Dedup.nearDupPairs(deduped, nearDupThreshold)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val labels = Dedup.connectedComponents(edges)
     deduped

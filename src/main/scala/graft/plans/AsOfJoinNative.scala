@@ -149,17 +149,11 @@ object AsOfJoinNative {
       rightCols: Seq[String], outPrefix: String = "asof_"): DataFrame = {
     import org.apache.spark.sql.functions.col
     val spark = left.sparkSession
-    // sessions built WITHOUT spark.sql.extensions still plan the node:
-    // extraStrategies is the runtime injection point (idempotent — the
-    // strategy object is a singleton, reference-checked)
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     // re-aliasing mints fresh ExprIds on the right side — self-join-safe
     val rAliased = right.select(
       (Seq(key, time) ++ rightCols).distinct.map(c => col(c).as(c)): _*)
-    val la = GraftShims.analyzed(left)
-    val ra = GraftShims.analyzed(rAliased)
+    val la = left.queryExecution.analyzed
+    val ra = rAliased.queryExecution.analyzed
     require(la.outputSet.intersect(ra.outputSet).isEmpty,
       "as-of join sides must not share attributes (re-alias the right side)")
     def attr(p: LogicalPlan, name: String): Attribute =

@@ -285,13 +285,10 @@ object IntervalJoinNative {
       outer: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
     val rAliased = right.select(
       (Seq(key, rStart, rEnd) ++ rightCols).distinct.map(c => col(c).as(c)): _*)
-    val la = GraftShims.analyzed(left)
-    val ra = GraftShims.analyzed(rAliased)
+    val la = left.queryExecution.analyzed
+    val ra = rAliased.queryExecution.analyzed
     require(la.outputSet.intersect(ra.outputSet).isEmpty,
       "interval join sides must not share attributes (re-alias the right side)")
     def attr(p: LogicalPlan, name: String): Attribute =

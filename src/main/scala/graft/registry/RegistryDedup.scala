@@ -69,8 +69,6 @@ private[graft] object RegistryDedup {
     // LLM-pipeline tier: dedup / text analysis / similarity search
     "d1_exact_dedup" -> ((s, dir) => Dedup.exactDedup(Tables.documents(s, dir))),
     "d2_dup_stats" -> ((s, dir) => Dedup.dupStats(Tables.documents(s, dir))),
-    // materializeCandidates: the candidate subtree feeds both the semi-join
-    // pruning and the pair join — materializing halves the dominant stage.
     // (The threshold-0.5 hash-seeded variant retired in r9: rows-only at
     // the driver gate; DedupSimilaritySpec still exercises the operator,
     // and d22_minhash_oracle is its hash-green md5-derandomized twin.)
@@ -81,7 +79,7 @@ private[graft] object RegistryDedup {
     // seed → deterministic per dataset, but a qualifying pair CAN miss all
     // bands); DedupSimilaritySpec's "d3b guard" pins the residual to zero
     // on the current fixture by asserting banded == exact all-pairs.
-    "d3b_minhash_highsim" -> ((s, dir) => Dedup.nearDupPairs(Tables.documents(s, dir), threshold = 0.9, materializeCandidates = true)),
+    "d3b_minhash_highsim" -> ((s, dir) => Dedup.nearDupPairs(Tables.documents(s, dir), threshold = 0.9)),
     // maxHamming = 3 → 16-bit chunks, 65k bucket values per chunk: bucket
     // occupancy stays sublinear in corpus size (maxHamming = 8 would leave
     // ~7-bit chunks whose buckets grow linearly — quadratic verify at 100×).
@@ -101,8 +99,7 @@ private[graft] object RegistryDedup {
       val docs = Tables.documents(s, dir)
       val corpus = docs.filter(nb < 12)
       val incoming = docs.filter(nb >= 12)
-      Dedup.incrementalNearDups(Dedup.bandIndex(corpus), corpus, incoming, 0.9,
-        materializeCandidates = true)
+      Dedup.incrementalNearDups(Dedup.bandIndex(corpus), corpus, incoming, 0.9)
     }),
     // (Hash-seeded corpusSignatures registry entry retired in r9 —
     // rows-only at the gate; d5b is its hash-green md5-derandomized twin
@@ -187,7 +184,7 @@ private[graft] object RegistryDedup {
     // 0.9, where LSH recall < 1 would drop pairs; oracle is brute-force
     // all-pairs with the identical integer threshold arithmetic.
     "d18_jaccard_join" -> ((s, dir) =>
-      Dedup.prefixFilterJoin(Tables.documents(s, dir), 4, 5, materialize = true)),
+      Dedup.prefixFilterJoin(Tables.documents(s, dir), 4, 5)),
     // Token-budget mixture sampling: cap each source at 768 tokens in
     // content-addressed hash order. Two-phase (bucket prefix-sums, then a
     // row-level window over ONLY the boundary bucket) — no per-source
@@ -249,7 +246,7 @@ private[graft] object RegistryDedup {
     // contained side keeps its AllPairs prefix, container side indexes
     // all tokens — the asymmetric complement of d18.
     "d19_containment" -> ((s, dir) =>
-      Dedup.containmentJoin(Tables.documents(s, dir), 4, 5, materialize = true)),
+      Dedup.containmentJoin(Tables.documents(s, dir), 4, 5)),
     // EXACT edit-distance join (two-segment pigeonhole) at k=4 on
     // 32-char prefixes: character-SEQUENCE closeness — the typo/OCR
     // regime where one edit kills every shingle crossing it, invisible

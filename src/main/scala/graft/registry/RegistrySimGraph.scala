@@ -26,7 +26,7 @@ private[graft] object RegistrySimGraph {
     // the full wedge volume is intrinsic, not a plan defect. The oracle
     // applies the identical predicates.
     "g2_triangles" -> ((s, dir) =>
-      GraphOps.triangleCount(Tables.lineitem(s, dir), materialize = true,
+      GraphOps.triangleCount(Tables.lineitem(s, dir),
         maxBasket = 8, vertexMod = 2L)),
     // Product families: connected components over the support>=2
     // co-purchase graph (large-star/small-star, per-node min-id labels).

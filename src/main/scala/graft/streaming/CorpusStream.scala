@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Dedup
+import graft.spark.Materialize
 
 /** Streaming CORPUS INGESTION with fuzzy dedup at the gate: each
   * micro-batch of documents is deduplicated (exact, then near-dup within
@@ -50,7 +51,7 @@ object CorpusStream {
     // per transitive near-dup cluster — the d7 convention. A greedy
     // drop-doc_b rule would over-delete chains (a~b, b~c, a!~c leaves
     // cluster {b,c} with no representative once b goes).
-    val nearEdges = Dedup.nearDupPairs(exact, threshold, materializeCandidates = true)
+    val nearEdges = Dedup.nearDupPairs(exact, threshold)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val labels = Dedup.connectedComponents(nearEdges)
     val inBatchUnique = exact
@@ -66,14 +67,13 @@ object CorpusStream {
         val priorCorpus = spark.read.parquet(corpusDir)
           .filter(col("batch_id") =!= batchId)
         val dupNew = Dedup.incrementalNearDups(
-            priorIndex, priorCorpus, inBatchUnique, threshold,
-            materializeCandidates = true)
+            priorIndex, priorCorpus, inBatchUnique, threshold)
           .select(col("new_doc").as("doc_id")).distinct()
         inBatchUnique.join(dupNew, Seq("doc_id"), "left_anti")
       } else inBatchUnique
     // materialize before the writes: the corpus append's lineage reads
     // the corpus directory being written (other partitions)
-    val kept = survivors.localCheckpoint(true)
+    val kept = Materialize(survivors)
     EventStream.writeBatchPartitioned(kept, batchId, corpusDir)
     EventStream.writeBatchPartitioned(Dedup.bandIndex(kept), batchId, indexDir)
   }
@@ -111,7 +111,7 @@ object CorpusStream {
     */
   def eraseBatch(spark: SparkSession, requests: Dataset[Row], batchId: Long,
       corpusDir: String, indexDir: String): Unit = {
-    val ids = requests.toDF().select("doc_id").distinct().localCheckpoint(true)
+    val ids = Materialize(requests.toDF().select("doc_id").distinct())
     def rewriteDir(dir: String): Unit = {
       if (!hasData(spark, dir)) return
       val stored = spark.read.parquet(dir)
@@ -123,9 +123,8 @@ object CorpusStream {
       if (affected.isEmpty) return
       // materialize the survivors BEFORE overwriting their own source
       // partitions (the dedupIngestBatch rationale)
-      val kept = stored.filter(col("batch_id").isin(affected: _*))
-        .join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
+      val kept = Materialize(stored.filter(col("batch_id").isin(affected: _*))
+        .join(broadcast(ids), Seq("doc_id"), "left_anti"))
       val surviving = kept.select("batch_id").distinct()
         .collect().map(_.get(0).toString.toLong).toSet
       kept.write.mode("overwrite")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.spark.Materialize
 
 /** Streaming parity slice (SURVEY.md §2.10 T2).
   *
@@ -214,8 +215,8 @@ object EventStream {
     * against a snapshot that already reflects them, and the merge's no-op
     * branch emits no new versions — the snapshot is a fixpoint of its own
     * replay. The read-then-overwrite of the snapshot directory is
-    * materialized through a localCheckpoint (lazy Spark would delete the
-    * input mid-read); a production deployment on object storage would
+    * materialized first ([[graft.spark.Materialize]]; lazy Spark would
+    * delete the input mid-read); a production deployment on object storage would
     * commit through a transactional table format instead of directory
     * overwrite, but the MERGE semantics are unchanged.
     */
@@ -229,8 +230,7 @@ object EventStream {
         MergeOps.scd2Merge(spark.read.parquet(dimDir), compacted,
           Seq(keyCol), trackedCols, batchId)
       else MergeOps.scd2Init(compacted, batchId)
-    merged.localCheckpoint(true)
-      .write.mode("overwrite").parquet(dimDir)
+    Materialize(merged).write.mode("overwrite").parquet(dimDir)
   }
 
   def runScd2Sink(spark: SparkSession, streamed: DataFrame, dimDir: String,

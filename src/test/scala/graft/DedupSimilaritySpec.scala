@@ -63,7 +63,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     // fixture at the registered 4/5 threshold: candidate completeness on
     // real data, not just the planted toy
     val fixture = Tables.documents(spark, sf001)
-    val got = Dedup.prefixFilterJoin(fixture, 4, 5, materialize = true).collect()
+    val got = Dedup.prefixFilterJoin(fixture, 4, 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val want = brute(fixture, 4L, 5L)
     assert(got === want,
@@ -84,8 +84,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     import graft.functions.TextFunctions.shingles3
     for (sfDir <- Seq(sf0001, sf001)) {
       val fixture = Tables.documents(spark, sfDir)
-      val banded = Dedup.nearDupPairs(fixture, threshold = 0.9,
-        materializeCandidates = true)
+      val banded = Dedup.nearDupPairs(fixture, threshold = 0.9)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val sh = fixture.select(col("doc_id"),
         array_distinct(shingles3(col("text"))).as("sh"))
@@ -113,9 +112,15 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("minhash plan has no cartesian/nested-loop join") {
-    val plan = Dedup.nearDupPairs(docs).queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan)
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    // nearDupPairs materializes its candidates, so the candidate join has
+    // its own plan: check it, and the verify plan above the checkpoint
+    val candidates = Dedup.candidatePairs(Dedup.lshBuckets(
+      Dedup.minhashSignatures(docs, 32), 8, 4))
+    for (df <- Seq(candidates, Dedup.nearDupPairs(docs))) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct"), plan)
+      assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    }
   }
 
   test("simhash: near-identical docs within small hamming, unrelated far") {
@@ -169,6 +174,13 @@ class DedupSimilaritySpec extends SparkTestBase {
       assert(nEx === 1, s"only the incoming side may shuffle, got $nEx:\n$plan")
       assert(cand.count() > 0)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("simhash contract runs its quadratic brute-force leg once") {
+    val plan = Dedup.simhashContract(Tables.documents(spark, sf0001), maxHamming = 3)
+      .queryExecution.executedPlan.toString
+    val n = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
+    assert(n === 1, s"expected one nested-loop join, found $n:\n$plan")
   }
 
   test("simhash contract reports complete+sound vs brute force on the fixture") {
@@ -578,8 +590,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(got.getLong(0) === 6L && got.getLong(1) === 9L, s"v/e: $got")
     // referee on the sf0.001 fixture: degree-ordered == naive triple join
     val fli = Tables.lineitem(spark, sf0001)
-    val oriented = GraphOps.triangleCount(fli, materialize = true)
-      .head().getLong(2)
+    val oriented = GraphOps.triangleCount(fli).head().getLong(2)
     val op = fli.select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
     val e = op.as("a").join(op.as("b"),
         col("a.o") === col("b.o") && col("a.p") < col("b.p"))
@@ -661,8 +672,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     val clusters = Dedup.dupClusters(fixture, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val label = clusters.map(c => c._1 -> c._2).toMap
-    val pairs = Dedup.nearDupPairs(fixture, threshold = 0.9,
-      materializeCandidates = true)
+    val pairs = Dedup.nearDupPairs(fixture, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty)
     pairs.foreach { case (a, b) =>
@@ -698,6 +708,19 @@ class DedupSimilaritySpec extends SparkTestBase {
     // ranking exchange — the property that caps the shuffle at k rows per
     // (query, partition) instead of |corpus|·|Q|
     assert(plan.contains("WindowGroupLimit"), s"expected WindowGroupLimit:\n$plan")
+  }
+
+  test("a zero-norm vector takes no rank in knn join or hard negatives") {
+    // cosine against [0, 0] is NaN, which Spark sorts above every score
+    // and which passes `score >= -1.0`
+    val emb = Seq(1L -> Array(1f, 0f), 2L -> Array(0.9f, 0.1f),
+      3L -> Array(0f, 0f), 4L -> Array(0f, 1f)).toDF("vec_id", "embedding")
+    val knn = Similarity.knnJoin(emb, Seq(1L), k = 2).collect()
+      .map(r => (r.getInt(1), r.getLong(2)))
+    assert(knn.toSeq === Seq((1, 2L), (2, 4L)), knn.mkString(", "))
+    val negs = Similarity.hardNegatives(emb, Seq(1L), skipTop = 1, take = 2).collect()
+      .map(r => (r.getInt(1), r.getLong(2)))
+    assert(negs.toSeq === Seq((2, 4L)), negs.mkString(", "))
   }
 
   test("hard negatives are exactly the knn ranks past the positive block") {

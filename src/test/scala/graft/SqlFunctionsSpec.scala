@@ -1,12 +1,12 @@
 package graft
 
-/** SQL surface of the custom Catalyst expressions: after registration,
-  * plain `spark.sql` can call them (the Athena-style consumption path).
+/** SQL surface of the custom Catalyst expressions: the suite's session
+  * carries `spark.sql.extensions`, so plain `spark.sql` can call them (the
+  * Athena-style consumption path).
   */
 class SqlFunctionsSpec extends SparkTestBase {
 
   test("registered functions are callable from SQL") {
-    GraftFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT simhash64(split('a b c', ' ')) AS sh,
         |       cosine_similarity(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS cs,
@@ -22,7 +22,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("lsh_signature and repetition_counts are callable from SQL") {
-    GraftFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT lsh_signature(array(1.0f, 0.5f), 8) AS sig0,
         |       lsh_signature(array(1.0f, 0.5f), 8, 8) AS sig1,
@@ -39,7 +38,6 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("SQL minhash agrees with the Column-API pipeline") {
-    GraftFunctions.registerAll(spark)
     Tables.documents(spark, sf0001).limit(20).createOrReplaceTempView("docs_v")
     val viaSql = spark.sql(
       "SELECT doc_id, minhash_tokens(split(text, ' '), 32) AS minhash FROM docs_v")
@@ -51,12 +49,10 @@ class SqlFunctionsSpec extends SparkTestBase {
   }
 
   test("extensions class injects the same function set") {
-    // separate session instance so withExtensions actually applies
+    // a derived session inherits the extensions
     val s2 = spark.newSession()
     new GraftExtensions().apply(
       new org.apache.spark.sql.SparkSessionExtensions) // constructs without error
-    // runtime registration on the new session proves the same builders work
-    GraftFunctions.registerAll(s2)
     assert(s2.sql("SELECT cosine_similarity(array(0.0f, 1.0f), array(1.0f, 0.0f)) c")
       .collect().head.getDouble(0) === 0.0)
   }
