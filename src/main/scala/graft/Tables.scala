@@ -67,8 +67,9 @@ object Tables {
 
   /** LAYOUT-ADAPTIVE corpus spread (r11 optimization round): when the
     * documents table collapses to ≤ 2 row groups — i.e. the scan stage is
-    * effectively single-task — redistribute it round-robin across the
-    * cluster before returning it, because every consumer of this table
+    * effectively single-task — spread it round-robin over the shuffle
+    * width ([[graft.spark.Materialize.spread]]) before returning it,
+    * because every consumer of this table
     * runs expensive per-row work (tokenize, shingle, MinHash/SimHash,
     * container synthesis) INSIDE the scan stage, and a one-row-group file
     * serializes all of it into one core (measured at sf0.1: d22's
@@ -83,8 +84,7 @@ object Tables {
     */
   private def spreadIfSingleSplit(spark: SparkSession, df: DataFrame,
       path: String): DataFrame =
-    if (rowGroups(spark, path) <= 2)
-      df.repartition(spark.sparkContext.defaultParallelism)
+    if (rowGroups(spark, path) <= 2) graft.spark.Materialize.spread(df)
     else df
 
   /** `events.ts` has shipped as two different parquet logical types across

@@ -21,7 +21,7 @@ object CollectorJob {
   def run(spark: SparkSession, items: Seq[String], fetch: String => Seq[Row],
       rawPath: String, table: Option[String] = None): Long = {
     val df = Ingest.ingest(spark, items, fetch)
-    Sinks.writePartitioned(df, rawPath, "dataproc")
+    Sinks.writePartitioned(df, rawPath, Seq("dataproc"))
     table.foreach { t =>
       Sinks.createOrReplaceExternal(spark, t, rawPath, Seq("dataproc"))
       Sinks.recoverPartitions(spark, t)
@@ -48,11 +48,11 @@ object TransformJob {
       .withColumn("dataproc", date_format(col("date"), "yyyyMMdd"))
     // partition by processing-date + series key, mirroring the reference's
     // refined/dataproc=YYYYMMDD/ticker=X layout (b3_transform.py:315)
-    Sinks.writePartitioned2(
+    Sinks.writePartitioned(
       refined.select("event_id", "date", "year", "month", "preco_fechamento",
         "volume_negociado", "preco_7d_atras", "preco_30d_atras",
         "variacao_7d", "variacao_30d", "dataproc", "user_id"),
-      refinedPath, "dataproc", "user_id")
+      refinedPath, Seq("dataproc", "user_id"))
     table.foreach { t =>
       Sinks.createOrReplaceExternal(spark, t, refinedPath, Seq("dataproc", "user_id"))
       Sinks.recoverPartitions(spark, t)
@@ -121,9 +121,9 @@ object CorpusPrepJob {
     val shards = TrainingPipeline.curatedSurvivors(docs,
         sampleSixteenths = sampleSixteenths, evalSet = evalSet)
       .withColumn("split", TextOps.splitColumn())
-    Sinks.writePartitioned2(
+    Sinks.writePartitioned(
       shards.select("doc_id", "text", "lang", "nt", "split"),
-      shardsPath, "split", "lang")
+      shardsPath, Seq("split", "lang"))
     table.foreach { t =>
       Sinks.createOrReplaceExternal(spark, t, shardsPath, Seq("split", "lang"))
       Sinks.recoverPartitions(spark, t)

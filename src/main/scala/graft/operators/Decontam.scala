@@ -203,23 +203,10 @@ object Decontam {
       .select(col("train_doc"), col("eval_doc"))
       .distinct()
     // Verification (array_intersect over the full gram arrays) is
-    // compute-dense over byte-SMALL pair rows: AQE's byte-based
-    // coalescing shrank the distinct's output to 1-2 partitions and the
-    // whole verify stage ran single-task (measured r12: two ~1.1 s
-    // one-task stages inside a 4.1 s query). Re-spread the pairs to the
-    // session's configured shuffle width before the arrays attach —
-    // parameterised by conf (spark.sql.shuffle.partitions), not a local
-    // constant; at production scale the candidate set is byte-large and
-    // AQE would size it correctly anyway, so the pin only matters where
-    // the byte heuristic misjudges compute density (guide §2.5's
-    // compute-dense small-shuffle case).
-    // Keyed by train_doc ALONE: join 1's key (so the exchange satisfies
-    // a non-broadcast join's requirement at scale), and — unlike a
-    // (train_doc, eval_doc) repartition — not provably redundant with
-    // the distinct's partitioning, which the optimizer would erase
-    // (observed r12), putting the verify back on the coalesced reader.
-    val nPart = train.sparkSession.sessionState.conf.numShufflePartitions
-    cand.repartition(nPart, col("train_doc"))
+    // compute-dense over byte-small pair rows: spread them first. Keyed by
+    // train_doc alone, join 1's key: a (train_doc, eval_doc) spread would
+    // repeat the distinct's partitioning, and the optimizer erases it.
+    Materialize.spread(cand, col("train_doc"))
       .join(tArr.select(col("train_doc"), col("n_t"), col("sh_t")), "train_doc")
       .join(eArr.select(col("eval_doc"), col("n_e"), col("sh_e")), "eval_doc")
   }

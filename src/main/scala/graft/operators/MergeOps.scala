@@ -419,13 +419,12 @@ object MergeOps {
     */
   def bitemporalAsOf(orders: DataFrame): DataFrame = {
     val D = java.time.LocalDate.of(1995, 6, 1).toEpochDay // knowledge + valid cut
-    def nib(pos: Int): Column = instr(lit("0123456789abcdef"),
-      substring(md5(col("o_orderkey").cast("string")), pos, 1)) - 1
     val o = orders.select(
       col("o_orderkey").as("k"), col("o_orderpriority").as("pr"),
       datediff(col("o_orderdate"), lit("1970-01-01").cast("date")).cast("long").as("d0"),
       round(col("o_totalprice") * 100).cast("long").as("cents"),
-      nib(1).as("n1"), nib(2).as("n2"))
+      TextOps.hexNibble("o_orderkey").as("n1"),
+      TextOps.hexNibble("o_orderkey", 2).as("n2"))
     val assertions = o.select(col("k"), col("pr"), col("d0").as("txn"),
         col("d0").as("vd"), col("cents"))
       .unionByName(o.filter(col("n1") < 4).select(col("k"), col("pr"),

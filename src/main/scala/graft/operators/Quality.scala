@@ -65,7 +65,8 @@ object Quality {
   }
 
   /** Backtick-quote an identifier for `col(...)` resolution, escaping
-    * embedded backticks (mirror of `Sinks.analyzeTable`'s quoting).
+    * embedded backticks (the one-part form of `Sinks.quoteParts`, which
+    * quotes every dotted part of a catalog name).
     */
   private def quoteIdent(name: String): String =
     "`" + name.replace("`", "``") + "`"
@@ -180,14 +181,12 @@ object Quality {
     * nibble₁ splits base/inserts, nibble₂ marks deletes inside base.
     */
   def retractableAggContract(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{instr, md5, substring}
-    def nib(pos: Int): Column = instr(lit("0123456789abcdef"),
-      substring(md5(col("event_id").cast("string")), pos, 1)) - 1
     val e = events
       .filter(col("ts").isNotNull && col("value").isNotNull && col("event_type").isNotNull)
       .select(col("event_type"), col("event_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        nib(1).as("n1"), nib(2).as("n2"))
+        TextOps.hexNibble("event_id").as("n1"),
+        TextOps.hexNibble("event_id", 2).as("n2"))
     val base = e.filter(col("n1") < 12)
     val inserts = e.filter(col("n1") >= 12)
     val deletes = base.filter(col("n2") >= 12)

@@ -462,16 +462,18 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Value of the first hex digit of md5(key) in [0,16) — `instr` over the
-    * hex alphabet rather than `conv`, because the oracle engine has the
-    * same `instr`/`strpos` semantics (1-based, 0 when absent). Public:
-    * the engine's standard content-addressed split/sample rule (t7, t8,
-    * d8, d9, d10 all derive their deterministic subsets from it).
+  /** Value of the `pos`-th (1-based) hex digit of md5(key) in [0,16) —
+    * `instr` over the hex alphabet rather than `conv`, because the oracle
+    * engine has the same `instr`/`strpos` semantics (1-based, 0 when
+    * absent). Public: the engine's standard content-addressed split/sample
+    * rule (t7, t8, d8, d9, d10 all derive their deterministic subsets from
+    * the first digit; bitemporal and retraction scenarios from the first
+    * two).
     */
-  def hexNibble(keyCol: String) = {
+  def hexNibble(keyCol: String, pos: Int = 1) = {
     import org.apache.spark.sql.functions.{instr, md5, substring}
     instr(lit("0123456789abcdef"),
-      substring(md5(col(keyCol).cast("string")), 1, 1)) - 1
+      substring(md5(col(keyCol).cast("string")), pos, 1)) - 1
   }
 
   /** Corpus-wide TOP-k 5-gram phrases via the native streaming generator

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.spark.Materialize
 
 /** Sink/catalog inventory (SURVEY.md §2.9, K1-K5).
   *
@@ -12,44 +13,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale notes: Hive-style `partitionBy` directories are what make
   * downstream partition pruning possible — the refined layout
   * `dataproc=…/ticker=…` means a per-ticker query reads one directory out
-  * of thousands. Writers must avoid the small-files problem at 100 TB:
-  * callers repartition by the partition columns first so each partition
-  * directory gets few large files, not `numShufflePartitions` shards.
+  * of thousands. [[writePartitioned]] and [[saveAsManagedTable]] own that
+  * layout: they spread the rows by the partition columns
+  * ([[graft.spark.Materialize.spread]]) before writing, so each directory
+  * gets one file, not `numShufflePartitions` shards, and the directories
+  * are written in parallel by the shuffle width's tasks, not one after
+  * another by a single task.
   */
 object Sinks {
 
-  /** K1: 1-level partitioned parquet overwrite. */
-  def writePartitioned(df: DataFrame, path: String, col: String): Unit =
-    df.repartition(df.col(col))
-      .write.mode("overwrite").partitionBy(col).parquet(path)
-
-  /** K2: 2-level partitioned parquet overwrite (`dataproc`/`ticker`). */
-  def writePartitioned2(df: DataFrame, path: String, c1: String, c2: String): Unit =
-    df.repartition(df.col(c1), df.col(c2))
-      .write.mode("overwrite").partitionBy(c1, c2).parquet(path)
-
-  /** Format-generic columnar write — same layout discipline as the
-    * parquet writers (repartition by partition columns first, one
-    * directory tree). "parquet" and "orc" both ship in Spark with full
-    * predicate-pushdown + column-pruning support (the spec pins
+  /** K1/K2: partitioned overwrite of `path`, one directory level per
+    * column of `partitionCols` (the raw `dataproc` layout, the refined
+    * `dataproc`/`ticker` one). "parquet" and "orc" both ship in Spark
+    * with full predicate-pushdown + column-pruning support (the spec pins
     * PushedFilters on the ORC read path); ORC matters for interop with
     * Hive-lineage warehouses that mandate it, parquet is the default
     * everywhere else. Text formats (csv/json) deliberately NOT accepted
     * here: they lose types and pushdown, and quarantine-reading them is
     * [[Ingest]]'s job.
     */
-  def writeColumnar(df: DataFrame, path: String, format: String = "parquet",
-      partitionCols: Seq[String] = Nil): Unit = {
+  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
+      format: String = "parquet"): Unit = {
     require(Set("parquet", "orc").contains(format),
-      s"writeColumnar: columnar formats only (parquet|orc), got '$format'")
-    val repartitioned =
-      if (partitionCols.isEmpty) df
-      else df.repartition(partitionCols.map(df.col): _*)
-    repartitioned.write.mode("overwrite")
-      .partitionBy(partitionCols: _*).format(format).save(path)
+      s"writePartitioned: columnar formats only (parquet|orc), got '$format'")
+    laidOut(df, partitionCols).format(format).save(path)
   }
 
-  /** Read counterpart of [[writeColumnar]] (partition discovery included). */
+  /** The overwrite writer of `df` spread and partitioned by `partitionCols`. */
+  private def laidOut(df: DataFrame, partitionCols: Seq[String]) =
+    Materialize.spread(df, partitionCols.map(df.col): _*)
+      .write.mode("overwrite").partitionBy(partitionCols: _*)
+
+  /** Read counterpart of [[writePartitioned]] (partition discovery included). */
   def readColumnar(spark: SparkSession, path: String,
       format: String = "parquet"): DataFrame = {
     require(Set("parquet", "orc").contains(format),
@@ -74,8 +69,10 @@ object Sinks {
       if (partitionCols.nonEmpty)
         partitionCols.map(c => s"`$c`").mkString(" PARTITIONED BY (", ", ", ")")
       else ""
+    // the path is a SQL string literal: escape its backslashes and quotes
+    val pathLit = path.replace("\\", "\\\\").replace("'", "\\'")
     spark.sql(
-      s"CREATE TABLE $table ($colsDdl) USING parquet OPTIONS (path '$path')$partClause")
+      s"CREATE TABLE $table ($colsDdl) USING parquet OPTIONS (path '$pathLit')$partClause")
   }
 
   /** K3 update-in-place: evolve a LIVE external table's schema to the
@@ -137,8 +134,7 @@ object Sinks {
 
   /** K3 managed variant: `saveAsTable` with partitioning. */
   def saveAsManagedTable(df: DataFrame, table: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*)
-      .format("parquet").saveAsTable(table)
+    laidOut(df, partitionCols).format("parquet").saveAsTable(table)
 
   /** Bucketed managed table: pre-shuffles data into `numBuckets` by the
     * join key at WRITE time, so repeated joins/aggregations on that key
@@ -169,11 +165,9 @@ object Sinks {
       columns: Seq[String] = Nil): Unit = {
     // backtick-quote every identifier part: unquoted interpolation breaks
     // (or injects) on names that need quoting (`my-db.my table`)
-    def q(ident: String) = ident.split('.')
-      .map(p => "`" + p.replace("`", "``") + "`").mkString(".")
-    spark.sql(s"ANALYZE TABLE ${q(table)} COMPUTE STATISTICS")
+    spark.sql(s"ANALYZE TABLE ${quoteParts(table)} COMPUTE STATISTICS")
     if (columns.nonEmpty)
-      spark.sql(s"ANALYZE TABLE ${q(table)} COMPUTE STATISTICS FOR COLUMNS ${columns.map(q).mkString(", ")}")
+      spark.sql(s"ANALYZE TABLE ${quoteParts(table)} COMPUTE STATISTICS FOR COLUMNS ${columns.map(quoteParts).mkString(", ")}")
   }
 
   /** Small-file COMPACTION: rewrite a parquet directory into
@@ -395,22 +389,6 @@ object Sinks {
       .orderBy("shard")
   }
 
-  /** COMPACTION PLANNING as a query — the bin assignment step of
-    * OPTIMIZE/small-file compaction, run BEFORE any rewrite I/O: within
-    * each partition (ship month), the per-writer row groups ("files",
-    * here the per-supplier row counts a supplier-sharded ingest
-    * produces) are laid out in a stable key order and cut into target
-    * bins by exclusive-prefix-sum division — `cumsum_before div
-    * capacity` — which is exactly how a sequential coalesce packs
-    * row-runs into target-size output files. The plan is pure metadata:
-    * one sort-window per partition over file STATISTICS (thousands of
-    * rows per partition at 100 TB — never the data), then two keyed
-    * aggregates. The summary per partition is what an OPTIMIZE
-    * scheduler triages on: how many input files, how many output bins,
-    * the worst bin's overshoot (a single file larger than the capacity
-    * must exceed it — bins never split a file), and how many bins land
-    * under half-capacity (the re-fragmentation signal).
-    */
   /** DATA-SKIPPING EFFECTIVENESS audit — zone-map (min/max) statistics
     * per "file" (the same per-(month, supplier) row groups
     * [[compactionPlan]] bins), scored against a representative
@@ -443,6 +421,22 @@ object Sinks {
       .orderBy("month")
   }
 
+  /** COMPACTION PLANNING as a query — the bin assignment step of
+    * OPTIMIZE/small-file compaction, run BEFORE any rewrite I/O: within
+    * each partition (ship month), the per-writer row groups ("files",
+    * here the per-supplier row counts a supplier-sharded ingest
+    * produces) are laid out in a stable key order and cut into target
+    * bins by exclusive-prefix-sum division — `cumsum_before div
+    * capacity` — which is exactly how a sequential coalesce packs
+    * row-runs into target-size output files. The plan is pure metadata:
+    * one sort-window per partition over file STATISTICS (thousands of
+    * rows per partition at 100 TB — never the data), then two keyed
+    * aggregates. The summary per partition is what an OPTIMIZE
+    * scheduler triages on: how many input files, how many output bins,
+    * the worst bin's overshoot (a single file larger than the capacity
+    * must exceed it — bins never split a file), and how many bins land
+    * under half-capacity (the re-fragmentation signal).
+    */
   def compactionPlan(lineitem: DataFrame, capacity: Long = 200L): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window

@@ -16,9 +16,27 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - [[round]] releases the round the next one supersedes;
   *  - [[cached]] pins a loop invariant for the length of a loop;
   *  - [[observeCount]] / [[observedCount]] / [[observedMetric]] read
-  *    `observe()` metrics with a fallback job.
+  *    `observe()` metrics with a fallback job;
+  *  - [[spread]] is the one rule for a shuffle's width.
   */
 object Materialize {
+
+  /** `df` spread over the session's shuffle width
+    * (`spark.sql.shuffle.partitions`): a hash repartition by `keys`, or a
+    * round-robin one when no keys are given.
+    *
+    * The count is explicit, so the exchange is a `REPARTITION_BY_NUM`
+    * shuffle, which AQE never coalesces. AQE sizes partitions by bytes,
+    * and a byte-small shuffle that feeds compute- or file-dense work (a
+    * verify join over pair rows, ~190 partition directories written one
+    * file each) would otherwise run as one task, its rows processed one
+    * after another. At production scale the input is byte-large and the
+    * width is the one AQE would pick anyway. Rows with equal keys still
+    * meet in one partition, so a write partitioned by `keys` still gives
+    * each directory one file.
+    */
+  def spread(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
 
   /** `df` materialized: a local, eager checkpoint. */
   def apply(df: DataFrame): DataFrame = df.localCheckpoint(true)

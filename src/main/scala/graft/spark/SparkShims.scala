@@ -22,7 +22,7 @@ object GraftShims {
 
   /** Drain the scheduler's listener bus (private[spark]) so a probe's
     * per-query job/stage/task counters are complete before reading them.
-    * Dev tooling only (StatsProbe).
+    * Dev tooling and specs only (StatsProbe, IngestSinkSpec's write width).
     */
   def waitListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Dedup
 import graft.spark.Materialize
 
@@ -80,16 +79,9 @@ object CorpusStream {
 
   def runDedupIngestSink(spark: SparkSession, streamed: DataFrame,
       corpusDir: String, indexDir: String, checkpoint: String,
-      threshold: Double = 0.9): Unit = {
-    val q = streamed.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        dedupIngestBatch(spark, batch, batchId, corpusDir, indexDir, threshold)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      threshold: Double = 0.9): Unit =
+    EventStream.runBatches(streamed, checkpoint)(
+      dedupIngestBatch(spark, _, _, corpusDir, indexDir, threshold))
 
   /** One micro-batch of ERASURE requests (`doc_id` rows) against the
     * ingested corpus and its persisted band index — the CONTINUOUS form
@@ -147,14 +139,7 @@ object CorpusStream {
     * doc_ids is applied to corpus + band index via [[eraseBatch]].
     */
   def runErasureSink(spark: SparkSession, requests: DataFrame,
-      corpusDir: String, indexDir: String, checkpoint: String): Unit = {
-    val q = requests.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        eraseBatch(spark, batch, batchId, corpusDir, indexDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      corpusDir: String, indexDir: String, checkpoint: String): Unit =
+    EventStream.runBatches(requests, checkpoint)(
+      eraseBatch(spark, _, _, corpusDir, indexDir))
 }

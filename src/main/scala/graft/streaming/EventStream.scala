@@ -192,16 +192,21 @@ object EventStream {
       .parquet(targetDir)
 
   def runForeachBatchSink(spark: SparkSession, streamed: DataFrame,
-      targetDir: String, checkpoint: String): Unit = {
-    val q = streamed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeBatchIdempotent(batch, batchId, targetDir)
-      }
+      targetDir: String, checkpoint: String): Unit =
+    runBatches(streamed, checkpoint)(writeBatchIdempotent(_, _, targetDir))
+
+  /** Runs `body` on each micro-batch of the input `streamed` has now
+    * (`Trigger.AvailableNow`), with its progress in `checkpoint`, and
+    * returns when the query ends: the one driver of the foreachBatch
+    * sinks here and in [[CorpusStream]].
+    */
+  private[streaming] def runBatches(streamed: DataFrame, checkpoint: String)(
+      body: (Dataset[org.apache.spark.sql.Row], Long) => Unit): Unit =
+    streamed.writeStream.foreachBatch(body)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 
   /** Streaming SCD2 upsert: maintain a VERSIONED dimension snapshot from a
     * change-data stream. Each micro-batch is (1) compacted latest-wins per
@@ -235,16 +240,9 @@ object EventStream {
 
   def runScd2Sink(spark: SparkSession, streamed: DataFrame, dimDir: String,
       checkpoint: String, keyCol: String, ordCol: String,
-      trackedCols: Seq[String]): Unit = {
-    val q = streamed.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        scd2UpsertBatch(spark, batch, batchId, dimDir, keyCol, ordCol, trackedCols)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      trackedCols: Seq[String]): Unit =
+    runBatches(streamed, checkpoint)(
+      scd2UpsertBatch(spark, _, _, dimDir, keyCol, ordCol, trackedCols))
 
   /** Stream-stream inner join within an event-time interval: for each
     * purchase, the same user's clicks in the preceding `window`. BOTH

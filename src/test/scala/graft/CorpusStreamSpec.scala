@@ -129,4 +129,50 @@ class CorpusStreamSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSet
     assert(replayed === Set(2L, 7L, 8L), "erasure replay must be a no-op")
   }
+
+  test("the erasure sink streams requests after the ingest sink, deletes emptied partitions") {
+    val rawDir = tmpDir("erase-stream-raw")
+    val requestDir = tmpDir("erase-stream-requests")
+    val corpusDir = tmpDir("erase-stream-store")
+    val indexDir = tmpDir("erase-stream-index")
+    val ingestCkpt = tmpDir("erase-stream-ingest-ckpt")
+    val eraseCkpt = tmpDir("erase-stream-erase-ckpt")
+    def ingest(rows: Seq[(Long, String)]): Unit = {
+      rows.toDF("doc_id", "text").write.mode("append").parquet(rawDir)
+      CorpusStream.runDedupIngestSink(spark,
+        spark.readStream.schema("doc_id LONG, text STRING").parquet(rawDir),
+        corpusDir, indexDir, ingestCkpt)
+    }
+    def erase(ids: Seq[Long]): Unit = {
+      ids.toDF("doc_id").write.mode("append").parquet(requestDir)
+      CorpusStream.runErasureSink(spark,
+        spark.readStream.schema("doc_id LONG").parquet(requestDir),
+        corpusDir, indexDir, eraseCkpt)
+    }
+    def corpusIds() = spark.read.parquet(corpusDir).select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    // three ingested batches: 0 holds {1,2}, 1 holds {4}, 2 holds {7,8}
+    ingest(Seq((1L, baseText), (2L, "completely different short doc")))
+    ingest(Seq((4L, novelText)))
+    ingest(Seq((7L, (1 to 40).map(i => s"y$i").mkString(" ")),
+      (8L, (1 to 40).map(i => s"z$i").mkString(" "))))
+    assert(corpusIds() === Set(1L, 2L, 4L, 7L, 8L))
+    assert(new java.io.File(corpusDir, "batch_id=1").exists())
+    val untouchedBefore = spark.read.parquet(corpusDir)
+      .filter(col("batch_id") === 2).collect().map(_.toString).toSet
+
+    // erase doc 1 (partition 0 keeps doc 2) and doc 4 (partition 1 empties)
+    erase(Seq(1L, 4L))
+    assert(corpusIds() === Set(2L, 7L, 8L))
+    assert(!new java.io.File(corpusDir, "batch_id=1").exists(),
+      "fully-erased partition must be deleted, not left as stale bytes")
+    assert(spark.read.parquet(indexDir).select("doc_id")
+      .collect().map(_.getLong(0)).toSet === Set(2L, 7L, 8L))
+    assert(spark.read.parquet(corpusDir).filter(col("batch_id") === 2)
+      .collect().map(_.toString).toSet === untouchedBefore)
+
+    // a later request batch that repeats erased ids changes nothing
+    erase(Seq(1L, 4L))
+    assert(corpusIds() === Set(2L, 7L, 8L), "erasure replay must be a no-op")
+  }
 }

@@ -95,11 +95,11 @@ class IngestSinkSpec extends SparkTestBase {
   test("K1/K2: partitioned writes produce hive-style directory layouts") {
     val df = Ingest.ingest(spark, Seq("AAA.SA", "BBB.SA"), fakeFetch)
     val p1 = tmpDir("sink1")
-    Sinks.writePartitioned(df, p1, "dataproc")
+    Sinks.writePartitioned(df, p1, Seq("dataproc"))
     assert(new java.io.File(p1).listFiles().exists(_.getName.startsWith("dataproc=")))
 
     val p2 = tmpDir("sink2")
-    Sinks.writePartitioned2(df, p2, "dataproc", "ticker")
+    Sinks.writePartitioned(df, p2, Seq("dataproc", "ticker"))
     val lvl1 = new java.io.File(p2).listFiles().filter(_.getName.startsWith("dataproc="))
     assert(lvl1.nonEmpty)
     val lvl2 = lvl1.head.listFiles().filter(_.getName.startsWith("ticker="))
@@ -108,6 +108,38 @@ class IngestSinkSpec extends SparkTestBase {
     val back = spark.read.parquet(p2)
     assert(back.count() === 10)
     assert(back.schema.fieldNames.contains("ticker"))
+  }
+
+  test("K1/K2: the partitioned write runs shuffle-width tasks, one file per directory") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+    import spark.implicits._
+    // 40 byte-small rows in 10 (dataproc, ticker) directories: AQE sizes
+    // a shuffle by bytes and would coalesce this one into a single task
+    val df = (0 until 40).map(i => (s"2024010${i % 2}", s"T${i % 5}", i.toLong))
+      .toDF("dataproc", "ticker", "v")
+    val path = tmpDir("sink-width")
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Sinks.writePartitioned(df, path, Seq("dataproc", "ticker"))
+      org.apache.spark.sql.GraftShims.waitListenerBus(spark, 10000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the write job's result stage is the last stage to run
+    val write = stages.asScala.maxBy(_.stageId)
+    assert(write.numTasks === spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"write stage ${write.name} ran ${write.numTasks} tasks")
+    val leaves = new java.io.File(path).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(_.isDirectory))
+    assert(leaves.length === 10)
+    leaves.foreach { d =>
+      assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1, d.toString)
+    }
+    assert(spark.read.parquet(path).count() === 40)
   }
 
   test("JSONL shard export: manifest attests the files; re-export is deterministic") {
@@ -134,7 +166,7 @@ class IngestSinkSpec extends SparkTestBase {
   test("K3/K4: external table create-or-replace + recoverPartitions") {
     val df = Ingest.ingest(spark, Seq("AAA.SA", "BBB.SA"), fakeFetch)
     val path = tmpDir("ext")
-    Sinks.writePartitioned2(df, path, "dataproc", "ticker")
+    Sinks.writePartitioned(df, path, Seq("dataproc", "ticker"))
     Sinks.createOrReplaceExternal(spark, "stocks_ext", path, Seq("dataproc", "ticker"))
     Sinks.recoverPartitions(spark, "stocks_ext")
     assert(spark.table("stocks_ext").count() === 10)
@@ -144,10 +176,19 @@ class IngestSinkSpec extends SparkTestBase {
     assert(spark.table("stocks_ext").count() === 10)
   }
 
+  test("K3: an external table over a path holding a quote") {
+    val df = Ingest.ingest(spark, Seq("AAA.SA"), fakeFetch)
+    val path = tmpDir("ext'quoted")
+    Sinks.writePartitioned(df, path, Seq("dataproc", "ticker"))
+    Sinks.createOrReplaceExternal(spark, "stocks_quoted", path, Seq("dataproc", "ticker"))
+    Sinks.recoverPartitions(spark, "stocks_quoted")
+    assert(spark.table("stocks_quoted").count() === 5)
+  }
+
   test("K3 evolution: live external table gains new file columns in place") {
     val df = Ingest.ingest(spark, Seq("AAA.SA", "BBB.SA"), fakeFetch)
     val path = tmpDir("evolve")
-    Sinks.writePartitioned2(df, path, "dataproc", "ticker")
+    Sinks.writePartitioned(df, path, Seq("dataproc", "ticker"))
     // first probe: table absent -> create branch
     assert(Sinks.createOrEvolveExternal(spark, "stocks_evolve", path,
       Seq("dataproc", "ticker")) === Seq.empty)
@@ -206,7 +247,7 @@ class IngestSinkSpec extends SparkTestBase {
       ("20240401", 4L), ("20240401", 5L)
     ).toDF("dataproc", "v")
     val path = tmpDir("retention")
-    Sinks.writePartitioned(df, path, "dataproc")
+    Sinks.writePartitioned(df, path, Seq("dataproc"))
     val audit = Sinks.retentionSweep(path, "dataproc", keepFrom = "20240301")
     // both pre-cutoff partitions dropped, each with >= 1 data file
     assert(audit.map(_._1) === Seq("20240101", "20240215"))
@@ -222,7 +263,7 @@ class IngestSinkSpec extends SparkTestBase {
     val df2 = Seq(("20240101", "AAA", 1L), ("20240101", "BBB", 2L),
       ("20240401", "AAA", 3L)).toDF("dataproc", "ticker", "v")
     val path2 = tmpDir("retention2")
-    Sinks.writePartitioned2(df2, path2, "dataproc", "ticker")
+    Sinks.writePartitioned(df2, path2, Seq("dataproc", "ticker"))
     val audit2 = Sinks.retentionSweep(path2, "dataproc", "20240301")
     assert(audit2.map(_._1) === Seq("20240101"))
     assert(audit2.head._2 >= 2, "both nested ticker partitions' files counted")
@@ -250,13 +291,13 @@ class IngestSinkSpec extends SparkTestBase {
   test("ORC round-trip: data equality, partition discovery, filter pushdown") {
     val li = Tables.lineitem(spark, sf0001)
     val dir = tmpDir("graft-orc")
-    sources.Sinks.writeColumnar(li, s"$dir/flat", "orc")
+    sources.Sinks.writePartitioned(li, s"$dir/flat", Nil, "orc")
     val back = sources.Sinks.readColumnar(spark, s"$dir/flat", "orc")
     assert(back.schema === li.schema)
     assert(back.count() === li.count())
     assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
     // partitioned variant discovers the partition column on read
-    sources.Sinks.writeColumnar(li, s"$dir/part", "orc", Seq("l_returnflag"))
+    sources.Sinks.writePartitioned(li, s"$dir/part", Seq("l_returnflag"), "orc")
     val part = sources.Sinks.readColumnar(spark, s"$dir/part", "orc")
     assert(part.columns.contains("l_returnflag"))
     assert(part.count() === li.count())
@@ -268,7 +309,7 @@ class IngestSinkSpec extends SparkTestBase {
       s"ORC pushdown missing:\n$plan")
     // text formats are rejected loudly
     val e = intercept[IllegalArgumentException] {
-      sources.Sinks.writeColumnar(li, s"$dir/csv", "csv")
+      sources.Sinks.writePartitioned(li, s"$dir/csv", Nil, "csv")
     }
     assert(e.getMessage.contains("columnar"))
   }

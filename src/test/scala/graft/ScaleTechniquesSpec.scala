@@ -63,7 +63,7 @@ class ScaleTechniquesSpec extends SparkTestBase {
     val df = Tables.events(spark, sf0001)
       .withColumn("etype", col("event_type"))
     val dir = tmpDir("partfiles")
-    Sinks.writePartitioned(df, dir, "etype")
+    Sinks.writePartitioned(df, dir, Seq("etype"))
     val dirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("etype="))
     assert(dirs.nonEmpty)
     dirs.foreach { d =>
