@@ -117,7 +117,8 @@ object TextFunctions {
     val joined = (2 to k).foldLeft(slice(toks, lit(1), m)) { (acc, i) =>
       zip_with(acc, slice(toks, lit(i), m), (a, b) => concat_ws(" ", a, b))
     }
-    when(size(toks) >= k, joined).otherwise(typedlit(Seq.empty[String]))
+    // a cast empty array(): no Scala-reflection encoder, unlike typedlit
+    when(size(toks) >= k, joined).otherwise(array().cast("array<string>"))
   }
 
   /** Document fingerprint: full-text md5. */

@@ -21,11 +21,7 @@ object CollectorJob {
   def run(spark: SparkSession, items: Seq[String], fetch: String => Seq[Row],
       rawPath: String, table: Option[String] = None): Long = {
     val df = Ingest.ingest(spark, items, fetch)
-    Sinks.writePartitioned(df, rawPath, Seq("dataproc"))
-    table.foreach { t =>
-      Sinks.createOrReplaceExternal(spark, t, rawPath, Seq("dataproc"))
-      Sinks.recoverPartitions(spark, t)
-    }
+    Sinks.publishPartitioned(df, rawPath, Seq("dataproc"), table)
     spark.read.parquet(rawPath).count()
   }
 }
@@ -48,15 +44,11 @@ object TransformJob {
       .withColumn("dataproc", date_format(col("date"), "yyyyMMdd"))
     // partition by processing-date + series key, mirroring the reference's
     // refined/dataproc=YYYYMMDD/ticker=X layout (b3_transform.py:315)
-    Sinks.writePartitioned(
+    Sinks.publishPartitioned(
       refined.select("event_id", "date", "year", "month", "preco_fechamento",
         "volume_negociado", "preco_7d_atras", "preco_30d_atras",
         "variacao_7d", "variacao_30d", "dataproc", "user_id"),
-      refinedPath, Seq("dataproc", "user_id"))
-    table.foreach { t =>
-      Sinks.createOrReplaceExternal(spark, t, refinedPath, Seq("dataproc", "user_id"))
-      Sinks.recoverPartitions(spark, t)
-    }
+      refinedPath, Seq("dataproc", "user_id"), table)
     spark.read.parquet(refinedPath).count()
   }
 
@@ -121,13 +113,9 @@ object CorpusPrepJob {
     val shards = TrainingPipeline.curatedSurvivors(docs,
         sampleSixteenths = sampleSixteenths, evalSet = evalSet)
       .withColumn("split", TextOps.splitColumn())
-    Sinks.writePartitioned(
+    Sinks.publishPartitioned(
       shards.select("doc_id", "text", "lang", "nt", "split"),
-      shardsPath, Seq("split", "lang"))
-    table.foreach { t =>
-      Sinks.createOrReplaceExternal(spark, t, shardsPath, Seq("split", "lang"))
-      Sinks.recoverPartitions(spark, t)
-    }
+      shardsPath, Seq("split", "lang"), table)
     spark.read.parquet(shardsPath)
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"), sum("nt").as("n_tokens"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions.{tokens, shinglesKTokens, shingles3Tokens}
+import graft.functions.TextFunctions.{tokens, shinglesKTokens}
 import graft.spark.Materialize
 
 /** Benchmark DECONTAMINATION: flag training documents that share any
@@ -119,81 +119,44 @@ object Decontam {
     * nobody's prefix — no single join key can carry
     * |train| × |eval| pairs, the skewed-reducer failure mode at 100 TB.
     * Candidates (distinct doc pairs passing the length filter
-    * min·t ≤ max) are then exact-verified by one array_intersect against
-    * the full ordered gram arrays — Jaccard = i/(|A|+|B|−i), no second
-    * shingle pass. (An LSH prefilter would trade recall for nothing
-    * here: at benchmark-scale eval sets the exact prefix form is
-    * strictly better.)
+    * min·t ≤ max) are then exact-verified by [[SetOverlap.overlap]] over
+    * the gram table, no second shingle pass. (An LSH prefilter would trade
+    * recall for nothing at benchmark-scale eval sets.)
     */
   def fuzzyDecontaminate(train: DataFrame, evalSet: DataFrame,
       minJaccard: Double = 0.5): DataFrame =
     fuzzyCandidates(train, evalSet, minJaccard)
-      // OnceGate pins array_intersect — the per-candidate O(|A|+|B|)
-      // verification kernel — to ONE evaluation site (r12, guide §4.4's
-      // mechanism): without it the optimizer pushes the jaccard filter
-      // into the verification join's CONDITION and re-derives jaccard in
-      // the output projection — the final plan showed THREE
-      // array_intersect evaluations per matched row (two in the BHJ
-      // condition, one in the project).
-      .withColumn("i", graft.functions.OnceGate.once(
-        size(array_intersect(col("sh_t"), col("sh_e"))).cast("long")))
-      .select(col("train_doc"), col("eval_doc"),
-        round(col("i").cast("double") / (col("n_t") + col("n_e") - col("i")), 4)
-          .as("jaccard"))
+      .select(col("train_doc"), col("eval_doc"), SetOverlap.jaccard.as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
       .orderBy("train_doc", "eval_doc")
 
-  /** Candidate pairs (with both gram arrays attached for verification)
-    * from the prefix-filtered gram join. Split out so the spec can assert
-    * the prune: candidate count must sit far below the naive gram-join's
+  /** Candidate pairs from the prefix-filtered gram join, with their
+    * [[SetOverlap.overlap]] counts. Split out so the spec can assert the
+    * prune: candidate count must sit far below the naive gram-join's
     * colliding-pair count.
     */
   private[graft] def fuzzyCandidates(train: DataFrame, evalSet: DataFrame,
       minJaccard: Double): DataFrame = {
-    // ONE tagged scan feeds everything: the two sides union FIRST (side
-    // tag 0/1 keeps same-id docs on opposite sides distinct), so the
-    // expensive tokenize→shingle pipeline and the df aggregate run over
-    // one stream instead of once per side — and because df must be
-    // computed over the UNION anyway (a gram's rank must agree between a
-    // train doc and an eval doc or the prefix theorem doesn't hold
-    // across the join), the union costs nothing extra. Tokens are
-    // projected before the shingle builder (shingles3Tokens contract —
-    // the inline form re-splits the text per reference).
+    // ONE tagged gram table over both sides: side tag 0/1 keeps same-id
+    // docs on opposite sides distinct, the tokenize→shingle pipeline runs
+    // over one stream, and df counts over the UNION, as it must (a gram's
+    // rank must agree between a train doc and an eval doc or the prefix
+    // theorem doesn't hold across the join).
     def side(df: DataFrame, tag: Int) =
       df.select(col("doc_id"), lit(tag).as("side"), col("text"))
-    val tok = side(train, 0).unionByName(side(evalSet, 1))
-      .select(col("doc_id"), col("side"), col("text"),
-        tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("side"),
-        explode(array_distinct(shingles3Tokens(col("toks"), col("text"))))
-          .as("gram"))
-    val dfreq = tok.groupBy("gram").agg(count(lit(1)).as("df"))
     // Prefix length n − ceil(t·n) + 1, with an epsilon slack inside the
     // ceil so FP rounding can only LENGTHEN a prefix (hurts pruning a
     // hair, never recall).
-    //
-    // The ordered-array frame is consumed FOUR times (two prefix sides,
-    // two verification joins); without truncation the shingle+df+sort
-    // lineage re-executes per consumer — measured 17.6 s → ~3 s at sf0.1
-    // with the checkpoint.
-    val ordered = Materialize(tok.join(dfreq, "gram")
-      .groupBy("doc_id", "side")
-      .agg(array_sort(collect_list(struct(col("df"), col("gram")))).as("ord"),
-        count(lit(1)).as("n"))
-      .select(col("doc_id"), col("side"), col("n"),
-        expr("transform(ord, x -> x.gram)").as("sh"))
+    val ordered = SetOverlap.dfOrdered(
+        side(train, 0).unionByName(side(evalSet, 1)), "doc_id", "side")
       .withColumn("p",
-        (col("n") - ceil(lit(minJaccard) * col("n") - lit(1e-9)) + 1).cast("int")))
+        (col("n") - ceil(lit(minJaccard) * col("n") - lit(1e-9)) + 1).cast("int"))
     val tArr = ordered.filter(col("side") === 0)
-      .select(col("doc_id").as("train_doc"), col("n").as("n_t"),
-        col("sh").as("sh_t"), col("p"))
     val eArr = ordered.filter(col("side") === 1)
-      .select(col("doc_id").as("eval_doc"), col("n").as("n_e"),
-        col("sh").as("sh_e"), col("p"))
-    val tPre = tArr.select(col("train_doc"), col("n_t"),
-      explode(expr("slice(sh_t, 1, p)")).as("gram"))
-    val ePre = eArr.select(col("eval_doc"), col("n_e"),
-      explode(expr("slice(sh_e, 1, p)")).as("gram"))
+    val tPre = tArr.select(col("doc_id").as("train_doc"), col("n").as("n_t"),
+      explode(expr("slice(sh, 1, p)")).as("gram"))
+    val ePre = eArr.select(col("doc_id").as("eval_doc"), col("n").as("n_e"),
+      explode(expr("slice(sh, 1, p)")).as("gram"))
     // Length filter inside the join condition (J ≥ t forces
     // t·max(|A|,|B|) ≤ min(|A|,|B|)), with the same safe FP slack.
     val cand = tPre.join(ePre,
@@ -206,9 +169,8 @@ object Decontam {
     // compute-dense over byte-small pair rows: spread them first. Keyed by
     // train_doc alone, join 1's key: a (train_doc, eval_doc) spread would
     // repeat the distinct's partitioning, and the optimizer erases it.
-    Materialize.spread(cand, col("train_doc"))
-      .join(tArr.select(col("train_doc"), col("n_t"), col("sh_t")), "train_doc")
-      .join(eArr.select(col("eval_doc"), col("n_e"), col("sh_e")), "eval_doc")
+    SetOverlap.overlap(Materialize.spread(cand, col("train_doc")),
+      "train_doc", tArr, "eval_doc", eArr)
   }
 
   /** [[fuzzyDecontaminate]] over the standard content-addressed split

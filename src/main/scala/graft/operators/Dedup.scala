@@ -16,7 +16,8 @@ import ContractOps.{diffCounts, oneRow, rowCount}
   * generation is a hash shuffle on band values, and the quadratic step runs
   * only WITHIN buckets (expected O(1) bucket sizes for non-duplicate data).
   * A crossJoin-based version would pass sf0.1 and melt a 1000-executor
-  * cluster — the bucket-join is the whole point.
+  * cluster — the bucket-join is the whole point. Every shingle-set
+  * verify runs through [[SetOverlap]].
   */
 object Dedup {
 
@@ -92,36 +93,38 @@ object Dedup {
     // execute twice), so it is materialized once.
     val candidates = Materialize(candidatePairs(lshBuckets(
       minhashSignatures(documents, numHashes), bands, numHashes / bands)))
-    // Exact-verify ONLY docs that appear in some candidate pair: shingle
-    // materialization is the expensive step (interpreted higher-order
-    // functions), and candidates are a vanishing fraction of the corpus at
-    // scale — a semi join prunes the rest before any shingle is built.
-    val candDocs = candidates
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    // no broadcast() hint on candDocs: it scales with the corpus DUP RATE
-    // (a crawl with heavy duplication can make it arbitrarily large), and
-    // a forced broadcast would override the very threshold that prevents
-    // an executor/driver OOM at 100×. AQE still broadcasts it when it
-    // measures small — which is the common case and every fixture's case.
-    val shingleSets = documents
-      .join(candDocs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), array_distinct(shingles3(col("text"))).as("sh"))
-    // r12: |A∪B| = |A|+|B|−|A∩B| on distinct'd shingle sets — the
-    // array_union kernel (a second O(|A|+|B|) hash build per candidate)
-    // is pure waste next to the intersect; OnceGate pins the intersect
-    // to ONE evaluation site (the pushed threshold filter otherwise
-    // re-derives it in the join condition — the d14 mechanism, §4.4).
-    candidates
-      .join(shingleSets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(shingleSets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("i", graft.functions.OnceGate.once(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("i").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("i")), 4).as("jaccard"))
+    val sets = SetOverlap.shingleSets(documents, candidates, "doc_a", "doc_b")
+    SetOverlap.overlap(candidates, "doc_a", sets, "doc_b", sets)
+      .select(col("doc_a"), col("doc_b"), SetOverlap.jaccard.as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("doc_a", "doc_b")
+  }
+
+  /** The md5-affine signature table behind [[minhashOraclePairs]] (and
+    * registrable on its own as the oracle-exact twin of the d5 corpus
+    * signatures): per doc the k = 8 permutation minima h0..h7, each an
+    * exact BIGINT both engines compute identically. One md5 per
+    * DISTINCT shingle row; k map-side-combining MIN aggregates.
+    */
+  def minhashOracleSignatures(documents: DataFrame): DataFrame = {
+    val p = 2147483647L
+    val as = Seq(919393L, 273647L, 877571L, 499979L, 331777L, 764321L,
+      104729L, 611953L)
+    val bs = Seq(12289L, 514229L, 39916801L % p, 6700417L, 1299709L,
+      15485863L, 32452843L, 49979687L)
+    SetOverlap.shingleRows(documents, "doc_id")
+      .select(col("doc_id"), expr(
+        s"CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) % $p")
+        .as("m"))
+      .groupBy("doc_id")
+      .agg(min(expr(s"(${as(0)} * m + ${bs(0)}) % $p")).as("h0"),
+        min(expr(s"(${as(1)} * m + ${bs(1)}) % $p")).as("h1"),
+        min(expr(s"(${as(2)} * m + ${bs(2)}) % $p")).as("h2"),
+        min(expr(s"(${as(3)} * m + ${bs(3)}) % $p")).as("h3"),
+        min(expr(s"(${as(4)} * m + ${bs(4)}) % $p")).as("h4"),
+        min(expr(s"(${as(5)} * m + ${bs(5)}) % $p")).as("h5"),
+        min(expr(s"(${as(6)} * m + ${bs(6)}) % $p")).as("h6"),
+        min(expr(s"(${as(7)} * m + ${bs(7)}) % $p")).as("h7"))
   }
 
   /** ORACLE-EXACT MinHash+LSH near-dup pairs — the same
@@ -143,43 +146,8 @@ object Dedup {
     * `rows` consecutive signature values join on a concat band key;
     * verification is exact integer Jaccard (n_inter·den ≥ n_union·num).
     */
-  /** The md5-affine signature table behind [[minhashOraclePairs]] (and
-    * registrable on its own as the oracle-exact twin of the d5 corpus
-    * signatures): per doc the k = 8 permutation minima h0..h7, each an
-    * exact BIGINT both engines compute identically. One md5 per
-    * DISTINCT shingle row; k map-side-combining MIN aggregates.
-    */
-  def minhashOracleSignatures(documents: DataFrame): DataFrame = {
-    val p = 2147483647L
-    val as = Seq(919393L, 273647L, 877571L, 499979L, 331777L, 764321L,
-      104729L, 611953L)
-    val bs = Seq(12289L, 514229L, 39916801L % p, 6700417L, 1299709L,
-      15485863L, 32452843L, 49979687L)
-    documents
-      .select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        explode(array_distinct(shingles3Tokens(col("toks"), col("text"))))
-          .as("shingle"))
-      .select(col("doc_id"), expr(
-        s"CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT) % $p")
-        .as("m"))
-      .groupBy("doc_id")
-      .agg(min(expr(s"(${as(0)} * m + ${bs(0)}) % $p")).as("h0"),
-        min(expr(s"(${as(1)} * m + ${bs(1)}) % $p")).as("h1"),
-        min(expr(s"(${as(2)} * m + ${bs(2)}) % $p")).as("h2"),
-        min(expr(s"(${as(3)} * m + ${bs(3)}) % $p")).as("h3"),
-        min(expr(s"(${as(4)} * m + ${bs(4)}) % $p")).as("h4"),
-        min(expr(s"(${as(5)} * m + ${bs(5)}) % $p")).as("h5"),
-        min(expr(s"(${as(6)} * m + ${bs(6)}) % $p")).as("h6"),
-        min(expr(s"(${as(7)} * m + ${bs(7)}) % $p")).as("h7"))
-  }
-
   def minhashOraclePairs(documents: DataFrame, thresholdNum: Long = 4L,
       thresholdDen: Long = 5L): DataFrame = {
-    val sh = documents
-      .select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        array_distinct(shingles3Tokens(col("toks"), col("text"))).as("sh"))
     val sig = minhashOracleSignatures(documents)
     val bk = sig.select(col("doc_id"), explode(array(
       concat_ws(":", lit(0), col("h0"), col("h1")),
@@ -191,19 +159,9 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      // OnceGate (r12): the cross-multiplied threshold references
-      // n_inter on BOTH sides once pushed into the join condition —
-      // two intersect kernels per candidate without the gate (§4.4)
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.OnceGate.once(
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-          .as("n_inter"),
-        (size(col("sh_a")) + size(col("sh_b"))).cast("long").as("n_both"))
-      .select(col("doc_a"), col("doc_b"), col("n_inter"),
-        (col("n_both") - col("n_inter")).as("n_union"))
+    val sets = SetOverlap.shingleSets(documents)
+    SetOverlap.overlap(cand, "doc_a", sets, "doc_b", sets)
+      .select("doc_a", "doc_b", "n_inter", "n_union")
       .filter(col("n_inter") * thresholdDen >= col("n_union") * thresholdNum)
       .orderBy("doc_a", "doc_b")
   }
@@ -291,21 +249,10 @@ object Dedup {
         Seq("band_key"))
       .select("new_doc", "corpus_doc")
       .distinct())
-    val shC = corpus
-      .join(cand.select(col("corpus_doc").as("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("corpus_doc"),
-        array_distinct(shingles3(col("text"))).as("sh_c"))
-    val shN = incoming
-      .join(cand.select(col("new_doc").as("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("new_doc"),
-        array_distinct(shingles3(col("text"))).as("sh_n"))
-    // single intersect kernel, union derived (r12 — nearDupPairs' shape)
-    cand.join(shN, "new_doc").join(shC, "corpus_doc")
-      .withColumn("i", graft.functions.OnceGate.once(
-        size(array_intersect(col("sh_n"), col("sh_c"))).cast("long")))
-      .select(col("new_doc"), col("corpus_doc"),
-        round(col("i").cast("double") /
-          (size(col("sh_n")) + size(col("sh_c")) - col("i")), 4).as("jaccard"))
+    val shN = SetOverlap.shingleSets(incoming, cand, "new_doc")
+    val shC = SetOverlap.shingleSets(corpus, cand, "corpus_doc")
+    SetOverlap.overlap(cand, "new_doc", shN, "corpus_doc", shC)
+      .select(col("new_doc"), col("corpus_doc"), SetOverlap.jaccard.as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("new_doc", "corpus_doc")
   }
@@ -788,6 +735,15 @@ object Dedup {
       .orderBy("cluster_id")
   }
 
+  /** [[SetOverlap.dfOrdered]] by `doc_id`, plus the AllPairs prefix
+    * length `p = n − ⌈num·n/den⌉ + 1 ≥ 1` in exact integer arithmetic:
+    * the per-doc state [[prefixFilterJoin]] and [[containmentJoin]]
+    * generate candidates from and verify against.
+    */
+  private def allPairsDocs(documents: DataFrame, num: Long, den: Long): DataFrame =
+    SetOverlap.dfOrdered(documents, "doc_id")
+      .withColumn("p", col("n") - expr(s"($num * n + ${den - 1}) div $den") + 1)
+
   /** EXACT Jaccard similarity JOIN via prefix filtering (the AllPairs /
     * PPJoin family — Bayardo et al., WWW'07; Xiao et al., WWW'08): every
     * pair of documents with shingle-Jaccard ≥ num/den, with NO
@@ -817,53 +773,6 @@ object Dedup {
     * min·den ≥ max·num prunes inside the join condition before a pair
     * ever materializes.
     */
-  /** Per-doc state shared by [[prefixFilterJoin]] and [[containmentJoin]]:
-    * the distinct shingles under the global (df, token) AllPairs order
-    * (`ord` structs + the bare `sh` strings), the distinct-shingle count
-    * `n`, the AllPairs prefix length `p = n − ⌈t·n⌉ + 1`, and a 128-bit
-    * set-membership MASK (`mask0`/`mask1`: each shingle sets bit
-    * xxhash64(shingle) mod 128, folded by the codegen'd bit_or aggregate).
-    *
-    * The mask is the candidate-join prefilter (r11): every common token
-    * of a pair sets its bit in BOTH masks, so bits in maskA & ~maskB are
-    * set only by tokens of A∖B and bit_count(maskA & ~maskB) ≤ |A∖B| —
-    * a NECESSARY condition for any overlap bound, evaluated as codegen'd
-    * integer ops inside the join condition BEFORE a candidate pair
-    * materializes (the measured sf10 cost was exactly the downstream
-    * distinct + array-attach + intersect work on candidates that this
-    * bound kills; see the d19 numbers in SURVEY §R11). Completeness is
-    * exact, so output is bit-identical and the oracles are unchanged.
-    *
-    * ONE shingle pass: the per-doc array sorted by (df, token) serves
-    * BOTH prefix generation (slice) and exact verification (intersect) —
-    * a separate unsorted array would pay the interpreted shingles3 HOF
-    * twice (measured ~2 s of the query at sf0.1 on its own). Tokens are
-    * projected BEFORE the shingle builder (the shingles3Tokens contract:
-    * the inline form re-splits the text per reference, ~7 s extra here).
-    * The frame is materialized: both self-join sides and the
-    * verification read it.
-    */
-  private def allPairsDocs(documents: DataFrame, num: Long, den: Long): DataFrame = {
-    val tok = documents
-      .select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        explode(array_distinct(shingles3Tokens(col("toks"), col("text")))).as("shingle"))
-    val dfreq = tok.groupBy("shingle").agg(count(lit(1)).as("df"))
-    Materialize(tok.join(dfreq, "shingle")
-      .withColumn("h", pmod(xxhash64(col("shingle")), lit(128)).cast("int"))
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("ord"),
-        count(lit(1)).as("n"),
-        expr("bit_or(CASE WHEN h < 64 THEN shiftleft(CAST(1 AS BIGINT), h) " +
-          "ELSE CAST(0 AS BIGINT) END)").as("mask0"),
-        expr("bit_or(CASE WHEN h >= 64 THEN shiftleft(CAST(1 AS BIGINT), h - 64) " +
-          "ELSE CAST(0 AS BIGINT) END)").as("mask1"))
-      .select(col("doc_id"), col("n"), col("ord"), col("mask0"), col("mask1"),
-        expr("transform(ord, x -> x.shingle)").as("sh"))
-      // p = n − ceil(num·n/den) + 1 ≥ 1, in exact integer arithmetic
-      .withColumn("p", col("n") - expr(s"($num * n + ${den - 1}) div $den") + 1))
-  }
-
   def prefixFilterJoin(documents: DataFrame, thresholdNum: Int = 4,
       thresholdDen: Int = 5): DataFrame = {
     require(thresholdNum > 0 && thresholdNum <= thresholdDen,
@@ -890,7 +799,7 @@ object Dedup {
     // tokens sit after it in both docs), so that row always survives.
     // Fourth, the 128-bit mask bound, both directions: Jaccard ≥ t forces
     // |A∖B| ≤ na − α and |B∖A| ≤ nb − α, and bit_count(maskA & ~maskB)
-    // never exceeds |A∖B| (see allPairsDocs) — so either inequality
+    // never exceeds |A∖B| (see SetOverlap.dfOrdered) — so either inequality
     // failing proves the pair cannot qualify. All codegen'd integer ops.
     // Measured: 43.5k candidates → far fewer verify rows on the fixture.
     val alphaSql =
@@ -906,29 +815,11 @@ object Dedup {
             .cast("long") <= col("a.n") - expr(alphaSql) &&
           expr("bit_count(b.mask0 & ~a.mask0) + bit_count(b.mask1 & ~a.mask1)")
             .cast("long") <= col("b.n") - expr(alphaSql))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.n").as("na"), col("b.n").as("nb"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    // |A∪B| = na + nb − |A∩B|: one interpreted array_intersect per
-    // candidate instead of intersect + union. The filter uses the
-    // union-free form I·(num+den) ≥ (na+nb)·num (algebraically identical
-    // to I·den ≥ (na+nb−I)·num) so the intersect is evaluated once per
-    // candidate; the projection re-derives it only for the few survivors.
-    // (Negative result, measured r10: a codegen'd merge-scan intersect
-    // count over sort_array'd sets — the LongDot treatment applied to
-    // this kernel — was a WASH across d14/d18/d19 at sf1 AND sf10
-    // (±10%, inside box noise; with array_sort's interpreted lambda
-    // comparator it was an outright 1.2-1.8× REGRESSION). The builtin
-    // hash intersect is already near-optimal for string sets this size,
-    // and the verify is not the bottleneck — the candidate equi-join +
-    // distinct is. Reverted; don't re-litigate without a profile.)
-    cand
-      .join(docsArr.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(docsArr.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .filter(col("n_inter") * (num + den) >= (col("na") + col("nb")) * num)
-      .select(col("doc_a"), col("doc_b"), col("n_inter"),
-        (col("na") + col("nb") - col("n_inter")).as("n_union"))
+    SetOverlap.overlap(cand, "doc_a", docsArr, "doc_b", docsArr)
+      .select("doc_a", "doc_b", "n_inter", "n_union")
+      .filter(col("n_inter") * den >= col("n_union") * num)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -951,9 +842,9 @@ object Dedup {
     * df_prefix(t) × df(t): the first factor collapses for exactly the
     * high-df tokens that would otherwise explode the product (a stopword
     * shingle lands in nobody's prefix), which is the containment-join
-    * skew bound. Verification is one `array_intersect` per candidate
-    * with the integer test |∩|·den ≥ |A|·num — no floating point, and
-    * the size filter |B|·den ≥ |A|·num prunes inside the join condition.
+    * skew bound. Verification ([[SetOverlap.overlap]]) is the integer
+    * test |∩|·den ≥ |A|·num, and the size filter |B|·den ≥ |A|·num
+    * prunes inside the join condition.
     */
   def containmentJoin(documents: DataFrame, thresholdNum: Int = 4,
       thresholdDen: Int = 5): DataFrame = {
@@ -985,7 +876,7 @@ object Dedup {
     // pair's FIRST common token has all α overlap tokens at or after it
     // on both sides. High-df shingles sit LATE in the df-ascending order,
     // so this prunes exactly the common-shingle matches that generate
-    // the candidate bulk. The 128-bit mask bound (see allPairsDocs) adds
+    // the candidate bulk. The 128-bit mask bound (see SetOverlap.dfOrdered) adds
     // the contained-side miss budget: |A∖B| ≤ na − ⌈t·na⌉ = p − 1 for any
     // qualifying pair, and bit_count(maskA & ~maskB) ≤ |A∖B| — evaluated
     // as codegen'd integer ops before a candidate row ever materializes.
@@ -997,15 +888,12 @@ object Dedup {
             col("a.n") * num &&
           expr("bit_count(a.mask0 & ~b.mask0) + bit_count(a.mask1 & ~b.mask1)")
             .cast("long") <= col("a.p") - 1L)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.n").as("na"), col("b.n").as("nb"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(docsArr.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(docsArr.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .filter(col("n_inter") * den >= col("na") * num)
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("na"), col("nb"))
+    SetOverlap.overlap(cand, "doc_a", docsArr, "doc_b", docsArr)
+      .filter(col("n_inter") * den >= col("n_a") * num)
+      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_a").as("na"),
+        col("n_b").as("nb"))
       .orderBy("doc_a", "doc_b")
   }
 

@@ -288,7 +288,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
         round(cosineSim(col("emb_a"), col("emb_b")), 6).as("score"))
-      .filter(col("score") >= minScore)
+      .filter(!isnan(col("score")) && col("score") >= minScore)
       .orderBy("vec_a", "vec_b")
   }
 
@@ -303,7 +303,7 @@ object Similarity {
       .filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
         round(cosineSim(col("emb_a"), col("emb_b")), 6).as("score"))
-      .filter(col("score") >= minScore)
+      .filter(!isnan(col("score")) && col("score") >= minScore)
       .orderBy("vec_a", "vec_b")
   }
 
@@ -344,9 +344,10 @@ object Similarity {
     * bounds the sorted set, kept out of scope here because the projected
     * sort is not measurable next to the pair join it bounds.
     *
-    * Zero-norm vectors score NaN and `NaN >= minScore` is false, so they
-    * are never dropped and never drop others (the [[rankedByCosine]]
-    * guard).
+    * Zero-norm vectors score NaN, and in Spark `NaN >= minScore` is TRUE
+    * (NaN orders above every double), so the pair filter carries the
+    * [[rankedByCosine]] `isnan` guard: a zero vector is never dropped and
+    * never drops others.
     *
     * Emits every clustered vector with its verdict (`kept`, plus the
     * smallest-id duplicate that condemned it) rather than only survivors —
@@ -392,7 +393,7 @@ object Similarity {
       .select(col("v"),
         col("u"),
         round(cosineSim(col("emb_u"), col("emb_v")), 6).as("score"))
-      .filter(col("score") >= minScore)
+      .filter(!isnan(col("score")) && col("score") >= minScore)
       .groupBy(col("v").as("vec_id"))
       .agg(min(col("u")).as("dropped_by"))
     e.select(col("vec_id"), col("cluster"))

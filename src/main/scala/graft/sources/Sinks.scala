@@ -39,6 +39,21 @@ object Sinks {
     laidOut(df, partitionCols).format(format).save(path)
   }
 
+  /** The batch jobs' publish step: [[writePartitioned]] `df` to `path`
+    * as parquet, then, when `table` is given, register an external table
+    * over it ([[createOrReplaceExternal]]) and recover its partitions
+    * ([[recoverPartitions]]) — the reference's write → catalog → MSCK
+    * sequence, with the partition columns named once.
+    */
+  def publishPartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
+      table: Option[String]): Unit = {
+    writePartitioned(df, path, partitionCols)
+    table.foreach { t =>
+      createOrReplaceExternal(df.sparkSession, t, path, partitionCols)
+      recoverPartitions(df.sparkSession, t)
+    }
+  }
+
   /** The overwrite writer of `df` spread and partitioned by `partitionCols`. */
   private def laidOut(df: DataFrame, partitionCols: Seq[String]) =
     Materialize.spread(df, partitionCols.map(df.col): _*)

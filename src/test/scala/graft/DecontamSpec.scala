@@ -25,6 +25,19 @@ class DecontamSpec extends SparkTestBase {
     assert(got === Map(1L -> 2L, 3L -> 1L))
   }
 
+  test("a document shorter than n tokens has no n-grams and no hits") {
+    import graft.functions.TextFunctions.{shinglesKTokens, tokens}
+    val docs = Seq((1L, "too short"), (2L, "one two three four five six"))
+      .toDF("doc_id", "text")
+    val grams = docs.select(col("doc_id"), shinglesKTokens(tokens(col("text")), 5).as("g"))
+    assert(grams.schema("g").dataType ===
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))
+    assert(grams.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap === Map(
+      1L -> Seq.empty, 2L -> Seq("one two three four five", "two three four five six")))
+    val eval = Seq((100L, "too short")).toDF("doc_id", "text")
+    assert(Decontam.decontaminate(docs, eval, n = 5).collect().isEmpty)
+  }
+
   test("fuzzy decontamination grades near-dup pairs by exact Jaccard") {
     val train = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),  // near-copy of eval 100

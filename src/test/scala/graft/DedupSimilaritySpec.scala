@@ -723,6 +723,29 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(negs.toSeq === Seq((2, 4L)), negs.mkString(", "))
   }
 
+  test("a zero-norm vector pairs with nothing in LSH pairs and semDedup") {
+    // its cosine is NaN, and in Spark `NaN >= minScore` is true
+    val axes = Seq(1L -> Array(1f, 0f), 2L -> Array(-1f, 0f), 3L -> Array(0f, 1f),
+      4L -> Array(0f, -1f), 5L -> Array(0f, 0f)).toDF("vec_id", "embedding")
+    // one plane: two buckets, so the zero vector shares one with an axis
+    assert(Similarity.nearNeighborPairs(axes, 0.5, planes = 1).collect().isEmpty)
+    assert(Similarity.nearNeighborPairsMultiband(axes, 0.5, planes = 1, bands = 2)
+      .collect().isEmpty)
+    def unit(entries: (Int, Double)*): Seq[Float] = {
+      val v = Array.fill(64)(0f)
+      entries.foreach { case (i, x) => v(i) = x.toFloat }
+      v.toSeq
+    }
+    // one cluster: 1 (zero) would drop 2 and be dropped by 0
+    val emb = Seq((0L, unit(0 -> 1.0), 0), (1L, unit(), 0),
+        (2L, unit(0 -> 0.8, 4 -> 0.6), 0))
+      .toDF("vec_id", "embedding", "label")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+    val out = Similarity.semDedup(emb, minScore = 0.95).collect()
+      .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    assert(out === Map(0L -> true, 1L -> true, 2L -> true))
+  }
+
   test("hard negatives are exactly the knn ranks past the positive block") {
     val emb = Tables.embeddings(spark, sf0001)
     val negs = Similarity.hardNegatives(emb, Seq(0L, 3L), skipTop = 3, take = 4)
