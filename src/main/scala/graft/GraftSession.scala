@@ -5,6 +5,14 @@ import org.apache.spark.sql.SparkSession
   * (Bench, Verify, VerifyOne, ScaleGen, StatsProbe) and the test suite
   * build their session here, so the graded run, the spot checks and the
   * specs all run the shipped configuration.
+  *
+  * Session confs live in [[confs]]. A JVM-wide static is a launch option
+  * instead: build.sbt's `javaOptions`, which every `sbt run` main, the
+  * forked test suite and the benchmark harness start with. Spark reads
+  * such a value once per JVM, whatever session asks first, so a conf here
+  * would not reach a JVM whose first session is built elsewhere. The one
+  * such setting is `spark.sql.codegen.cache.maxEntries`, the size of the
+  * compiled-class cache (see build.sbt for the measured working set).
   */
 object GraftSession {
   /** Local cores: `SPARK_GRAFT_CPUS`, default 4. */

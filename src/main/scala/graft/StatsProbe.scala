@@ -19,8 +19,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   *   sbt "runMain graft.StatsProbe"
   * }}}
   * A/B a conf with a `-D` JVM property on the forked run: SparkConf loads
-  * `spark.*` system properties, as build.sbt's `-Dspark.ui.enabled=false`
-  * does. [[GraftSession]]'s own confs take precedence over them.
+  * `spark.*` system properties, as build.sbt's
+  * `-Dspark.sql.codegen.cache.maxEntries` does. [[GraftSession]]'s own
+  * confs take precedence over them.
   * {{{
   * sbt 'set javaOptions += "-Dspark.sql.autoBroadcastJoinThreshold=-1"' \
   *   "runMain graft.StatsProbe"

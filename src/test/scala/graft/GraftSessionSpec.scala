@@ -19,6 +19,11 @@ class GraftSessionSpec extends SparkTestBase {
     expected.foreach { case (k, v) => assert(spark.conf.get(k) === v, k) }
   }
 
+  test("the codegen class cache size comes from the launch options, not the conf map") {
+    assert(!GraftSession.confs(4).contains("spark.sql.codegen.cache.maxEntries"))
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
+  }
+
   test("the extensions' SQL functions run from plain SQL with no registerAll") {
     // a fresh session state: no function registered at runtime by
     // another spec is visible here, only what the extensions inject
