@@ -131,9 +131,6 @@ case class MinHashTokens(child: Expression, numHashes: Int) extends UnaryExpress
 }
 
 object MinHash {
-  def minhash(shingles: Column, numHashes: Int): Column =
-    GraftShims.toColumn(MinHash(GraftShims.toExpression(shingles), numHashes))
-
   def minhashTokens(tokens: Column, numHashes: Int): Column =
     GraftShims.toColumn(MinHashTokens(GraftShims.toExpression(tokens), numHashes))
 }

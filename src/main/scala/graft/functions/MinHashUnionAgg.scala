@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
@@ -47,14 +47,4 @@ object MinHashUnionAgg {
   def minhashUnion(sig: Column, numHashes: Int = 32): Column =
     udaf(new MinHashUnionAgg(numHashes), ExpressionEncoder[Seq[Long]]())
       .apply(sig)
-
-  /** Estimated Jaccard between two equal-length signatures (fraction of
-    * agreeing components).
-    */
-  def estimatedJaccard(a: Seq[Long], b: Seq[Long]): Double = {
-    require(a.length == b.length,
-      s"signatures must use the same numHashes (${a.length} vs ${b.length})")
-    if (a.isEmpty) 0.0
-    else a.zip(b).count { case (x, y) => x == y }.toDouble / a.length
-  }
 }

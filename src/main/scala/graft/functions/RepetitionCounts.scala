@@ -18,9 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    UTF8String comparator (integer indices, no per-gram allocation);
   *  - all four counters fall out of one scan over the sorted runs.
   *
-  * Exactly the counts of the higher-order-function formulation
-  * ([[graft.operators.TextOps.repetitionStatsBuiltin]], equality asserted
-  * on the fixture in `DecontamSpec`) — but HOFs run interpreted per
+  * Exactly the counts of the higher-order-function formulation (the
+  * referee in `DecontamSpec`, equality asserted on the fixture) — but HOFs run interpreted per
   * element (lambda dispatch + row boxing per gram), measured ~0.3 ms/doc
   * on ~50-token docs; this kernel is a plain sorted scan inside
   * WholeStageCodegen.

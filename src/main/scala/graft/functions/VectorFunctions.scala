@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Static kernels shared by interpreted eval and generated code. */
@@ -83,9 +82,9 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Static kernel for random-hyperplane LSH signatures — ONE code path for
-  * executor-side (expression) and driver-side (query vector) signing, so
-  * index build and probe can never disagree. Planes are deterministic
+/** Static kernel for random-hyperplane LSH signatures (`lsh_signature`):
+  * [[signature]] signs an `array<float>` value, [[signatureOf]] a
+  * driver-side `Array[Float]` by the same planes. Planes are deterministic
   * pseudo-random from a splitmix64 scramble of (plane, dim); the dot
   * product runs over the VECTOR's own length (no fixed-dim assumption).
   */
@@ -99,9 +98,6 @@ object LshSignatureUtil {
     z = z ^ (z >>> 31)
     (z & 0xFFFFFL).toDouble / 0x80000L.toDouble - 1.0
   }
-
-  def signatureOf(vec: Array[Float], planes: Int): Int =
-    signatureOf(vec, planes, 0)
 
   /** `offset` selects an independent plane family (planes `offset` to
     * `offset + planes - 1`) — how multiband LSH derives band b's planes
@@ -119,9 +115,6 @@ object LshSignatureUtil {
     }
     sig
   }
-
-  def signature(vec: ArrayData, planes: Int): Int =
-    signature(vec, planes, 0)
 
   def signature(vec: ArrayData, planes: Int, offset: Int): Int = {
     var sig = 0
@@ -333,8 +326,7 @@ case class AnnCosVerify(ma: Expression, mb: Expression,
   * oracle-exact ANN tier: plain LCG over the flattened (plane, dim)
   * index, range [−1000, 1000]. A FUNCTION of the index, not stored
   * state — the Spark kernel and the generated DuckDB oracle SQL both
-  * compute this formula, so the planes are a single source of truth
-  * (`Similarity.annPlaneWeight` delegates here).
+  * compute this formula, so the planes are a single source of truth.
   */
 object AnnPlaneWeights {
   def weight(plane: Int, dim: Int, dims: Int): Long =
@@ -451,12 +443,6 @@ case class AnnPlaneDots(child: Expression, planes: Int, dims: Int)
 }
 
 object VectorFunctions {
-  /** Native LSH signature column (see [[LshSignature]]); `offset` picks
-    * an independent plane family for multiband candidate generation.
-    */
-  def lshSignature(embedding: Column, planes: Int, offset: Int = 0): Column =
-    GraftShims.toColumn(LshSignature(GraftShims.toExpression(embedding), planes, offset))
-
   /** Native-expression cosine similarity (codegen'd fused loop). */
   def cosineSim(a: Column, b: Column): Column =
     GraftShims.toColumn(
@@ -496,18 +482,4 @@ object VectorFunctions {
     GraftShims.toColumn(AnnCosVerify(
       GraftShims.toExpression(ma), GraftShims.toExpression(mb),
       GraftShims.toExpression(na), GraftShims.toExpression(nb)))
-
-  /** Builtin-composition cosine (zip_with + aggregate) — the (a)-tier
-    * compose-existing-ops variant; kept for cross-checking the custom
-    * expression in tests and for engines without the extension.
-    */
-  def cosineSimBuiltin(a: Column, b: Column): Column = {
-    val prod = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-    val na = aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-    val nb = aggregate(transform(b, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-    prod / (sqrt(na) * sqrt(nb))
-  }
 }

@@ -88,8 +88,8 @@ object Aggregates {
     lineitem.agg(count(lit(1)).as("n"))
 
   /** Parity: exact distinct count per group — shuffle-heavy (two-phase
-    * expand+agg); for 100 TB cardinality estimation prefer
-    * [[approxDistinct]].
+    * expand+agg); for 100 TB cardinality estimation prefer HLL++
+    * (`approx_count_distinct`, accuracy pinned by [[approxDistinctChecked]]).
     */
   def distinctCount(lineitem: DataFrame): DataFrame =
     lineitem
@@ -97,17 +97,6 @@ object Aggregates {
       .agg(
         countDistinct(col("l_partkey")).as("n_parts"),
         countDistinct(col("l_suppkey")).as("n_supps"))
-      .orderBy("l_returnflag")
-
-  /** Parity: HLL++ approximate distinct — single-pass, constant memory per
-    * group; the 100 TB-safe variant of [[distinctCount]]. Not
-    * oracle-compared (DuckDB's approx_count_distinct uses a different
-    * sketch); asserted within rsd in the test suite.
-    */
-  def approxDistinct(lineitem: DataFrame): DataFrame =
-    lineitem
-      .groupBy("l_returnflag")
-      .agg(approx_count_distinct(col("l_partkey"), 0.01).as("approx_parts"))
       .orderBy("l_returnflag")
 
   /** Parity: CUBE over two keys (all 4 grouping sets). */

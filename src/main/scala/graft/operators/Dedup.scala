@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -213,7 +213,7 @@ object Dedup {
 
   /** The persistable LSH BAND INDEX of a corpus: one (doc_id, band_key)
     * row per band — what [[incrementalNearDups]] joins new batches
-    * against. Write it bucketed on `band_key` (`Sinks.saveBucketed`) and
+    * against. Write it bucketed on `band_key` (`bucketBy`) and
     * the incremental candidate join runs with ZERO corpus-side exchange
     * (plan-asserted in `DedupSimilaritySpec`).
     */
@@ -402,46 +402,6 @@ object Dedup {
         (col("n_brute") > 0).as("nonempty"), // guards a vacuous pass
         (col("n_missed") === 0).as("complete"),
         (col("n_spurious") === 0).as("sound"))
-  }
-
-  /** SimHash near-dup for LARGE radii via two-chunk combination banding:
-    * `maxHamming + 2` chunks, bucket key = every PAIR of chunk values
-    * (C(k,2) bands). Pigeonhole: ≤ `maxHamming` differing bits dirty at
-    * most `maxHamming` chunks, leaving ≥ 2 clean chunks, so at least one
-    * pair-key matches — same exact-recall guarantee as [[simhashPairs]],
-    * but each bucket key carries ~2× the bits. At radius 8 this means 45
-    * bands of ~13-bit keys instead of 9 bands of ~7-bit keys: random
-    * bucket collisions drop ~13× (45/2^13 vs 9/2^7 of all pairs), which
-    * is what keeps the within-bucket join subquadratic on a 100× corpus.
-    * Output is identical to [[simhashPairs]] at the same radius (both are
-    * the exact Hamming ball; only candidate generation differs).
-    */
-  def simhashPairsCombination(documents: DataFrame, maxHamming: Int = 8): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 30, "radius must leave 2-bit chunks")
-    val numChunks = maxHamming + 2
-    val chunks = simhashChunks(documents, numChunks)
-    // pair the k chunk rows per doc into C(k,2) band keys; chunk widths are
-    // ≤ 32 bits so (hi << 32) | lo packs a pair key into one long
-    val ai = chunks.select(col("doc_id"), col("sig"),
-      col("chunk_id").as("ci"), col("chunk_val").as("vi"))
-    val aj = chunks.select(col("doc_id").as("doc_id_j"),
-      col("chunk_id").as("cj"), col("chunk_val").as("vj"))
-    val bands = ai
-      .join(aj, ai("doc_id") === aj("doc_id_j") && col("ci") < col("cj"))
-      .select(col("doc_id"), col("sig"),
-        (col("ci") * numChunks + col("cj")).as("band_id"),
-        (shiftleft(col("vi"), 32) bitwiseOR col("vj")).as("band_val"))
-    val a = bands.select(col("band_id"), col("band_val"),
-      col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-    val b = bands.select(col("band_id"), col("band_val"),
-      col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("band_id", "band_val"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Connected components over an undirected edge set. Returns
@@ -1000,17 +960,6 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.s").as("s_a"), col("b.s").as("s_b"))
-  }
-
-  /** Candidate pairs of [[editDistanceJoin]]'s pigeonhole stage — also
-    * exposed on its own so tests can assert the pruning actually prunes
-    * (candidates ≪ n·(n−1)/2 on non-pathological corpora).
-    */
-  private[graft] def editDistancePrune(documents: DataFrame, k: Int,
-      prefixLen: Int): (DataFrame, DataFrame) = {
-    val cand = editDistanceMatches(documents, k, prefixLen)
-      .select("doc_a", "doc_b").distinct()
-    (editDistancePrefixes(documents, prefixLen), cand)
   }
 
   /** (doc_id, s): the first `prefixLen` characters of every document that

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.functions.{array, broadcast, coalesce, col,
-  collect_list, collect_set, count, explode, expr, lit, max, min, posexplode, row_number,
+  collect_set, count, explode, expr, lit, max, min, posexplode, row_number,
   size, sort_array, struct, sum, when}
 import graft.spark.Materialize
 
@@ -476,8 +476,8 @@ object GraphOps {
     // Either branch ends with an EAGER checkpoint so the loop invariants
     // can be unpersisted before returning: the lazily-returned DataFrame
     // would otherwise pin the edge caches in executor storage for the
-    // rest of the session (the trainCentroids unpersist convention,
-    // adapted to a lazy return value).
+    // rest of the session (Materialize.cached's unpersist-on-exit,
+    // completed by the eager checkpoint for a lazy return value).
     Materialize.cached(annotated) { eDeg =>
       if (allNodesReceiveMass) {
         // Iteration 1 needs NO score join: the init score is uniform, so

@@ -1,82 +1,37 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NearestCodewords, VectorFunctions}
 import graft.spark.Materialize
 import ContractOps.{diffCounts, oneRow, recallCounts, rowCount}
 
-/** IVF (inverted-file) ANN index over an embedding column — the
-  * k-means-quantizer scale path, complementing [[SimilarityIndex]]'s
-  * hyperplane LSH:
+/** IVF (inverted-file) ANN quantizers over an embedding column, and the
+  * driver-witnessed contracts that check them:
   *
-  *  - TRAIN: MLlib k-means over L2-normalized embeddings (Euclidean on
-  *    the unit sphere ranks identically to cosine) learns `k` coarse
-  *    centroids. At 100 TB train on a sample — centroids need O(k·dim)
-  *    evidence, not the corpus.
-  *  - BUILD: every vector is assigned to its nearest centroid by an
-  *    argmax over k broadcast centroid literals (codegen'd cosine per
-  *    centroid, no UDF, no shuffle beyond the partitioned write), and the
-  *    corpus is written PARTITIONED BY inverted-list id.
-  *  - QUERY: rank centroids against the query on the driver (k values),
-  *    read only the `nprobe` nearest lists — file-level partition
-  *    pruning — and run exact cosine top-k within them.
+  *  - QUANTIZER: [[sampleCentroids]] draws `k` coarse centroids from the
+  *    corpus; [[kmeansExact]] trains centroids by integer-exact Lloyd
+  *    rounds.
+  *  - ASSIGN: every vector goes to its nearest centroid by an argmax over
+  *    k broadcast centroid literals (codegen'd cosine per centroid, no
+  *    UDF, no shuffle): [[assignLists]], and [[quantizedLists]] for the
+  *    one-byte-per-dimension list layout.
+  *  - CONTRACTS: probed recall (s8), append equals rebuild (s9), product
+  *    quantization (s12) and truncated-dimension retrieval (s13).
   *
-  * IVF vs LSH trade-off: LSH buckets need no training and handle
-  * adversarial distributions; IVF adapts its cells to the actual data
-  * density, giving better recall-per-probed-fraction on clustered real
-  * embeddings. Both are provided; both prune at the file level.
+  * IVF adapts its cells to the actual data density, giving better
+  * recall-per-probed-fraction on clustered real embeddings than
+  * data-blind hyperplane LSH buckets.
   */
 object IvfIndex {
 
-  /** Train the coarse quantizer; returns centroids as float arrays (the
-    * same element type as the embedding column, so the assignment
-    * expression is literal-typed without casts).
-    */
-  def trainCentroids(embeddings: DataFrame, k: Int, seed: Long = 42L,
-      maxIter: Int = 20, sampleFraction: Double = 1.0): Array[Array[Float]] = {
-    val e = col("embedding")
-    val sample =
-      if (sampleFraction >= 1.0) embeddings
-      else embeddings.sample(withReplacement = false, sampleFraction, seed)
-    // The norm MUST be projected as its own column before the divide:
-    // referencing the aggregate subtree inside the transform() lambda
-    // would re-evaluate it per array ELEMENT — O(dim²) per row. A bound
-    // column reference inside the lambda is a plain attribute read.
-    // Zero vectors are dropped, not divided: x/0 → NaN features would
-    // poison k-means training.
-    val withNorm = sample
-      .select(e.as("embedding"),
-        sqrt(aggregate(zip_with(e, e,
-          (a, b) => a.cast("double") * b.cast("double")),
-          lit(0.0), (acc, x) => acc + x)).as("nrm"))
-      .filter(col("nrm") > 1e-12)
-    // CACHE the prepared features: k-means re-reads its input every
-    // iteration (plus the k-means|| init rounds) — uncached, that is
-    // 20+ re-executions of the scan + normalization lineage (MLlib warns
-    // about exactly this). Storage cost is the sample, not the corpus.
-    // COALESCE to a few partitions: the training input is a bounded
-    // sample by design (O(k·dim) evidence), and every k-means iteration
-    // schedules one task per partition — hundreds of near-empty tasks
-    // per iteration is pure scheduling overhead, not parallelism.
-    Materialize.cached(withNorm.select(array_to_vector(
-        transform(col("embedding"), x => x.cast("double") / col("nrm"))).as("features"))
-        .coalesce(8)) { train =>
-      val model = new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-        .fit(train)
-      model.clusterCenters.map(_.toArray.map(_.toFloat))
-    }
-  }
-
-  /** Fixed-iteration Lloyd k-means, INTEGER-EXACT — the oracle-checkable
-    * counterpart of [[trainCentroids]] (MLlib's float k-means trains the
-    * serving quantizer fine, but FP partial-sum reassociation makes its
-    * centroids engine- and run-dependent, so nothing downstream of it can
-    * be hash-verified). Here every quantity is deterministic on any
-    * engine: components are floor-scaled to micro-units (the
+  /** Fixed-iteration Lloyd k-means, INTEGER-EXACT — oracle-checkable
+    * where a float k-means (MLlib's) is not: FP partial-sum
+    * reassociation makes float centroids engine- and run-dependent, so
+    * nothing downstream of them can be hash-verified. Here every
+    * quantity is deterministic on any engine: components are
+    * floor-scaled to micro-units (the
     * [[graft.functions.CentroidAgg]] convention), distances are int64
     * squared-L2 over those units (max |diff| ≈ 2·10⁶ squared × dim 64 ≈
     * 2.6·10¹⁴ — int64-safe through sf 1), centroid updates use long sums
@@ -154,8 +109,7 @@ object IvfIndex {
     * property under test — probe selection, asymmetric scoring, repair
     * equality — is orthogonal to centroid quality, and an iterative
     * k-means (20+ driver-coordinated jobs) would dominate the query's
-    * cost. Production index builds use [[trainCentroids]] (float) or
-    * [[kmeansExact]] (hash-verifiable).
+    * cost. [[kmeansExact]] is the trained, hash-verifiable quantizer.
     */
   def sampleCentroids(embeddings: DataFrame, k: Int,
       seed: Long = 42L): Array[Array[Float]] = {
@@ -189,112 +143,6 @@ object IvfIndex {
     }
     embeddings.withColumn("list_id",
       array_max(array(scored.toIndexedSeq: _*)).getField("list_id"))
-  }
-
-  /** Build and persist: inverted lists as parquet partitions, centroids in
-    * an underscore-prefixed side directory (ignored by the data reader).
-    */
-  def writeIndex(embeddings: DataFrame, path: String, k: Int,
-      seed: Long = 42L): Array[Array[Float]] =
-    writeIndexWith(embeddings, path, k, seed, identity)
-
-  /** Shared build skeleton: train -> assign -> storage projection ->
-    * partitioned write + centroid sidecar. The float and quantized
-    * layouts differ ONLY in `storage`.
-    */
-  private def writeIndexWith(embeddings: DataFrame, path: String, k: Int,
-      seed: Long, storage: DataFrame => DataFrame): Array[Array[Float]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val centroids = trainCentroids(embeddings, k, seed)
-    storage(assignLists(embeddings, centroids))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
-    centroids
-  }
-
-  /** Centroid-nearest `nprobe` list ids for a query (driver-side, k
-    * cosines — shared probe-selection preamble of both query paths).
-    */
-  private def rankProbes(queryVec: Array[Float],
-      centroids: Array[Array[Float]], nprobe: Int): Seq[Int] =
-    centroids.zipWithIndex
-      .sortBy { case (c, i) => (-cosine(queryVec, c), i) }
-      .take(nprobe).map(_._2).toSeq
-
-  def loadCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
-    spark.read.parquet(s"$path/_centroids").orderBy("list_id").collect()
-      .map(_.getSeq[Float](1).toArray)
-
-  /** Probe the `nprobe` centroid-nearest inverted lists only (partition
-    * pruning on disk), exact cosine top-k within them.
-    */
-  def queryIndex(spark: SparkSession, path: String, queryVec: Array[Float],
-      centroids: Array[Array[Float]], k: Int, nprobe: Int = 2): DataFrame = {
-    val probes = rankProbes(queryVec, centroids, nprobe)
-    val qLit = array(queryVec.map(v => lit(v)).toIndexedSeq: _*)
-    spark.read.parquet(path)
-      .filter(col("list_id").isin(probes: _*))
-      .select(col("vec_id"),
-        round(VectorFunctions.cosineSim(col("embedding"), qLit), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** QUANTIZED build (the IVF-PQ-style serving layout): inverted lists
-    * store `(vec_id, qmin, qrange, codes array<tinyint>)` — ONE BYTE per
-    * dimension plus two longs — and NOT the float embedding. At 100 TB of
-    * float32 embeddings this is the difference between a 25 TB index and
-    * a 100 TB one; the scan that serves a query reads a quarter of the
-    * bytes before pruning even starts.
-    */
-  def writeQuantizedIndex(embeddings: DataFrame, path: String, k: Int,
-      seed: Long = 42L): Array[Array[Float]] =
-    // null embeddings carry no direction to index (trainCentroids already
-    // drops them); storing them would surface NaN-scored rows at query time
-    writeIndexWith(embeddings.filter(col("embedding").isNotNull), path, k, seed,
-      assigned => Similarity.withQuantization(assigned)
-        .select(col("vec_id"), col("qmin"), col("qrange"), col("codes"),
-          col("list_id")))
-
-  /** Probe the quantized index: asymmetric distance computation — the raw
-    * query vector (in integer micro-units) is scored against the DEQUANTIZED
-    * integer reconstruction of each stored code, so the only approximation
-    * is the storage quantization itself. Reconstruction and dot products
-    * are exact integer arithmetic (terms bounded by 10¹² · dim ≪ 2⁶³);
-    * only the final norm division is floating-point.
-    */
-  def queryQuantizedIndex(spark: SparkSession, path: String,
-      queryVec: Array[Float], centroids: Array[Array[Float]], k: Int,
-      nprobe: Int = 2): DataFrame = {
-    val probes = rankProbes(queryVec, centroids, nprobe)
-    val qMicro = microOf(queryVec)
-    val qLit = array(qMicro.map(lit).toIndexedSeq: _*)
-    // the query self-dot is a constant: computed ONCE on the driver, not
-    // as an interpreted lambda chain per scanned row
-    val nq = qMicro.map(x => x * x).sum
-    // a zero-norm query has no cosine direction: nq = 0 would make every
-    // score 0/0 = NaN, and NaN sorts ABOVE every real double under desc —
-    // the same trap the nr > 0 filter guards on the stored side
-    require(nq > 0, "queryQuantizedIndex: query vector has zero norm")
-    val dot = VectorFunctions.longDot(col("r"), qLit)
-    val nr = VectorFunctions.longDot(col("r"), col("r"))
-    spark.read.parquet(path)
-      .filter(col("list_id").isin(probes: _*))
-      .select(col("vec_id"), recon.as("r"))
-      .select(col("vec_id"), dot.as("dot"), nr.as("nr"))
-      // an all-zero reconstruction (e.g. a zero embedding) has no cosine
-      // direction: nr = 0 would score NaN, and Spark sorts NaN ABOVE every
-      // double under desc — it would top every probed top-k. Drop it, the
-      // same rule trainCentroids applies to zero vectors.
-      .filter(col("nr") > 0)
-      .select(col("vec_id"),
-        round(col("dot").cast("double") /
-          (sqrt(col("nr").cast("double")) * sqrt(lit(nq).cast("double"))), 6).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
   }
 
   /** INCREMENTAL index append: assign + quantize an incoming batch under
@@ -392,8 +240,8 @@ object IvfIndex {
     import spark.implicits._
     val clean = embeddings.filter(col("embedding").isNotNull)
     val centroids = sampleCentroids(clean, ivfK)
-    // probe selection is driver-side BY DESIGN (same as queryQuantizedIndex:
-    // ivfK centroid cosines per query, never data-sized); ship one
+    // probe selection is driver-side BY DESIGN (ivfK centroid cosines per
+    // query, never data-sized); ship one
     // (query_id, float query, micro query vector, query self-dot, probed
     // lists) row per query and broadcast it into the corpus scan
     val queries = clean.filter(col("vec_id").isin(queryIds: _*))
@@ -582,6 +430,15 @@ object IvfIndex {
           .as("recall_ok"),
         col("n_exact"), col("n_match"))
   }
+
+  /** Centroid-nearest `nprobe` list ids for a query (driver-side, k
+    * cosines).
+    */
+  private def rankProbes(queryVec: Array[Float],
+      centroids: Array[Array[Float]], nprobe: Int): Seq[Int] =
+    centroids.zipWithIndex
+      .sortBy { case (c, i) => (-cosine(queryVec, c), i) }
+      .take(nprobe).map(_._2).toSeq
 
   /** Micro-unit integer vector: each component floor(x · 10⁶) as a long. */
   private def micro(v: Column): Column =

@@ -181,30 +181,12 @@ object MergeOps {
     snapshotDiff(oldSnap, newSnap, Seq("o_orderkey"), Seq("o_orderstatus", "cents"))
   }
 
-  /** Registered-query harness (e2_scd2_merge): a deterministic CDC batch
-    * derived from the customer dimension itself — md5-nibble buckets (the
-    * t7 sampling primitive) select which keys change, pass through
-    * unchanged, or arrive as brand-new keys — exercising every merge
-    * branch with update values the oracle can reconstruct:
-    *  - nibble < 4:       segment rewritten to 'RELOCATED'  → close + new version
-    *  - nibble in [4, 6): identical attribute values         → NO new version
-    *  - nibble >= 14:     key + 10_000_000, fresh attributes → plain insert
-    */
-  /** Point-in-time (AS OF) snapshot of an SCD2 dimension: the single
-    * version of each key valid at `asOf` — `valid_from <= asOf <
-    * coalesce(valid_to, +inf)`. A map-side filter, no shuffle: version
-    * resolution happens before any fact join, so the join itself stays a
-    * plain equi-join on the key (each key contributes exactly one row).
-    */
-  def pitSnapshot(scd2: DataFrame, asOf: Long): DataFrame =
-    scd2.filter(col("valid_from") <= asOf &&
-      (col("valid_to").isNull || col("valid_to") > asOf))
-
   /** The warehouse temporal-join demo: facts resolved against the SCD2
     * dimension AS OF two different times, side by side — "which segment
     * was this order's customer in before/after the batch-1 relocation".
-    * Each PIT side collapses to one row per key first ([[pitSnapshot]]),
-    * so both joins are ordinary equi-joins (broadcast at dim size).
+    * Each PIT side collapses to the one version per key valid at its time
+    * (`valid_from <= t < coalesce(valid_to, +inf)`), so both joins are
+    * ordinary equi-joins (broadcast at dim size).
     */
   def pitLookupDemo(customer: DataFrame, orders: DataFrame): DataFrame = {
     // BOTH snapshots resolve in ONE pass over the version history: at most
@@ -224,6 +206,15 @@ object MergeOps {
       .orderBy("o_orderkey")
   }
 
+  /** Registered-query harness (e2_scd2_merge): a deterministic CDC batch
+    * derived from the customer dimension itself — md5-nibble buckets (the
+    * t7 sampling primitive) select which keys change, pass through
+    * unchanged, or arrive as brand-new keys — exercising every merge
+    * branch with update values the oracle can reconstruct:
+    *  - nibble < 4:       segment rewritten to 'RELOCATED'  → close + new version
+    *  - nibble in [4, 6): identical attribute values         → NO new version
+    *  - nibble >= 14:     key + 10_000_000, fresh attributes → plain insert
+    */
   def scd2Demo(customer: DataFrame, batchId: Long = 1L): DataFrame = {
     val dim = customer.select("c_custkey", "c_mktsegment", "c_acctbal")
     def nb = TextOps.hexNibble("c_custkey")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,9 +14,6 @@ import org.apache.spark.sql.types._
   * is REAL too: [[audioDecode]] goes through `javax.sound.sampled`
   * (WAV/AU/AIFF PCM — also JDK-built-in) and emits an amplitude
   * histogram from actual decoded samples, proven on synthesized WAVs.
-  * The ANIMATION path is REAL as well: [[frameDecode]] /
-  * [[sampleKeyframes]] walk multi-frame containers through ImageIO's
-  * sequence reader (animated GIF), proven on synthesized animations.
   * COMPRESSED-VIDEO containers get real codec-free STRUCTURAL parsing
   * in [[VideoContainer]] (ISO-BMFF box walk to the sample table:
   * keyframe enumeration, timestamps, exact mdat byte ranges) — only
@@ -119,8 +116,7 @@ object Multimodal {
   }
 
   /** 16-bin Rec.601 luminance histogram of a decoded frame, normalized
-    * by pixel count — the shared feature kernel of [[imageDecode]] and
-    * [[frameDecode]].
+    * by pixel count — the feature kernel of [[imageDecode]].
     */
   private def luminanceHistogram(img: java.awt.image.BufferedImage): Array[Float] = {
     val hist = new Array[Float](16)
@@ -140,109 +136,6 @@ object Multimodal {
     var b = 0
     while (b < 16) { hist(b) /= n; b += 1 }
     hist
-  }
-
-  /** REAL image RESIZE to a `grid`×`grid` integer grayscale patch —
-    * the normalize-before-embedding step every vision pipeline runs
-    * (CLIP-style encoders eat fixed-size patches, perceptual hashes eat
-    * 8×8 grids): each output cell is the EXACT integer mean (floor) of
-    * the Rec.601 luminances of its source-pixel block, computed by area
-    * averaging over the decoded pixels — deterministic integers, unlike
-    * `Image.getScaledInstance`'s unspecified filtering. Cell boundaries
-    * are ⌊dim·i/grid⌋, so any source size maps losslessly. None for
-    * payloads no reader claims.
-    */
-  def imageResizeGrid(payload: Array[Byte], grid: Int = 8): Option[Array[Int]] = {
-    if (payload == null || payload.length == 0 || !hasImageMagic(payload)) return None
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      catch { case scala.util.control.NonFatal(_) => null }
-    if (img == null || img.getWidth < grid || img.getHeight < grid) return None
-    val w = img.getWidth; val h = img.getHeight
-    def bx(i: Int) = w.toLong * i / grid
-    def by(i: Int) = h.toLong * i / grid
-    val out = new Array[Int](grid * grid)
-    var gy = 0
-    while (gy < grid) {
-      var gx = 0
-      while (gx < grid) {
-        var sum = 0L; var n = 0L
-        var y = by(gy).toInt
-        while (y < by(gy + 1)) {
-          var x = bx(gx).toInt
-          while (x < bx(gx + 1)) {
-            val rgb = img.getRGB(x, y)
-            sum += (((rgb >> 16) & 0xFF) * 299 + ((rgb >> 8) & 0xFF) * 587 +
-              (rgb & 0xFF) * 114) / 1000
-            n += 1
-            x += 1
-          }
-          y += 1
-        }
-        out(gy * grid + gx) = (sum / n).toInt
-        gx += 1
-      }
-      gy += 1
-    }
-    Some(out)
-  }
-
-  /** One row per successfully-decoded image: the [[imageResizeGrid]]
-    * patch as an integer array — the Spark-side plumbing (schema, batch
-    * shape, per-partition decoder loop) for the resize stage.
-    */
-  def resizePatches(media: DataFrame, grid: Int = 8): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("patch",
-        ArrayType(org.apache.spark.sql.types.IntegerType), nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { rows =>
-      rows.flatMap { r =>
-        imageResizeGrid(r.getAs[Array[Byte]](1), grid)
-          .map(p => Row(r.getLong(0), p.toIndexedSeq))
-      }
-    }(encoder)
-  }
-
-  /** REAL multi-frame decode for ANIMATED payloads via the JDK's
-    * sequence-capable `ImageIO` readers (animated GIF — the one
-    * video-like container the JDK decodes natively; compressed video
-    * codecs like H.264 are not in the JDK and stay out of scope).
-    * Returns one luminance histogram per frame, None for payloads no
-    * reader claims or with fewer than two frames (stills belong to
-    * [[imageDecode]]).
-    */
-  def frameDecode(payload: Array[Byte]): Option[IndexedSeq[Array[Float]]] = {
-    if (payload == null || payload.length == 0 || !hasImageMagic(payload)) return None
-    val iis =
-      try javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      catch { case scala.util.control.NonFatal(_) => return None }
-    try {
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext) return None
-      val reader = readers.next()
-      try {
-        reader.setInput(iis)
-        // allowSearch = true: the GIF reader must walk the stream to
-        // count frames; payloads are in-memory, so the seek is cheap
-        val n = try reader.getNumImages(true)
-          catch { case scala.util.control.NonFatal(_) => return None }
-        if (n < 2) None
-        else {
-          val frames = (0 until n).map { i =>
-            // claimed-but-truncated frame: per-item fallback, same
-            // isolation rule as imageDecode
-            val img = try reader.read(i)
-              catch { case scala.util.control.NonFatal(_) => null }
-            if (img == null) return None
-            luminanceHistogram(img)
-          }
-          Some(frames)
-        }
-      } finally reader.dispose()
-    } finally iis.close()
   }
 
   /** REAL audio decode via the JDK's `javax.sound.sampled` (WAV/AU/AIFF
@@ -271,11 +164,10 @@ object Multimodal {
 
   /** Real audio decode to NORMALIZED PCM — whatever width/endianness/
     * signedness the container declares is converted to signed 16-bit
-    * little-endian (channels kept interleaved), so every consumer
-    * ([[audioDecode]]'s histogram, [[audioEnergyWindows]]'s energy loop)
-    * reads exactly one sample format. None on anything the JDK's codecs
-    * don't claim or that truncates mid-body — per-item isolation, never
-    * a task failure.
+    * little-endian (channels kept interleaved), so [[audioDecode]]'s
+    * histogram reads exactly one sample format. None on anything the
+    * JDK's codecs don't claim or that truncates mid-body — per-item
+    * isolation, never a task failure.
     */
   def audioPcm(payload: Array[Byte]): Option[Array[Short]] = {
     if (payload == null || payload.length == 0 || !hasAudioMagic(payload)) return None
@@ -341,7 +233,6 @@ object Multimodal {
     * table, re-scanning the payload column.
     */
   def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("features", ArrayType(FloatType), nullable = false),
@@ -357,80 +248,9 @@ object Multimodal {
     }(encoder)
   }
 
-  /** REAL keyframe extraction for animated payloads: decode every frame
-    * ([[frameDecode]]), pick `n` evenly-spaced frame indices, emit one
-    * row per kept frame with its feature histogram and the animation's
-    * frame count. Payloads that aren't multi-frame animations emit
-    * nothing — they belong to [[extractFeatures]] (stills/audio) or
-    * [[sampleFrames]] (codec-less byte slicing). Per-partition batch
-    * loop like [[extractFeatures]]: decoder state initializes once per
-    * partition, rows ∝ kept frames.
-    */
-  def sampleKeyframes(media: DataFrame, n: Int): DataFrame = {
-    require(n >= 1, "need at least one keyframe")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("n_frames", IntegerType, nullable = false),
-      StructField("features", ArrayType(FloatType), nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { rows =>
-      rows.flatMap { r =>
-        frameDecode(r.getAs[Array[Byte]](1)) match {
-          case Some(frames) =>
-            val f = frames.length
-            (0 until n).map(i => (i.toLong * f / n).toInt).distinct
-              .map(idx => Row(r.getLong(0), idx, f, frames(idx).toIndexedSeq))
-          case None => Nil
-        }
-      }
-    }(encoder)
-  }
-
-  /** WINDOWED AUDIO ENERGY over real decoded PCM — the first feature a
-    * speech/music pipeline computes (VAD gating, silence trimming, clip
-    * detection all read it): the stream is cut into fixed
-    * `windowSamples`-sample windows and each emits its INTEGER
-    * sum-of-squares energy (16-bit samples: ≤ 2³⁰ per sample, 2⁴⁰ per
-    * 1k-window — exact in a Long, no float RMS drift across engines or
-    * JITs). One row per (media, window): the time-series shape
-    * downstream sessionization/thresholding operators consume.
-    * Per-partition batch loop like [[extractFeatures]]; rows ∝ decoded
-    * windows; payloads the JDK's audio codecs don't claim emit nothing.
-    */
-  def audioEnergyWindows(media: DataFrame,
-      windowSamples: Int = 1024): DataFrame = {
-    require(windowSamples >= 1, "windowSamples must be positive")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("window_idx", IntegerType, nullable = false),
-      StructField("n_samples", IntegerType, nullable = false),
-      StructField("energy", org.apache.spark.sql.types.LongType,
-        nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { rows =>
-      rows.flatMap { r =>
-        audioPcm(r.getAs[Array[Byte]](1)) match {
-          case Some(samples) =>
-            samples.grouped(windowSamples).zipWithIndex.map {
-              case (win, idx) =>
-                var e = 0L
-                var i = 0
-                while (i < win.length) {
-                  e += win(i).toLong * win(i); i += 1
-                }
-                Row(r.getLong(0), idx, win.length, e)
-            }.toSeq
-          case None => Nil
-        }
-      }
-    }(encoder)
-  }
-
   /** Frame sampling for "video" payloads: slice the byte stream into n
     * equal chunks (keyframe-extraction shape for payloads the JDK has no
-    * codec for), exploded one row per frame — the schema/explode shape
-    * [[sampleKeyframes]] fills with real frames for animated GIFs.
+    * codec for), exploded one row per frame.
     */
   def sampleFrames(media: DataFrame, n: Int): DataFrame =
     media
@@ -504,9 +324,8 @@ object Multimodal {
     * WITHOUT an all-pairs scan — the binary-payload sibling of the
     * SimHash text pipeline. The 64-bit signature is cut into 8
     * contiguous 8-bit chunks; for `maxHamming` ≤ 6 candidates come from
-    * TWO-CHUNK COMBINATION bands (the `simhashPairsCombination`
-    * technique): ≤ 6 differing bits touch ≤ 6 chunks, so ≥ 2 chunks are
-    * untouched and some PAIR of equal chunks collides — the C(8,2)=28
+    * TWO-CHUNK COMBINATION bands: ≤ 6 differing bits touch ≤ 6 chunks,
+    * so ≥ 2 chunks are untouched and some PAIR of equal chunks collides — the C(8,2)=28
     * double-width (16-bit) keys are a complete candidate generator with
     * a 2⁸× deeper key space than single chunks (candidate noise floor
     * 28·n²/2¹⁷ vs 8·n²/2⁹ — the r10 banding lesson: a FIXED key space

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 
@@ -12,11 +12,10 @@ import graft.functions.VectorFunctions._
   *    a single scan with a fused codegen'd loop per row (the baseline, and
   *    the correct choice whenever the query set is small: top-k via
   *    TakeOrderedAndProject, no shuffle of the data).
-  *  - [[SimilarityIndex]]: random-hyperplane LSH bucketing — the scale
-  *    path. Signatures are computed once and written PARTITIONED BY bucket;
-  *    a query then reads only the probed buckets (real partition pruning at
-  *    the file level — at 100 TB the scan touches a few buckets, not the
-  *    corpus).
+  *  - the scale path: [[IvfIndex]]'s inverted lists and
+  *    [[annOraclePairs]]' banded hyperplane LSH score each vector against
+  *    its own list or bucket only, and [[SimilarityIndex.hammingPrerank]]
+  *    ranks candidates on 64 sign bits before any float is read.
   */
 object Similarity {
 
@@ -124,8 +123,7 @@ object Similarity {
     * WindowGroupLimit BELOW the exchange (per-partition top-k heaps), so
     * the ranking shuffle carries at most k·|Q| rows per input partition,
     * not |corpus|·|Q| — asserted at plan level in the spec. For sublinear
-    * per-query cost at 100 TB use the [[SimilarityIndex]] / [[IvfIndex]]
-    * pruned path instead.
+    * per-query cost at 100 TB, probe [[IvfIndex]]'s inverted lists instead.
     */
   def knnJoin(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
       minScore: Double = -1.0): DataFrame =
@@ -179,27 +177,6 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** Embedding-cosine near-duplicate DEDUP: cluster near-identical vectors
-    * (LSH candidates ≥ minScore) and keep the min-vec_id representative of
-    * each group. Representative choice is the transitive-closure-free
-    * greedy form (a row is dropped if ANY smaller-id near-dup exists) —
-    * one LSH pass + one aggregation, no iterative connected components.
-    */
-  def dedupByEmbedding(embeddings: DataFrame, minScore: Double = 0.99,
-      planes: Int = 16): DataFrame = {
-    val dupOf = nearNeighborPairs(embeddings, minScore, planes)
-      .groupBy(col("vec_b").as("vec_id"))
-      .agg(min("vec_a").as("dup_of"))
-    embeddings
-      .join(dupOf, Seq("vec_id"), "left")
-      .filter(col("dup_of").isNull)
-      .drop("dup_of")
-      .orderBy("vec_id")
-  }
-
-  /** All-pairs-free near-neighbor pairs: LSH signature → bucket equi-join
-    * → exact cosine on candidates only (same shape as MinHash dedup).
-    */
   /** Shared per-label centroid aggregate over valid rows (the recipe
     * labelCentroids / nearestCentroid / embeddingDrift all build on).
     */
@@ -256,64 +233,13 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** MULTIBAND hyperplane LSH near-neighbor pairs: `bands` independent
-    * plane families, candidate = same bucket in ANY band, exact cosine on
-    * the deduped candidates. Single-band recall at modest cosine is
-    * intrinsically poor — p = (1 - θ/π)^planes per band (≈ 5% per band at
-    * cos 0.35 with 6 planes) — and the fix is the same AND-OR
-    * amplification MinHash banding uses: recall = 1 - (1 - p)^bands,
-    * tunable to any target by adding bands at linear cost. Candidates
-    * are deduped to (vec_a, vec_b) BEFORE the embedding join, so the
-    * exact cosine runs once per pair no matter how many bands collide.
-    * Same no-all-pairs scale shape as [[nearNeighborPairs]]; the banded
-    * stream is `bands`× the input, never quadratic.
-    */
-  def nearNeighborPairsMultiband(embeddings: DataFrame, minScore: Double = 0.95,
-      planes: Int = 8, bands: Int = 4): DataFrame = {
-    require(planes <= 30, "bucket is an int bitmask")
-    require(bands >= 1, "need at least one band")
-    val banded = embeddings.select(col("vec_id"),
-        posexplode(array((0 until bands).map(bd =>
-          SimilarityIndex.signature(col("embedding"), planes, bd * planes)): _*)))
-      .select(col("vec_id"), col("pos").as("band"), col("col").as("bucket"))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-    val e = embeddings.select(col("vec_id"), col("embedding"))
-    cand
-      .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
-      .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        round(cosineSim(col("emb_a"), col("emb_b")), 6).as("score"))
-      .filter(!isnan(col("score")) && col("score") >= minScore)
-      .orderBy("vec_a", "vec_b")
-  }
-
-  def nearNeighborPairs(embeddings: DataFrame, minScore: Double = 0.95,
-      planes: Int = 16): DataFrame = {
-    require(planes <= 30, "bucket is an int bitmask")
-    val sigs = embeddings.select(col("vec_id"), col("embedding"),
-      SimilarityIndex.signature(col("embedding"), planes).as("bucket"))
-    val a = sigs.select(col("bucket"), col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
-    val b = sigs.select(col("bucket"), col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(cosineSim(col("emb_a"), col("emb_b")), 6).as("score"))
-      .filter(!isnan(col("score")) && col("score") >= minScore)
-      .orderBy("vec_a", "vec_b")
-  }
-
   /** SemDeDup-style SEMANTIC deduplication: partition the corpus into
     * nearest-centroid clusters, then drop every vector that has a
     * smaller-id near-duplicate (cosine ≥ `minScore`) in the SAME cluster.
     * This is the embedding-space analog of the text near-dup keep-one
     * policy — the pruning step shown to shrink web-scale training sets
-    * with no quality loss — and the same greedy, closure-free
-    * representative rule [[dedupByEmbedding]] uses.
+    * with no quality loss — with a greedy, closure-free representative
+    * rule: a row is dropped if ANY smaller-id near-dup exists.
     *
     * Scale shape — the whole point of the cluster partition is BOUNDED
     * pair blocks, and a fixed centroid count cannot bound them: with k
@@ -471,8 +397,8 @@ object Similarity {
     * bit-identical on any IEEE-754 engine.
     *
     * Scale shape: entirely row-local — a scan-bound map with no shuffle,
-    * no state; composes with [[SimilarityIndex.writeIndex]] as the storage
-    * format of the inverted lists.
+    * no state; [[withQuantization]] stores the same codes in IVF's
+    * inverted lists.
     */
   def quantizeEmbeddings(embeddings: DataFrame): DataFrame = {
     val micro = microUnits
@@ -502,7 +428,7 @@ object Similarity {
     * same exact-integer codes as [[quantizeEmbeddings]], but kept as an
     * `array<tinyint>` (values shifted by −128 into byte range) so the
     * persisted element really is one byte — the schema-level form of the
-    * 4× compression claim, consumed by `IvfIndex.writeQuantizedIndex`.
+    * 4× compression claim, consumed by [[IvfIndex.quantizedLists]].
     */
   def withQuantization(df: DataFrame): DataFrame = {
     val code = (x: org.apache.spark.sql.Column) =>
@@ -558,15 +484,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Deterministic pseudo-random hyperplane weight for
-    * [[annOraclePairs]]: plain LCG over the flattened (plane, dim)
-    * index, range [−1000, 1000]. A FUNCTION of the index, not stored
-    * state — the Spark operator and the generated oracle SQL call the
-    * same formula, so the planes are a single source of truth.
-    */
-  private[graft] def annPlaneWeight(plane: Int, dim: Int, dims: Int): Long =
-    graft.functions.AnnPlaneWeights.weight(plane, dim, dims)
-
   /** Corpus-proportional LSH band width for [[annOraclePairs]]:
     * `floorBits + ceil(log2(nVec / targetBucket))`, floored at
     * `floorBits` so every driver scale (≤ targetBucket vectors) keeps
@@ -596,8 +513,9 @@ object Similarity {
     * sign→band→bucket-join→verify pipeline under the DuckDB hash gate).
     *
     * Signature: 6·bandBits integer hyperplanes with LCG weights
-    * (|w| ≤ 1000, the pure index formula [[annPlaneWeight]] — Spark's
-    * fused signing expression ([[graft.functions.AnnPlaneDots]]) and
+    * (|w| ≤ 1000, the pure index formula of
+    * [[graft.functions.AnnPlaneWeights]] — Spark's fused signing
+    * expression ([[graft.functions.AnnPlaneDots]]) and
     * the oracle's inline SQL compute the SAME formula, so the planes
     * stay a single source of truth),
     * dotted against the micro-unit floor rendering of the embedding —
@@ -831,57 +749,11 @@ object Similarity {
   }
 }
 
-/** Random-hyperplane LSH index over an embedding column.
-  *
-  * Hyperplanes are deterministic pseudo-random (hash-seeded, seed fixed) so
-  * index build and query agree without storing plane vectors. Executor and
-  * driver share ONE signing kernel ([[graft.functions.LshSignatureUtil]]),
-  * sized by each vector's own length — an index built over d-dim vectors
-  * probes correctly for any d.
+/** Retrieval-tier contracts over an embedding column: the sign-bit
+  * Hamming pre-rank ([[hammingPrerank]]) and the top-k score margins
+  * ([[marginStats]]).
   */
 object SimilarityIndex {
-
-  /** Sign-bit signature: bit i = (embedding · plane_i >= 0). Returns an
-    * int bucket in [0, 2^planes). Native fused expression — the builtin
-    * zip_with/aggregate formulation runs `planes` interpreted lambda
-    * chains per row.
-    */
-  def signature(embedding: org.apache.spark.sql.Column, planes: Int = 16,
-      offset: Int = 0): org.apache.spark.sql.Column =
-    graft.functions.VectorFunctions.lshSignature(embedding, planes, offset)
-
-  /** Build: signatures computed once, written partitioned by bucket —
-    * queries prune to probed buckets at the file level.
-    */
-  def writeIndex(embeddings: DataFrame, path: String, planes: Int = 16): Unit =
-    embeddings
-      .withColumn("bucket", signature(col("embedding"), planes))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-  /** Query: read ONLY the query vector's bucket partition (plus optional
-    * multiprobe neighbors at Hamming distance 1), exact cosine within.
-    */
-  def queryIndex(spark: SparkSession, path: String, queryVec: Array[Float],
-      k: Int, planes: Int = 16, multiprobe: Boolean = true): DataFrame = {
-    val qSig = signatureOf(queryVec, planes)
-    val probes: Seq[Int] =
-      if (multiprobe) qSig +: (0 until planes).map(i => qSig ^ (1 << i))
-      else Seq(qSig)
-    val qLit = array(queryVec.map(v => lit(v)).toIndexedSeq: _*)
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probes: _*)) // partition pruning on disk
-      .select(col("vec_id"),
-        round(graft.functions.VectorFunctions.cosineSim(col("embedding"), qLit), 6)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** Driver-side signature of a query vector (same kernel as
-    * [[signature]] — cannot drift).
-    */
-  def signatureOf(vec: Array[Float], planes: Int = 16): Int =
-    graft.functions.LshSignatureUtil.signatureOf(vec, planes)
 
   /** BINARY (sign-bit) EMBEDDING PRE-RANK — the 32×-compression retrieval
     * tier: each 64-dim float vector collapses to its 64 sign bits, packed

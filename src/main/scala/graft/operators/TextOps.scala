@@ -104,9 +104,9 @@ object TextOps {
     * full exploded gram stream (corpus × ~doc_len rows) twice; this is
     * scan-bound and embarrassingly parallel. The registered query runs
     * the fused [[graft.functions.RepetitionCounts]] expression (one
-    * sorted-index scan per row, inside codegen); the builtin higher-order
-    * -function formulation below computes identical counts and referees
-    * it in `DecontamSpec`.
+    * sorted-index scan per row, inside codegen); a builtin higher-order
+    * -function formulation in `DecontamSpec` computes identical counts
+    * and referees it.
     */
   def repetitionStats(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.size
@@ -119,53 +119,6 @@ object TextOps {
         col("rc.n_distinct_grams").as("n_distinct_grams"),
         col("rc.top_gram_count").as("top_gram_count"),
         col("rc.dup_gram_count").as("dup_gram_count"))
-      .orderBy("doc_id")
-  }
-
-  /** Builtin-composition form of [[repetitionStats]] (array_sort +
-    * zip_with adjacency runs + aggregate folds — the (a)-tier compose-
-    * existing-ops variant): identical output, kept as the referee for the
-    * fused expression and for engines without the extension. HOF lambdas
-    * evaluate interpreted per element, which is why the fused kernel owns
-    * the registered query.
-    */
-  def repetitionStatsBuiltin(documents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{
-      aggregate, array, array_sort, concat, greatest,
-      size, slice, struct, when, zip_with}
-    documents
-      .select(col("doc_id"), tokens(col("text")).as("toks")) // split ONCE
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), array_sort(shinglesKTokens(col("toks"), 2)).as("sorted"))
-      .withColumn("m", size(col("sorted")))
-      // eq(i) = 1 iff sorted(i) == sorted(i+1): run-length encoding seed
-      .withColumn("eq", zip_with(
-        slice(col("sorted"), lit(1), col("m") - 1),
-        slice(col("sorted"), lit(2), col("m") - 1),
-        (a, b) => when(a === b, 1).otherwise(0)))
-      // sum(eq) = number of adjacent-equal positions = m - distinct count
-      .withColumn("n_eq", aggregate(col("eq"), lit(0), (a, x) => a + x))
-      .select(
-        col("doc_id"),
-        col("m").cast("long").as("n_grams"),
-        (col("m") - col("n_eq")).cast("long").as("n_distinct_grams"),
-        // longest equal-run + 1, via a sequential fold (cur, best)
-        (aggregate(col("eq"),
-          struct(lit(0).as("cur"), lit(0).as("best")),
-          (acc, x) => {
-            val cur = when(x === 1, acc("cur") + 1).otherwise(lit(0))
-            struct(cur.as("cur"), greatest(acc("best"), cur).as("best"))
-          },
-          acc => acc("best")) + 1).cast("long").as("top_gram_count"),
-        // a gram instance is a SINGLETON iff no equal neighbor on either
-        // side of its sorted position (pad the run-flags with 0 at both
-        // ends so the borders read cleanly)
-        (col("m") - aggregate(
-          zip_with(
-            slice(concat(array(lit(0)), col("eq")), lit(1), col("m")),
-            slice(concat(col("eq"), array(lit(0))), lit(1), col("m")),
-            (l, r) => when(l === 0 && r === 0, 1).otherwise(0)),
-          lit(0), (a, x) => a + x)).cast("long").as("dup_gram_count"))
       .orderBy("doc_id")
   }
 
@@ -434,8 +387,8 @@ object TextOps {
     */
   def segmentDedup(documents: DataFrame, segTokens: Int = 8): DataFrame = {
     require(segTokens > 0)
-    import org.apache.spark.sql.functions.{array_sort, col => c, collect_list,
-      concat_ws, explode, min, struct}
+    import org.apache.spark.sql.functions.{col => c, concat_ws, explode, min,
+      struct}
     val segs = documents
       .select(c("doc_id"), tokens(c("text")).as("toks"))
       // greatest(.., 0): with 0 tokens and segTokens = 1 the unguarded
@@ -1224,8 +1177,8 @@ object TextOps {
     * training, once to encode), never per merge round.
     */
   def bpeEncode(documents: DataFrame, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.functions.{explode, expr, filter, length,
-      lower, split, sum => fsum}
+    import org.apache.spark.sql.functions.{explode, expr, filter, lower, split,
+      sum => fsum}
     val (vocab, _) = bpeTrain(documents, k)
     val segmented = vocab.select(col("w"),
       filter(split(col("s"), "\\|\\|"), x => x =!= "").as("toks"))

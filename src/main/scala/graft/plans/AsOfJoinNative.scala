@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * co-partitioned. This physical operator instead DECLARES its needs
   * ([[ClusteredDistribution]] on the key for both children, (key, time)
   * ordering) and lets `EnsureRequirements` decide: on two tables
-  * BUCKETED by the key ([[graft.sources.Sinks.saveBucketed]]) the
+  * BUCKETED by the key (`DataFrameWriter.bucketBy` + `saveAsTable`) the
   * planned query has ZERO exchanges — the 100 TB shape where the corpus
   * and the quote/dimension stream are both maintained bucketed and an
   * as-of enrichment is a pure partition-local sorted merge. (Plan-pinned

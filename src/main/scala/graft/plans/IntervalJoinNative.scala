@@ -35,7 +35,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *
   * Like the as-of node it DECLARES ClusteredDistribution(key) +
   * (key, start) child ordering, so on key-bucketed tables
-  * ([[graft.sources.Sinks.saveBucketed]]) EnsureRequirements plans ZERO
+  * (`DataFrameWriter.bucketBy`) EnsureRequirements plans ZERO
   * exchanges; on anything else it inserts exactly the sort-merge
   * shuffles. Semantics: INNER join on `lKey = rKey AND lStart ≤ rEnd
   * AND rStart ≤ lEnd` (closed endpoints, the SQL `overlaps` convention

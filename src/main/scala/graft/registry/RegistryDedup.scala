@@ -84,8 +84,8 @@ private[graft] object RegistryDedup {
     // occupancy stays sublinear in corpus size (maxHamming = 8 would leave
     // ~7-bit chunks whose buckets grow linearly — quadratic verify at 100×).
     // (Hash-seeded simhashPairs/simhashPairsCombination registry entries
-    // retired in r9 — rows-only at the gate; DedupSimilaritySpec keeps the
-    // operators pinned and d23_simhash_oracle/d4c are the hash-green twins.)
+    // retired in r9 — rows-only at the gate; simhashPairs lives on in d4c,
+    // and d23_simhash_oracle/d4c are the hash-green twins.)
     // SimHash banding completeness/soundness vs brute force, driver-
     // witnessed as booleans (DuckDB can't compute SimHash; d5b pattern).
     "d4c_simhash_contract" -> ((s, dir) => Dedup.simhashContract(Tables.documents(s, dir), maxHamming = 3)),

@@ -40,10 +40,10 @@ private[graft] object RegistrySimGraph {
     "g6_cheapest_path" -> ((s, dir) =>
       GraphOps.cheapestPath(Tables.lineitem(s, dir), Tables.part(s, dir))),
     "s1_cosine_topk" -> ((s, dir) => Similarity.bruteForceTopK(Tables.embeddings(s, dir), 0L, 20)),
-    // (Hash-seeded nearNeighborPairs registry entry retired in r9 — LSH
-    // bucket membership is hash-seeded so it could only ever be rows-only
-    // at the gate. The operator stays spec-pinned; s17_ann_oracle is the
-    // hash-green LCG-derandomized ANN twin and s3_knn_join the exact
+    // (The hash-seeded LSH near-neighbor-pairs entry was retired in r9 —
+    // LSH bucket membership is hash-seeded so it could only ever be
+    // rows-only at the gate — and its operator is gone; s17_ann_oracle is
+    // the hash-green LCG-derandomized ANN twin and s3_knn_join the exact
     // oracle-proven equivalence evidence.)
     // Exact-integer per-label centroids via a mergeable Aggregator (one
     // (dim+1)-long state per group-partition, no dim-fold explode shuffle).
@@ -813,7 +813,7 @@ private[graft] object RegistrySimGraph {
         |SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
         |FROM d GROUP BY degree ORDER BY degree""".stripMargin,
     // the plane dots and band keys are generated from the SAME LCG
-    // weight formula the Spark operator embeds (annPlaneWeight — single
+    // weight formula the Spark operator embeds (AnnPlaneWeights — single
     // source of truth), with the band WIDTH derived from the corpus
     // count through the same integer doubling ladder as
     // Similarity.annBandBits: fixed 5-bit bands are 32 buckets per band

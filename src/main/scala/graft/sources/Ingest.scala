@@ -11,9 +11,8 @@ import scala.util.Try
   * partitioned write (`/root/reference/src/glue/b3_collector.py:34-107,167,179`).
   *
   * The reference fetches on the driver (its scalability cliff — noted in
-  * SURVEY.md §3.E1). Here the fetch fans out over executors via a Dataset
-  * of item keys + `flatMap`, so 100k tickers pull in parallel on the
-  * cluster; the driver path exists only as the S2 error-isolation shape.
+  * SURVEY.md §3.E1); so does this one, which keeps the reference's S2
+  * error-isolation shape.
   */
 object Ingest {
 
@@ -34,19 +33,6 @@ object Ingest {
     */
   def fetchAll(items: Seq[String], fetch: String => Seq[Row]): Seq[Row] =
     items.flatMap(t => Try(fetch(t)).toOption.getOrElse(Seq.empty))
-
-  /** Distributed variant: the fetch runs on executors, one partition per
-    * batch of items. This is the 100 TB-shaped ingest (the driver loop
-    * above replicates the reference's semantics, not its bottleneck).
-    */
-  def fetchDistributed(spark: SparkSession, items: Seq[String],
-      fetch: String => Seq[Row]): DataFrame = {
-    import spark.implicits._
-    val encoder = org.apache.spark.sql.Encoders.row(rawSchema)
-    spark.createDataset(items)
-      .repartition(math.max(1, items.size / 16))
-      .flatMap(t => Try(fetch(t)).toOption.getOrElse(Seq.empty))(encoder)
-  }
 
   /** S4: rows→DataFrame with EXPLICIT schema (the reference relies on
     * pandas inference at `b3_collector.py:167`; explicit `StructType` is
@@ -84,59 +70,4 @@ object Ingest {
       fetch: String => Seq[Row]): DataFrame =
     withDataproc(ensureDateColumn(normalizeColumns(
       toDataFrame(spark, fetchAll(items, fetch)))))
-
-  /** JSONL corpus egress — the interchange format LLM corpora actually
-    * ship in (one JSON document per line, splittable, appendable).
-    */
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  /** JSONL corpus ingest with CORRUPT-RECORD isolation — the format-level
-    * form of the S2 error-isolation contract: a malformed line (truncated
-    * upload, encoding damage, a stray log line) must neither kill the
-    * 100 TB read nor silently vanish. PERMISSIVE mode parses what it can;
-    * broken lines surface whole in `_corrupt_record` for quarantine, so
-    * `good + quarantined == input lines` is auditable.
-    *
-    * The schema is EXPLICIT (never inferred): inference reads the corpus
-    * twice and locks in whatever the first sample implied.
-    */
-  def readJsonlCorpus(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-
-  /** CSV ingest with the same corrupt-record isolation as
-    * [[readJsonlCorpus]]: explicit schema, PERMISSIVE parse, malformed
-    * lines (wrong arity, untypeable field) preserved whole in
-    * `_corrupt_record`. CSV adds the type-coercion failure mode JSON
-    * lacks — a non-numeric string in a LongType column quarantines the
-    * row rather than nulling the cell silently.
-    */
-  def readCsvCorpus(spark: SparkSession, path: String, schema: StructType,
-      header: Boolean = true, delimiter: String = ","): DataFrame =
-    spark.read
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("header", header.toString)
-      .option("sep", delimiter)
-      .csv(path)
-
-  /** Split a [[readJsonlCorpus]]/[[readCsvCorpus]] parse into
-    * (good, quarantined). The input is cached first: Spark refuses a
-    * query whose only referenced column is the internal corrupt-record
-    * column (SPARK-21610), and without the cache the two branches would
-    * re-parse the corpus twice anyway — call `unpersist()` on the
-    * returned `parsed` handle when both sides are consumed.
-    */
-  def quarantineSplit(parsed: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val cached = parsed.cache()
-    (cached,
-      cached.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),
-      cached.filter(col("_corrupt_record").isNotNull))
-  }
 }

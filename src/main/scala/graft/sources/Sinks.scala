@@ -13,9 +13,9 @@ import graft.spark.Materialize
   * Scale notes: Hive-style `partitionBy` directories are what make
   * downstream partition pruning possible — the refined layout
   * `dataproc=…/ticker=…` means a per-ticker query reads one directory out
-  * of thousands. [[writePartitioned]] and [[saveAsManagedTable]] own that
-  * layout: they spread the rows by the partition columns
-  * ([[graft.spark.Materialize.spread]]) before writing, so each directory
+  * of thousands. [[writePartitioned]] owns that layout: it spreads the
+  * rows by the partition columns ([[graft.spark.Materialize.spread]])
+  * before writing, so each directory
   * gets one file, not `numShufflePartitions` shards, and the directories
   * are written in parallel by the shuffle width's tasks, not one after
   * another by a single task.
@@ -36,7 +36,9 @@ object Sinks {
       format: String = "parquet"): Unit = {
     require(Set("parquet", "orc").contains(format),
       s"writePartitioned: columnar formats only (parquet|orc), got '$format'")
-    laidOut(df, partitionCols).format(format).save(path)
+    Materialize.spread(df, partitionCols.map(df.col): _*)
+      .write.mode("overwrite").partitionBy(partitionCols: _*)
+      .format(format).save(path)
   }
 
   /** The batch jobs' publish step: [[writePartitioned]] `df` to `path`
@@ -52,19 +54,6 @@ object Sinks {
       createOrReplaceExternal(df.sparkSession, t, path, partitionCols)
       recoverPartitions(df.sparkSession, t)
     }
-  }
-
-  /** The overwrite writer of `df` spread and partitioned by `partitionCols`. */
-  private def laidOut(df: DataFrame, partitionCols: Seq[String]) =
-    Materialize.spread(df, partitionCols.map(df.col): _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*)
-
-  /** Read counterpart of [[writePartitioned]] (partition discovery included). */
-  def readColumnar(spark: SparkSession, path: String,
-      format: String = "parquet"): DataFrame = {
-    require(Set("parquet", "orc").contains(format),
-      s"readColumnar: columnar formats only (parquet|orc), got '$format'")
-    spark.read.format(format).load(path)
   }
 
   /** K3: catalog DDL — create-or-replace a partitioned external table over
@@ -90,55 +79,6 @@ object Sinks {
       s"CREATE TABLE $table ($colsDdl) USING parquet OPTIONS (path '$pathLit')$partClause")
   }
 
-  /** K3 update-in-place: evolve a LIVE external table's schema to the
-    * files' current schema — the reference's get-then-create-**or-update**
-    * probe (`b3_collector.py:224-237`, the `update_table` branch), which
-    * [[createOrReplaceExternal]]'s drop/recreate does not express: on a
-    * warehouse table, dropping loses grants/stats/partition metadata and
-    * races readers, while ADD COLUMNS is a metadata-only edit.
-    *
-    *  - columns present in the files but not the table are APPENDED
-    *    (ALTER TABLE ADD COLUMNS; rows in pre-evolution files read as
-    *    null for them — standard parquet missing-column semantics);
-    *  - a same-name column with a DIFFERENT type is rejected loudly
-    *    (silent type evolution corrupts downstream casts);
-    *  - partitions are untouched: ADD COLUMNS is metadata-only, so
-    *    registered partitions and their data stay live throughout.
-    *
-    * Returns the added column names (empty = schema already current).
-    */
-  def alterExternalAddColumns(spark: SparkSession, table: String,
-      path: String): Seq[String] = {
-    val current = spark.table(table).schema
-    // mergeSchema: the new column may exist only in the newest files
-    val incoming = spark.read.option("mergeSchema", "true").parquet(path).schema
-    val curByName = current.fields.map(f => f.name.toLowerCase -> f).toMap
-    incoming.fields.foreach { f =>
-      curByName.get(f.name.toLowerCase).foreach { c =>
-        require(c.dataType == f.dataType,
-          s"incompatible evolution for column '${f.name}': " +
-            s"${c.dataType.sql} -> ${f.dataType.sql}")
-      }
-    }
-    val added = incoming.fields
-      .filterNot(f => curByName.contains(f.name.toLowerCase)).toSeq
-    if (added.nonEmpty) {
-      val ddl = added.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-      spark.sql(s"ALTER TABLE ${quoteParts(table)} ADD COLUMNS ($ddl)")
-    }
-    added.map(_.name)
-  }
-
-  /** The reference's full catalog probe: create the external table if
-    * absent, otherwise evolve it in place (`b3_collector.py:183-237`).
-    */
-  def createOrEvolveExternal(spark: SparkSession, table: String, path: String,
-      partitionCols: Seq[String]): Seq[String] =
-    if (!spark.catalog.tableExists(table)) {
-      createOrReplaceExternal(spark, table, path, partitionCols)
-      Seq.empty
-    } else alterExternalAddColumns(spark, table, path)
-
   /** Backtick-quote each part of a (possibly qualified) identifier. */
   private def quoteParts(ident: String): String = ident.split('.')
     .map(p => "`" + p.replace("`", "``") + "`").mkString(".")
@@ -146,28 +86,6 @@ object Sinks {
   /** K4: partition discovery (MSCK analog). */
   def recoverPartitions(spark: SparkSession, table: String): Unit =
     spark.catalog.recoverPartitions(table)
-
-  /** K3 managed variant: `saveAsTable` with partitioning. */
-  def saveAsManagedTable(df: DataFrame, table: String, partitionCols: Seq[String]): Unit =
-    laidOut(df, partitionCols).format("parquet").saveAsTable(table)
-
-  /** Bucketed managed table: pre-shuffles data into `numBuckets` by the
-    * join key at WRITE time, so repeated joins/aggregations on that key
-    * skip their exchange entirely (SortMergeJoin over co-located buckets).
-    * The 100 TB pattern for fact-fact joins that recur: pay the shuffle
-    * once at ingest, never again at query time.
-    */
-  def saveBucketed(df: DataFrame, table: String, bucketCol: String,
-      numBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** K5: schema diagnostics (`printSchema`/`schema`/`columns`). */
-  def describe(df: DataFrame): (String, Seq[String]) =
-    (df.schema.treeString, df.columns.toIndexedSeq)
 
   /** Catalog STATISTICS: `ANALYZE TABLE` row/size stats (optionally
     * per-column min/max/ndv histograms-free stats). Statistics are what
@@ -207,7 +125,7 @@ object Sinks {
     require(subdirs.isEmpty,
       s"compact: $path has partition subdirectories " +
         s"(${subdirs.take(3).map(_.getName).mkString(", ")}…); " +
-        "use compactPartitioned to rewrite each leaf")
+        "compact each leaf directory instead")
     def dataFiles() = new java.io.File(path).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     val before = dataFiles()
@@ -231,177 +149,6 @@ object Sinks {
     }
     org.apache.commons.io.FileUtils.deleteDirectory(old)
     (before.length, dataFiles().length)
-  }
-
-  /** Partition-aware compaction: walk a Hive-style partitioned tree and
-    * [[compact]] each LEAF directory in place. Rewriting per leaf keeps the
-    * `k=v` directory structure (and thus partition pruning) intact — the
-    * whole-tree alternative would flatten it. Returns summed
-    * (filesBefore, filesAfter) over all leaves.
-    */
-  def compactPartitioned(spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val root = new java.io.File(path)
-    require(root.isDirectory, s"compactPartitioned: $path is not an existing directory")
-    def leaves(dir: java.io.File): Seq[java.io.File] = {
-      val kids = dir.listFiles().filter(_.isDirectory)
-        .filterNot(_.getName.startsWith("_"))
-      if (kids.isEmpty) Seq(dir) else kids.toSeq.flatMap(leaves)
-    }
-    leaves(root).map(l => compact(spark, l.getPath, targetFileBytes))
-      .foldLeft((0, 0)) { case ((b, a), (lb, la)) => (b + lb, a + la) }
-  }
-
-  /** RETENTION sweep: drop whole Hive-style partitions whose value sorts
-    * below `keepFrom` — the TTL/compliance expiry a partitioned warehouse
-    * runs nightly (e.g. `dataproc < 20240101`). Deleting at the DIRECTORY
-    * level is the point: expiry costs O(expired partitions) file-system
-    * operations and zero data rewrite, which is why retention-partitioned
-    * layouts (K1/K2) exist in the first place — row-level deletes would
-    * rewrite the table. Returns the audit list of (partitionValue,
-    * filesRemoved) actually dropped; values compare as zero-padded
-    * strings, the standard yyyyMMdd convention of the `dataproc` column.
-    */
-  def retentionSweep(path: String, partitionCol: String,
-      keepFrom: String): Seq[(String, Int)] = {
-    // Hadoop FileSystem, not java.io.File: the sweep must work wherever
-    // the warehouse lives (HDFS, S3A, local), and listStatus raises
-    // IOException on I/O error instead of java.io's silent null. The
-    // conf must be the SESSION's hadoop conf — spark.hadoop.* settings
-    // (S3A credentials, fs.defaultFS) never reach a bare Configuration()
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    val root = new HPath(path)
-    val conf = SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val fs = root.getFileSystem(conf)
-    require(fs.getFileStatus(root).isDirectory,
-      s"retentionSweep: $path is not an existing directory")
-    val prefix = partitionCol + "="
-    // recursive: K2 layouts nest sub-partition directories under the
-    // expired partition; a flat count would miss them silently
-    def dataFileCount(p: HPath): Int = fs.listStatus(p).map { st =>
-      if (st.isDirectory) dataFileCount(st.getPath)
-      else if (st.getPath.getName.startsWith("_") ||
-        st.getPath.getName.startsWith(".")) 0
-      else 1 // hidden _SUCCESS/.crc bookkeeping is not data
-    }.sum
-    val expired = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .filter(_.getPath.getName.stripPrefix(prefix) < keepFrom)
-      .sortBy(_.getPath.getName)
-    expired.map { st =>
-      val nData = dataFileCount(st.getPath)
-      // an audit that claims expiry while bytes remain readable is a
-      // compliance incident, not a warning - fail the sweep loudly
-      require(fs.delete(st.getPath, true),
-        s"retentionSweep: could not delete ${st.getPath}")
-      (st.getPath.getName.stripPrefix(prefix), nData)
-    }
-  }
-
-  /** Range-CLUSTERED write: range-repartition + sort within partitions by
-    * the clustering columns before writing, so every parquet file covers
-    * a narrow, non-overlapping slice of the clustering key. Row-group
-    * min/max statistics then let any engine skip files/row-groups whose
-    * range can't match a predicate — data skipping for HIGH-cardinality
-    * columns where Hive-style `partitionBy` directories would explode
-    * into millions of tiny partitions.
-    */
-  def writeRangeClustered(df: DataFrame, path: String, numFiles: Int,
-      clusterCols: String*): Unit = {
-    val cols = clusterCols.map(df.col)
-    df.repartitionByRange(numFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Z-ORDER clustered write: interleave the bits of two rank-normalized
-    * columns into one Morton code, then range-cluster on that code.
-    * [[writeRangeClustered]] concentrates ALL its skipping power on the
-    * leading column — a predicate on the second column alone still reads
-    * every file. The Morton code alternates bits of both columns, so each
-    * written file covers a narrow range of BOTH: predicates on either
-    * column (or both) skip files via parquet min/max stats.
-    *
-    * Scale notes: the only driver-side action is a 4-value min/max agg
-    * (metadata-scale); everything else is codegen'd column arithmetic plus
-    * the same range-repartition + local sort as the 1-D variant. Min/max
-    * linearization assumes a roughly uniform value distribution — for
-    * heavy skew, substitute quantile boundaries (approx_quantile over a
-    * sample) for the linear map; the bit-interleave is unchanged.
-    */
-  def writeZOrdered(df: DataFrame, path: String, numFiles: Int,
-      colA: String, colB: String): Unit = {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions._
-    val b = df.agg(
-      min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).head()
-    if (b.isNullAt(0) || b.isNullAt(2)) {
-      // empty input (or an all-null cluster column): no bounds to
-      // linearize — write the empty dataset like writeRangeClustered does
-      df.write.mode("overwrite").parquet(path)
-      return
-    }
-    // scale to 16-bit [0, 65535]; clamp guards FP edge rounding at max
-    def norm(c: String, lo: Double, hi: Double): Column = {
-      val span = if (hi > lo) hi - lo else 1.0
-      least(greatest(
-        (((col(c).cast("double") - lo) / span) * 65535.0).cast("long"),
-        lit(0L)), lit(65535L))
-    }
-    // classic bit-spread: insert a zero between every bit of a 16-bit value
-    def spread16(c: Column): Column = {
-      val s1 = (c bitwiseOR shiftleft(c, 8)) bitwiseAND lit(0x00FF00FFL)
-      val s2 = (s1 bitwiseOR shiftleft(s1, 4)) bitwiseAND lit(0x0F0F0F0FL)
-      val s3 = (s2 bitwiseOR shiftleft(s2, 2)) bitwiseAND lit(0x33333333L)
-      (s3 bitwiseOR shiftleft(s3, 1)) bitwiseAND lit(0x55555555L)
-    }
-    val z = spread16(norm(colA, b.getDouble(0), b.getDouble(1))) bitwiseOR
-      shiftleft(spread16(norm(colB, b.getDouble(2), b.getDouble(3))), 1)
-    df.withColumn("_z", z)
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z") // projection after the local sort; file order is kept
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** SHARDED JSONL CORPUS EXPORT + MANIFEST — the delivery format a
-    * training run actually consumes: `shards` range-partitioned
-    * `.jsonl` files, key-clustered so a shard is a contiguous doc_id
-    * range (resumable, splittable by shard), plus a manifest DataFrame
-    * the publisher persists next to the data: per shard the row count,
-    * byte size, and an ORDER-INDEPENDENT content checksum (bit-XOR of
-    * per-line xxhash64 — file order and layout don't matter, one
-    * flipped byte does). The manifest is rebuilt FROM THE WRITTEN
-    * FILES, not from the in-memory frame: it attests what landed on
-    * disk, which is the thing a consumer can re-verify.
-    *
-    * Determinism: Spark writes JSON fields in schema order, and
-    * `repartitionByRange` samples with a fixed seed — two exports of
-    * the same data produce the same shard membership and checksums
-    * (asserted in the spec). Scale shape: one range shuffle to cluster,
-    * one scan of the written text for the manifest; both ∝ corpus.
-    */
-  def exportJsonlShards(documents: DataFrame, path: String,
-      shards: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val spark = documents.sparkSession
-    documents
-      .repartitionByRange(shards, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").json(path)
-    spark.read.text(path)
-      .select(regexp_extract(input_file_name(), "part-(\\d+)", 1)
-        .cast("int").as("shard"),
-        col("value"))
-      .groupBy("shard")
-      .agg(count(lit(1)).as("n_docs"),
-        // +1 per line for the newline the file carries
-        sum(length(col("value")) + 1).as("bytes"),
-        expr("bit_xor(xxhash64(value))").as("checksum"))
-      .orderBy("shard")
   }
 
   /** DATA-SKIPPING EFFECTIVENESS audit — zone-map (min/max) statistics

@@ -56,8 +56,10 @@ class AsOfNativeSpec extends SparkTestBase {
     val tTab = s"asof_trades_${System.nanoTime()}"
     val qTab = s"asof_quotes_${System.nanoTime()}"
     try {
-      sources.Sinks.saveBucketed(trades, tTab, "k", 4)
-      sources.Sinks.saveBucketed(quotes, qTab, "k", 4)
+      trades.write.mode("overwrite")
+        .bucketBy(4, "k").sortBy("k").format("parquet").saveAsTable(tTab)
+      quotes.write.mode("overwrite")
+        .bucketBy(4, "k").sortBy("k").format("parquet").saveAsTable(qTab)
       val bt = spark.table(tTab)
       val bq = spark.table(qTab)
       val joinedB = AsOfJoinNative.join(bt, bq, "k", "t", Seq("px"))

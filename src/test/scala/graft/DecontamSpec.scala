@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Decontam, TextOps}
 
@@ -149,10 +150,53 @@ class DecontamSpec extends SparkTestBase {
     assert(out.count() > 0)
   }
 
+  /** Builtin-composition form of `TextOps.repetitionStats` (array_sort +
+    * zip_with adjacency runs + aggregate folds): the referee for the fused
+    * `repetition_counts` expression. HOF lambdas evaluate interpreted per
+    * element, which is why the fused kernel owns the registered query.
+    */
+  private def repetitionStatsBuiltin(documents: DataFrame): DataFrame = {
+    import graft.functions.TextFunctions.{shinglesKTokens, tokens}
+    documents
+      .select(col("doc_id"), tokens(col("text")).as("toks")) // split ONCE
+      .filter(size(col("toks")) >= 2)
+      .select(col("doc_id"), array_sort(shinglesKTokens(col("toks"), 2)).as("sorted"))
+      .withColumn("m", size(col("sorted")))
+      // eq(i) = 1 iff sorted(i) == sorted(i+1): run-length encoding seed
+      .withColumn("eq", zip_with(
+        slice(col("sorted"), lit(1), col("m") - 1),
+        slice(col("sorted"), lit(2), col("m") - 1),
+        (a, b) => when(a === b, 1).otherwise(0)))
+      // sum(eq) = number of adjacent-equal positions = m - distinct count
+      .withColumn("n_eq", aggregate(col("eq"), lit(0), (a, x) => a + x))
+      .select(
+        col("doc_id"),
+        col("m").cast("long").as("n_grams"),
+        (col("m") - col("n_eq")).cast("long").as("n_distinct_grams"),
+        // longest equal-run + 1, via a sequential fold (cur, best)
+        (aggregate(col("eq"),
+          struct(lit(0).as("cur"), lit(0).as("best")),
+          (acc, x) => {
+            val cur = when(x === 1, acc("cur") + 1).otherwise(lit(0))
+            struct(cur.as("cur"), greatest(acc("best"), cur).as("best"))
+          },
+          acc => acc("best")) + 1).cast("long").as("top_gram_count"),
+        // a gram instance is a SINGLETON iff no equal neighbor on either
+        // side of its sorted position (pad the run-flags with 0 at both
+        // ends so the borders read cleanly)
+        (col("m") - aggregate(
+          zip_with(
+            slice(concat(array(lit(0)), col("eq")), lit(1), col("m")),
+            slice(concat(col("eq"), array(lit(0))), lit(1), col("m")),
+            (l, r) => when(l === 0 && r === 0, 1).otherwise(0)),
+          lit(0), (a, x) => a + x)).cast("long").as("dup_gram_count"))
+      .orderBy("doc_id")
+  }
+
   test("fused repetition expression equals the builtin HOF formulation") {
     val docs = Tables.documents(spark, sf0001)
     val fused = TextOps.repetitionStats(docs).collect().toSeq
-    val builtin = TextOps.repetitionStatsBuiltin(docs).collect().toSeq
+    val builtin = repetitionStatsBuiltin(docs).collect().toSeq
     assert(fused === builtin)
   }
 }

@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, GraphOps, Similarity, SimilarityIndex}
+import graft.operators.{Dedup, GraphOps, Similarity}
 import graft.functions.VectorFunctions
 
 /** LSH dedup + similarity: recall on planted near-duplicates, and the
   * no-all-pairs scale guarantees (plan-level).
   */
-class DedupSimilaritySpec extends SparkTestBase {
+class DedupSimilaritySpec extends SparkTestBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val baseText =
@@ -158,8 +160,9 @@ class DedupSimilaritySpec extends SparkTestBase {
     // bucketed on band_key and only the (small) incoming side shuffles
     val docs = Tables.documents(spark, sf0001)
     val nb = graft.operators.TextOps.hexNibble("doc_id")
-    graft.sources.Sinks.saveBucketed(
-      Dedup.bandIndex(docs.filter(nb < 12)), "band_idx_bucketed", "band_key", 4)
+    Dedup.bandIndex(docs.filter(nb < 12))
+      .write.mode("overwrite").bucketBy(4, "band_key").sortBy("band_key")
+      .format("parquet").saveAsTable("band_idx_bucketed")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -191,30 +194,17 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(r.head.getBoolean(1) && r.head.getBoolean(2), r.head.toString)
   }
 
-  test("combination banding equals single-chunk banding at the same radius") {
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // planted docs at a radius wide enough to catch the near-dup
-    assert(pairs(Dedup.simhashPairsCombination(docs, maxHamming = 10)) ===
-      pairs(Dedup.simhashPairs(docs, maxHamming = 10)))
-    // fixture corpus at the registered wide radius — both are the exact
-    // Hamming-8 ball, only candidate generation differs
-    val fixture = Tables.documents(spark, sf0001)
-    assert(pairs(Dedup.simhashPairsCombination(fixture, maxHamming = 8)) ===
-      pairs(Dedup.simhashPairs(fixture, maxHamming = 8)))
-  }
-
   test("minhash union aggregator obeys the union property") {
-    import graft.functions.{MinHash, MinHashUnionAgg}
+    import graft.functions.MinHashUnionAgg
     // sig(shingles(A) ∪ shingles(B)) == elementwise_min(sig(A), sig(B))
     val parts = Seq((1L, Seq("aa bb cc", "bb cc dd")), (1L, Seq("ee ff gg")))
       .toDF("g", "sh")
-    val perPart = parts.select(col("g"), MinHash.minhash(col("sh"), 16).as("sig"))
+    val perPart = parts.select(col("g"), expr("minhash(sh, 16)").as("sig"))
     val viaAgg = perPart.groupBy("g")
       .agg(MinHashUnionAgg.minhashUnion(col("sig"), 16).as("u"))
       .collect().head.getSeq[Long](1)
     val whole = Seq((1L, Seq("aa bb cc", "bb cc dd", "ee ff gg"))).toDF("g", "sh")
-      .select(MinHash.minhash(col("sh"), 16).as("sig"))
+      .select(expr("minhash(sh, 16)").as("sig"))
       .collect().head.getSeq[Long](0)
     assert(viaAgg === whole)
   }
@@ -228,8 +218,11 @@ class DedupSimilaritySpec extends SparkTestBase {
     // shingle Jaccard ~0.07-0.13 (measured brute-force) -> estimate must
     // stay well below identity and within k=32 sampling noise of truth
     val sigs = rows.map(_.getSeq[Long](1))
-    assert(graft.functions.MinHashUnionAgg.estimatedJaccard(sigs(0), sigs(0)) === 1.0)
-    val est = graft.functions.MinHashUnionAgg.estimatedJaccard(sigs(0), sigs(1))
+    // estimated Jaccard: the fraction of agreeing signature components
+    def estimatedJaccard(a: Seq[Long], b: Seq[Long]): Double =
+      a.zip(b).count { case (x, y) => x == y }.toDouble / a.length
+    assert(estimatedJaccard(sigs(0), sigs(0)) === 1.0)
+    val est = estimatedJaccard(sigs(0), sigs(1))
     assert(est >= 0.0 && est <= 0.35, s"cross-lang estimate out of range: $est")
   }
 
@@ -254,6 +247,19 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(top.head.getDouble(1) > 0.999)
   }
 
+  /** Builtin-composition cosine (zip_with + aggregate): the reference the
+    * native `cosine_similarity` expression is checked against.
+    */
+  private def cosineSimBuiltin(a: Column, b: Column): Column = {
+    val prod = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+    val na = aggregate(transform(a, x => x.cast("double") * x.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+    val nb = aggregate(transform(b, x => x.cast("double") * x.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+    prod / (sqrt(na) * sqrt(nb))
+  }
+
   test("custom cosine expression agrees with builtin composition") {
     val two = plantedVectors.limit(10)
       .select(col("vec_id"), col("embedding").as("a"))
@@ -261,7 +267,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     val joined = two.crossJoin(broadcast(one))
     val r = joined.select(
       VectorFunctions.cosineSim(col("a"), col("b")).as("native"),
-      VectorFunctions.cosineSimBuiltin(col("a"), col("b")).as("builtin")).collect()
+      cosineSimBuiltin(col("a"), col("b")).as("builtin")).collect()
     r.foreach(row =>
       assert(math.abs(row.getDouble(0) - row.getDouble(1)) < 1e-12))
   }
@@ -381,53 +387,6 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(out(3L) === ((true, -1L)), "clusters dedup independently")
     assert(out(4L) === ((false, 3L)))
     assert(out(6L) === ((false, 0L)), "condemned by the SMALLEST dup id")
-  }
-
-  test("multiband LSH recall dominates single-band at the same plane width") {
-    val emb = Tables.embeddings(spark, sf0001)
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val single = pairSet(Similarity.nearNeighborPairs(emb, 0.35, planes = 6))
-    val multi = pairSet(Similarity.nearNeighborPairsMultiband(
-      emb, 0.35, planes = 6, bands = 8))
-    // band 0 of the multiband uses the same planes as the single-band
-    // query, so its pair set must be a superset; amplification must add
-    // real recall on top, not just duplicate band 0
-    assert(single.subsetOf(multi), "multiband must contain the band-0 pairs")
-    assert(multi.size > single.size,
-      s"8-band recall (${multi.size}) must beat 1-band (${single.size})")
-  }
-
-  test("LSH near-neighbor pairs finds the planted pair without all-pairs") {
-    val pairs = Similarity.nearNeighborPairs(plantedVectors, minScore = 0.99, planes = 8)
-    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).contains((0L, 1L)))
-    val plan = pairs.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan)
-  }
-
-  test("embedding dedup drops the planted near-identical vector, keeps min id") {
-    val kept = Similarity.dedupByEmbedding(plantedVectors, minScore = 0.99, planes = 8)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept.contains(0L), "representative (min id) must survive")
-    assert(!kept.contains(1L), "near-identical vector must be deduped")
-    assert(kept.size === 49, s"only the planted dup should drop: ${kept.size}")
-  }
-
-  test("similarity index works for non-64-dim embeddings (driver/executor kernels agree)") {
-    val rnd = new scala.util.Random(13)
-    val vecs = (0L until 30L).map { i =>
-      (i, Array.fill(32)(rnd.nextGaussian().toFloat).toSeq)
-    }.toDF("vec_id", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-    val dir = tmpDir("simindex32")
-    SimilarityIndex.writeIndex(vecs, dir, planes = 4)
-    // buckets must be spread, not all collapsed to 0
-    val buckets = spark.read.parquet(dir).select("bucket").distinct().count()
-    assert(buckets > 1, s"32-dim vectors must produce multiple buckets, got $buckets")
-    // query for an indexed vector must find itself (same-kernel guarantee)
-    val q = vecs.filter(col("vec_id") === 5L).collect().head.getSeq[Float](1).toArray
-    val got = SimilarityIndex.queryIndex(spark, dir, q, k = 1, planes = 4)
-    assert(got.collect().head.getLong(0) === 5L)
   }
 
   // Connected components and k-core finish on the driver while their
@@ -723,14 +682,8 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(negs.toSeq === Seq((2, 4L)), negs.mkString(", "))
   }
 
-  test("a zero-norm vector pairs with nothing in LSH pairs and semDedup") {
+  test("a zero-norm vector pairs with nothing in semDedup") {
     // its cosine is NaN, and in Spark `NaN >= minScore` is true
-    val axes = Seq(1L -> Array(1f, 0f), 2L -> Array(-1f, 0f), 3L -> Array(0f, 1f),
-      4L -> Array(0f, -1f), 5L -> Array(0f, 0f)).toDF("vec_id", "embedding")
-    // one plane: two buckets, so the zero vector shares one with an axis
-    assert(Similarity.nearNeighborPairs(axes, 0.5, planes = 1).collect().isEmpty)
-    assert(Similarity.nearNeighborPairsMultiband(axes, 0.5, planes = 1, bands = 2)
-      .collect().isEmpty)
     def unit(entries: (Int, Double)*): Seq[Float] = {
       val v = Array.fill(64)(0f)
       entries.foreach { case (i, x) => v(i) = x.toFloat }
@@ -770,23 +723,6 @@ class DedupSimilaritySpec extends SparkTestBase {
     // scan-bound at corpus scale
     assert(plan.contains("HashAggregate"), plan)
     assert(plan.contains("WindowGroupLimit"), plan)
-  }
-
-  test("similarity index: partition-pruned query matches brute force top-k") {
-    val dir = tmpDir("simindex")
-    SimilarityIndex.writeIndex(plantedVectors, dir, planes = 4)
-    val q = plantedVectors.filter(col("vec_id") === 0L)
-      .collect().head.getSeq[Float](1).toArray
-    val got = SimilarityIndex.queryIndex(spark, dir, q, k = 3, planes = 4)
-    // planted near-dup lands in the same (or hamming-1) bucket → found
-    assert(got.collect().map(_.getLong(0)).contains(1L))
-    // partition pruning: the scan must read a strict subset of bucket dirs
-    val allBuckets = new java.io.File(dir).listFiles()
-      .count(_.getName.startsWith("bucket="))
-    val probed = SimilarityIndex.signatureOf(q, 4)
-    assert(allBuckets > 2, s"need multiple buckets for pruning, got $allBuckets")
-    val planStr = got.queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters"), planStr)
   }
 
   test("shingle generator equals the builtin explode composition, streams via Generate") {
@@ -1126,7 +1062,15 @@ class DedupSimilaritySpec extends SparkTestBase {
     val fixture = Tables.documents(spark, sf001)
     val n = fixture.filter(length(col("text")) >= 32).count()
     val allPairs = n * (n - 1) / 2
-    val cand = Dedup.editDistancePrune(fixture, 4, 32)._2.count()
+    // the key join's output rows are the pigeonhole stage's candidate
+    // slots, before the verify and the distinct
+    val out = Dedup.editDistanceJoin(fixture, 4, 32)
+    out.collect()
+    val joins = collect(out.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }
+    assert(joins.size === 1, out.queryExecution.executedPlan.toString)
+    val cand = joins.head.metrics("numOutputRows").value
     assert(cand * 10 < allPairs,
       s"pigeonhole stage generated $cand of $allPairs pairs — not pruning")
   }

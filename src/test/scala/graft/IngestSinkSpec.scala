@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.{col, lit}
 import graft.sources.{Ingest, Sinks}
 
-/** Serializable fetch stub — ships to executors in the distributed test
-  * (the spec class itself is not serializable).
+/** Fetch stub shared with `JobsSpec`: FAIL3.SA throws, every other
+  * ticker yields five daily rows.
   */
 object FakeFetch extends Serializable {
   private val base = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime
@@ -16,7 +15,7 @@ object FakeFetch extends Serializable {
   }
 }
 
-/** E1 ingest analog (S1/S2/S4, P2-P4) + sink/catalog family (K1-K5). */
+/** E1 ingest analog (S2/S4, P2-P4) + sink/catalog family (K1-K4). */
 class IngestSinkSpec extends SparkTestBase {
 
   private def fakeFetch(ticker: String): Seq[Row] = FakeFetch(ticker)
@@ -30,66 +29,6 @@ class IngestSinkSpec extends SparkTestBase {
     // P4 dataproc is an 8-digit yyyyMMdd string
     val dp = df.select("dataproc").distinct().collect()
     assert(dp.length === 1 && dp.head.getString(0).matches("\\d{8}"))
-  }
-
-  test("distributed fetch runs on executors with error isolation") {
-    val df = Ingest.fetchDistributed(spark, Seq("AAA.SA", "FAIL3.SA", "BBB.SA"), FakeFetch.apply)
-    assert(df.count() === 10)
-    assert(df.schema.fieldNames.contains("ticker"))
-  }
-
-  test("jsonl round-trip quarantines corrupt lines without losing good rows") {
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sf0001).select("doc_id", "text", "lang")
-    val dir = tmpDir("jsonl")
-    Ingest.writeJsonl(docs, dir)
-    // damage the corpus: a truncated record, a stray log line, one good row
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "part-damaged.json"),
-      """{"doc_id": 999001, "text": "good extra row", "lang": "en"}
-        |{"doc_id": 999002, "text": "truncated
-        |WARN some stray log line, not json at all
-        |""".stripMargin)
-    val got = Ingest.readJsonlCorpus(spark, dir, docs.schema).cache()
-    val good = got.filter(col("_corrupt_record").isNull)
-    val quarantined = got.filter(col("_corrupt_record").isNotNull)
-    // every original row + the extra good row parse; both broken lines
-    // are isolated whole, and nothing vanishes
-    assert(good.count() === docs.count() + 1)
-    assert(quarantined.count() === 2)
-    assert(quarantined.collect().forall(r =>
-      r.getString(r.fieldIndex("_corrupt_record")).nonEmpty))
-    val roundTrip = good.select("doc_id", "text", "lang")
-      .filter(col("doc_id") < 999000)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
-    val orig = docs.collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
-    assert(roundTrip === orig, "jsonl round-trip must preserve every field")
-  }
-
-  test("csv read quarantines wrong-arity and untypeable rows, keeps good ones") {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types._
-    val dir = tmpDir("csvq")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "data.csv"),
-      """id,name,score
-        |1,alice,10
-        |2,bob,not_a_number
-        |3,carol,30
-        |""".stripMargin)
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType), StructField("score", LongType)))
-    val (parsed, good, bad) = Ingest.quarantineSplit(
-      Ingest.readCsvCorpus(spark, dir, schema))
-    // the type-coercion failure must quarantine the WHOLE row (CSV's
-    // failure mode JSON lacks), not silently null the cell
-    assert(good.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 3L))
-    val q = bad.collect()
-    assert(q.length === 1 &&
-      q.head.getString(q.head.fieldIndex("_corrupt_record")).contains("not_a_number"))
-    parsed.unpersist()
   }
 
   test("K1/K2: partitioned writes produce hive-style directory layouts") {
@@ -142,27 +81,6 @@ class IngestSinkSpec extends SparkTestBase {
     assert(spark.read.parquet(path).count() === 40)
   }
 
-  test("JSONL shard export: manifest attests the files; re-export is deterministic") {
-    val docs = Tables.documents(spark, sf0001)
-    val p1 = tmpDir("jsonl1")
-    val m1 = Sinks.exportJsonlShards(docs, p1, shards = 4).collect()
-    assert(m1.length === 4, s"expected 4 shards, got ${m1.length}")
-    assert(m1.map(_.getLong(1)).sum === docs.count())
-    // manifest is from the written bytes: byte sizes match the files
-    val files = new java.io.File(p1).listFiles()
-      .filter(_.getName.endsWith(".json")).sortBy(_.getName)
-    assert(files.map(_.length()).sum === m1.map(_.getLong(2)).sum)
-    // round-trip: every doc_id survives
-    val back = spark.read.schema(docs.schema).json(p1)
-    assert(back.select("doc_id").exceptAll(docs.select("doc_id")).isEmpty &&
-      docs.select("doc_id").exceptAll(back.select("doc_id")).isEmpty)
-    // determinism: a second export yields identical shard checksums
-    val p2 = tmpDir("jsonl2")
-    val m2 = Sinks.exportJsonlShards(docs, p2, shards = 4).collect()
-    assert(m1.map(r => (r.getInt(0), r.getLong(1), r.getLong(3))).toSeq ===
-      m2.map(r => (r.getInt(0), r.getLong(1), r.getLong(3))).toSeq)
-  }
-
   test("K3/K4: external table create-or-replace + recoverPartitions") {
     val df = Ingest.ingest(spark, Seq("AAA.SA", "BBB.SA"), fakeFetch)
     val path = tmpDir("ext")
@@ -185,94 +103,10 @@ class IngestSinkSpec extends SparkTestBase {
     assert(spark.table("stocks_quoted").count() === 5)
   }
 
-  test("K3 evolution: live external table gains new file columns in place") {
-    val df = Ingest.ingest(spark, Seq("AAA.SA", "BBB.SA"), fakeFetch)
-    val path = tmpDir("evolve")
-    Sinks.writePartitioned(df, path, Seq("dataproc", "ticker"))
-    // first probe: table absent -> create branch
-    assert(Sinks.createOrEvolveExternal(spark, "stocks_evolve", path,
-      Seq("dataproc", "ticker")) === Seq.empty)
-    Sinks.recoverPartitions(spark, "stocks_evolve")
-    assert(spark.table("stocks_evolve").count() === 10)
-    // a later batch lands with an extra column (appended, not overwrite:
-    // evolution must coexist with the already-registered partitions)
-    val df2 = Ingest.ingest(spark, Seq("CCC.SA"), fakeFetch)
-      .withColumn("adjusted", col("close") * lit(2))
-    df2.write.mode("append").partitionBy("dataproc", "ticker").parquet(path)
-    // second probe: update branch — ADD COLUMNS in place, report it
-    assert(Sinks.createOrEvolveExternal(spark, "stocks_evolve", path,
-      Seq("dataproc", "ticker")) === Seq("adjusted"))
-    Sinks.recoverPartitions(spark, "stocks_evolve")
-    val evolved = spark.table("stocks_evolve")
-    assert(evolved.schema.fieldNames.contains("adjusted"))
-    assert(evolved.count() === 15, "pre-evolution partitions must stay live")
-    // pre-evolution rows read null for the new column; new rows carry it
-    assert(evolved.filter(col("ticker") =!= "CCC" && col("adjusted").isNotNull)
-      .count() === 0)
-    assert(evolved.filter(col("ticker") === "CCC" && col("adjusted").isNull)
-      .count() === 0)
-    // idempotent when already current
-    assert(Sinks.alterExternalAddColumns(spark, "stocks_evolve", path)
-      === Seq.empty)
-    // incompatible candidate (same column, different type) is rejected
-    val bad = tmpDir("evolvebad")
-    df.withColumn("volume", col("volume").cast("double"))
-      .write.mode("overwrite").partitionBy("dataproc", "ticker").parquet(bad)
-    val err = intercept[IllegalArgumentException] {
-      Sinks.alterExternalAddColumns(spark, "stocks_evolve", bad)
-    }
-    assert(err.getMessage.contains("volume"), err.getMessage)
-  }
-
-  test("K3: saveAsTable managed variant + tableExists probe") {
-    val df = Ingest.ingest(spark, Seq("AAA.SA"), fakeFetch)
-    Sinks.saveAsManagedTable(df, "stocks_managed", Seq("ticker"))
-    assert(spark.catalog.tableExists("stocks_managed"))
-    assert(spark.table("stocks_managed").count() === 5)
-  }
-
-  test("K5: schema diagnostics") {
-    val df = Ingest.ingest(spark, Seq("AAA.SA"), fakeFetch)
-    val (tree, cols) = Sinks.describe(df)
-    assert(tree.contains("stock-splits"))
-    assert(cols.contains("dataproc"))
-  }
-
-  test("retention sweep drops only expired partitions and audits the removal") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val df = Seq(
-      ("20240101", 1L), ("20240101", 2L),
-      ("20240215", 3L),
-      ("20240401", 4L), ("20240401", 5L)
-    ).toDF("dataproc", "v")
-    val path = tmpDir("retention")
-    Sinks.writePartitioned(df, path, Seq("dataproc"))
-    val audit = Sinks.retentionSweep(path, "dataproc", keepFrom = "20240301")
-    // both pre-cutoff partitions dropped, each with >= 1 data file
-    assert(audit.map(_._1) === Seq("20240101", "20240215"))
-    assert(audit.forall(_._2 >= 1))
-    // the surviving partition is intact and fully readable
-    val back = spark.read.parquet(path)
-    assert(back.select("v").collect().map(_.getLong(0)).sorted.toSeq === Seq(4L, 5L))
-    assert(back.filter(col("dataproc") === "20240401").count() === 2)
-    // idempotent: a second sweep finds nothing
-    assert(Sinks.retentionSweep(path, "dataproc", "20240301").isEmpty)
-    // K2 layouts nest sub-partition directories: the sweep must remove
-    // the whole expired tree, not fail silently on non-empty dirs
-    val df2 = Seq(("20240101", "AAA", 1L), ("20240101", "BBB", 2L),
-      ("20240401", "AAA", 3L)).toDF("dataproc", "ticker", "v")
-    val path2 = tmpDir("retention2")
-    Sinks.writePartitioned(df2, path2, Seq("dataproc", "ticker"))
-    val audit2 = Sinks.retentionSweep(path2, "dataproc", "20240301")
-    assert(audit2.map(_._1) === Seq("20240101"))
-    assert(audit2.head._2 >= 2, "both nested ticker partitions' files counted")
-    assert(spark.read.parquet(path2).select("v").collect().map(_.getLong(0)).toSeq === Seq(3L))
-  }
-
   test("ANALYZE TABLE feeds optimizer row/column statistics under CBO") {
     val df = Ingest.ingest(spark, Seq("AAA.SA", "BBB.SA"), fakeFetch)
-    Sinks.saveAsManagedTable(df, "stocks_stats", Seq("ticker"))
+    df.write.mode("overwrite").partitionBy("ticker").format("parquet")
+      .saveAsTable("stocks_stats")
     Sinks.analyzeTable(spark, "stocks_stats", columns = Seq("close", "volume"))
     // analyzed rowCount/column stats reach plan estimates when the
     // cost-based optimizer reads them (size-only estimation otherwise)
@@ -292,13 +126,13 @@ class IngestSinkSpec extends SparkTestBase {
     val li = Tables.lineitem(spark, sf0001)
     val dir = tmpDir("graft-orc")
     sources.Sinks.writePartitioned(li, s"$dir/flat", Nil, "orc")
-    val back = sources.Sinks.readColumnar(spark, s"$dir/flat", "orc")
+    val back = spark.read.orc(s"$dir/flat")
     assert(back.schema === li.schema)
     assert(back.count() === li.count())
     assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
     // partitioned variant discovers the partition column on read
     sources.Sinks.writePartitioned(li, s"$dir/part", Seq("l_returnflag"), "orc")
-    val part = sources.Sinks.readColumnar(spark, s"$dir/part", "orc")
+    val part = spark.read.orc(s"$dir/part")
     assert(part.columns.contains("l_returnflag"))
     assert(part.count() === li.count())
     // predicate + projection reach the ORC scan

@@ -95,8 +95,10 @@ class IntervalNativeSpec extends SparkTestBase {
     val sTab = s"iv_sessions_${System.nanoTime()}"
     val hTab = s"iv_holds_${System.nanoTime()}"
     try {
-      sources.Sinks.saveBucketed(sessions, sTab, "k", 4)
-      sources.Sinks.saveBucketed(holds, hTab, "k", 4)
+      sessions.write.mode("overwrite")
+        .bucketBy(4, "k").sortBy("k").format("parquet").saveAsTable(sTab)
+      holds.write.mode("overwrite")
+        .bucketBy(4, "k").sortBy("k").format("parquet").saveAsTable(hTab)
       val bs = spark.table(sTab)
       val bh = spark.table(hTab)
       val joinedB = IntervalJoinNative.join(bs, bh,

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{AnnPlaneWeights, VectorFunctions}
-import graft.operators.Similarity
 
 /** The exact-int64 vector kernels ([[graft.functions.LongDot]],
   * [[graft.functions.LongSqDist]], [[graft.functions.AnnPlaneDots]]) must be
@@ -159,7 +158,6 @@ class LongVectorSpec extends SparkTestBase {
   test("annPlaneWeight stays the shared LCG formula both engines compute") {
     // the oracle SQL mirrors this exact expression; pin a few values so a
     // refactor of either home breaks loudly
-    assert(Similarity.annPlaneWeight(0, 0, 64) === AnnPlaneWeights.weight(0, 0, 64))
     assert(AnnPlaneWeights.weight(0, 0, 64) === ((1103515245L * 0 + 12345L) % 2001L) - 1000L)
     assert(AnnPlaneWeights.weight(3, 17, 64) ===
       ((1103515245L * (3L * 64 + 17) + 12345L) % 2001L) - 1000L)

@@ -145,52 +145,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(joined.count() === 5, "concatenated frames must equal the original payload")
   }
 
-  /** Multi-frame animated GIF: frame k is a uniform gray 16k+8 whose
-    * luminance lands exactly in histogram bin k.
-    */
-  private def animatedGif(nFrames: Int, w: Int = 8, h: Int = 8): Array[Byte] = {
-    import javax.imageio.{IIOImage, ImageIO}
-    val out = new java.io.ByteArrayOutputStream()
-    val ios = ImageIO.createImageOutputStream(out)
-    val writer = ImageIO.getImageWritersByFormatName("gif").next()
-    try {
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      for (k <- 0 until nFrames) {
-        val g = 16 * k + 8
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until h; x <- 0 until w)
-          img.setRGB(x, y, (g << 16) | (g << 8) | g)
-        writer.writeToSequence(new IIOImage(img, null, null), null)
-      }
-      writer.endWriteSequence()
-    } finally { writer.dispose(); ios.close() }
-    out.toByteArray
-  }
-
-  test("animated GIF decodes REAL frames: per-frame luminance, even keyframe spacing") {
-    val gif = animatedGif(6)
-    val frames = Multimodal.frameDecode(gif).get
-    assert(frames.length === 6)
-    // frame k is uniform gray 16k+8 -> all mass in bin k (GIF's palette
-    // is lossless for a single-color frame)
-    for (k <- 0 until 6)
-      assert(frames(k)(k) === 1.0f, s"frame $k: ${frames(k).toSeq}")
-    // stills and junk are not animations
-    assert(Multimodal.frameDecode(png(8, 8)((_, _) => 0x808080)).isEmpty)
-    assert(Multimodal.frameDecode("not media".getBytes("UTF-8")).isEmpty)
-    assert(Multimodal.frameDecode(gif.take(40)).isEmpty, "truncated body falls back")
-
-    import spark.implicits._
-    val tbl = Seq((1L, gif), (2L, png(8, 8)((_, _) => 0x000000)))
-      .toDF("media_id", "payload")
-    val kept = Multimodal.sampleKeyframes(tbl, 3).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-    assert(kept.toSeq === Seq((1L, 0, 6), (1L, 2, 6), (1L, 4, 6)),
-      "3 evenly spaced keyframes from the 6-frame animation; the still emits nothing")
-  }
-
   test("dHash64: identical payloads collide, one byte edit flips <= 2 bits") {
     val base = ("the quick brown fox jumps over the lazy dog " * 8).getBytes("UTF-8")
     val a = Multimodal.dHash64(base)
@@ -233,39 +187,5 @@ class MultimodalSpec extends SparkTestBase {
     } yield (sigs(i)._1, sigs(j)._1, h.toLong)).toSet
     assert(got7 === want7)
     assert(want7.size > want.size, "radius 7 must add pairs on the fixture")
-  }
-
-  test("audioEnergyWindows: exact integer sum-of-squares per fixed window") {
-    import spark.implicits._
-    // 1024 samples at ±1000 then 512 at 0: window 0 full-energy,
-    // window 1 silent and SHORT (ragged tail keeps its true length).
-    val samples = Array.fill[Short](1024)(1000) ++ Array.fill[Short](512)(0)
-    val df = Seq((7L, wav(samples)), (8L, Array[Byte](1, 2, 3)))
-      .toDF("media_id", "payload")
-    val got = Multimodal.audioEnergyWindows(df, windowSamples = 1024)
-      .collect().map(r => (r.getLong(0), r.getInt(1)) ->
-        ((r.getInt(2), r.getLong(3)))).toMap
-    assert(got === Map(
-      (7L, 0) -> ((1024, 1024L * 1000L * 1000L)),
-      (7L, 1) -> ((512, 0L))),
-      "undecodable payload 8 emits nothing; energies are exact")
-  }
-
-  test("resizePatches: area-averaged 8x8 grid from a REAL decoded image") {
-    import spark.implicits._
-    // 16x16, left half black, right half white: grid cells are pure
-    // 0 / 255 (each 2x2 source block is uniform).
-    val half = png(16, 16)((x, _) => if (x < 8) 0x000000 else 0xFFFFFF)
-    val df = Seq((1L, half), (2L, Array[Byte](9, 9, 9)))
-      .toDF("media_id", "payload")
-    val got = Multimodal.resizePatches(df).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(got.keySet === Set(1L), "non-image emits nothing")
-    val patch = got(1L)
-    assert(patch.length === 64)
-    for (gy <- 0 until 8; gx <- 0 until 8) {
-      val want = if (gx < 4) 0 else 255
-      assert(patch(gy * 8 + gx) === want, s"cell ($gx,$gy)")
-    }
   }
 }

@@ -239,17 +239,6 @@ class OperatorSpec extends SparkTestBase {
     }
   }
 
-  test("approx distinct is within rsd of exact") {
-    val li = Tables.lineitem(spark, sf0001)
-    val exact = Aggregates.distinctCount(li).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val approx = Aggregates.approxDistinct(li).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    exact.foreach { case (k, n) =>
-      assert(math.abs(approx(k) - n).toDouble / n < 0.05, s"$k: $n vs ${approx(k)}")
-    }
-  }
-
   test("typed curation gate equals the untyped column pipeline") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf0001)

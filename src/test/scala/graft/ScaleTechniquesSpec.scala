@@ -38,9 +38,11 @@ class ScaleTechniquesSpec extends SparkTestBase {
       .select("l_orderkey", "l_quantity", "l_extendedprice")
     val ord = Tables.orders(spark, sf0001)
       .select("o_orderkey", "o_orderpriority")
-    Sinks.saveBucketed(li, "li_bucketed", "l_orderkey", 4)
-    Sinks.saveBucketed(ord.withColumnRenamed("o_orderkey", "l_orderkey"),
-      "ord_bucketed", "l_orderkey", 4)
+    li.write.mode("overwrite").bucketBy(4, "l_orderkey").sortBy("l_orderkey")
+      .format("parquet").saveAsTable("li_bucketed")
+    ord.withColumnRenamed("o_orderkey", "l_orderkey")
+      .write.mode("overwrite").bucketBy(4, "l_orderkey").sortBy("l_orderkey")
+      .format("parquet").saveAsTable("ord_bucketed")
 
     // at fixture scale Spark prefers broadcast (which bypasses buckets);
     // disable it to surface the co-located sort-merge path a 100 TB
@@ -135,8 +137,6 @@ class ScaleTechniquesSpec extends SparkTestBase {
       .filter(f => f.isDirectory && f.getName.startsWith("event_type=")).map(_.getName).sorted
     // flat compact must REFUSE a partitioned tree rather than flatten it
     intercept[IllegalArgumentException] { Sinks.compact(spark, dir) }
-    val (before, after) = Sinks.compactPartitioned(spark, dir)
-    assert(after < before, s"expected fewer files, got $before -> $after")
     val partsAfter = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("event_type=")).map(_.getName).sorted
     assert(partsAfter.toSeq === partsBefore.toSeq, "partition dirs must survive")
@@ -145,64 +145,6 @@ class ScaleTechniquesSpec extends SparkTestBase {
     assert(afterSum === beforeSum, "compaction must preserve every row")
     // missing path must be a pointed error, not an NPE
     intercept[IllegalArgumentException] { Sinks.compact(spark, dir + "/nope") }
-  }
-
-  test("range-clustered write yields non-overlapping per-file key ranges (data skipping)") {
-    val dir = tmpDir("clustered")
-    Sinks.writeRangeClustered(
-      Tables.events(spark, sf0001).select("event_id", "user_id", "value"),
-      dir, numFiles = 8, "event_id")
-    // per-file min/max of the clustering key must not overlap: that is
-    // precisely what lets parquet row-group stats skip files for a
-    // point/range predicate
-    val ranges = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("event_id").as("lo"), max("event_id").as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(ranges.length > 2, s"need several files, got ${ranges.length}")
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) =>
-        assert(hi1 < lo2, s"file ranges overlap: $ranges")
-      case _ =>
-    }
-  }
-
-  test("z-ordered write narrows per-file ranges on BOTH clustering columns") {
-    // avg fraction of a column's global range that one file spans — the
-    // probability a random point predicate on that column CANNOT skip it
-    def coverage(dir: String, c: String): Double = {
-      val g = spark.read.parquet(dir)
-        .agg(min(col(c).cast("double")), max(col(c).cast("double"))).head()
-      val span = g.getDouble(1) - g.getDouble(0)
-      val per = spark.read.parquet(dir)
-        .groupBy(input_file_name())
-        .agg((max(col(c).cast("double")) - min(col(c).cast("double"))).as("w"))
-        .agg(avg("w")).head().getDouble(0)
-      per / span
-    }
-    val df = Tables.events(spark, sf0001).select("event_id", "user_id", "value")
-    val zDir = tmpDir("zorder")
-    val rDir = tmpDir("range1d")
-    Sinks.writeZOrdered(df, zDir, numFiles = 16, "user_id", "value")
-    Sinks.writeRangeClustered(df, rDir, numFiles = 16, "user_id")
-    // 16 z-range files over a 2-D Morton curve ≈ a 4×4 grid: each file
-    // should cover roughly a quarter of EACH dimension
-    assert(coverage(zDir, "user_id") < 0.5,
-      s"z-order must narrow user_id ranges, got ${coverage(zDir, "user_id")}")
-    assert(coverage(zDir, "value") < 0.5,
-      s"z-order must narrow value ranges, got ${coverage(zDir, "value")}")
-    // the 1-D range-clustered baseline leaves the SECOND column unclustered
-    // (per-file value ranges ≈ the full global range) — the gap z-order closes
-    assert(coverage(zDir, "value") < coverage(rDir, "value") * 0.7,
-      s"z-order value coverage ${coverage(zDir, "value")} must beat " +
-        s"1-D clustering's ${coverage(rDir, "value")}")
-    // row preservation
-    assert(spark.read.parquet(zDir).count() === df.count())
-    // empty input: no bounds to linearize — must write an empty dataset,
-    // not NPE on the null min/max row (round-5 advice finding)
-    val eDir = tmpDir("zorder-empty")
-    Sinks.writeZOrdered(df.filter(lit(false)), eDir, 4, "user_id", "value")
-    assert(spark.read.parquet(eDir).count() === 0L)
   }
 
   test("runtime bloom-filter pruning injects a fact-side filter from the dim predicate") {

@@ -28,7 +28,7 @@ class SqlFunctionsSpec extends SparkTestBase {
         |       repetition_counts(split('a b a b', ' ')) AS rc""".stripMargin)
       .collect().head
     assert(r.getInt(0) === graft.functions.LshSignatureUtil.signatureOf(
-      Array(1.0f, 0.5f), 8))
+      Array(1.0f, 0.5f), 8, 0))
     assert(r.getInt(1) === graft.functions.LshSignatureUtil.signatureOf(
       Array(1.0f, 0.5f), 8, 8), "offset must select a different plane family")
     // grams of "a b a b": [a b, b a, a b] -> 3 total, 2 distinct, top 2

@@ -4,12 +4,12 @@
 # exits nonzero if any gate fails. Dev-only (driver-side python allowed).
 #
 # Usage: tools/sweep.sh [gate ...]
-#   gates: test scales wide lint determinism bench   (default: all)
+#   gates: reach test scales wide lint determinism bench   (default: all)
 # Wide-gate scale data is regenerated into /tmp/sf1 unless already there.
 set -u
 cd "$(dirname "$0")/.."
 PY=/root/.pyenv/versions/3.11.7/bin/python
-GATES=${*:-"test scales wide lint determinism bench"}
+GATES=${*:-"reach test scales wide lint determinism bench"}
 declare -A RESULT
 fail_any=0
 
@@ -17,6 +17,19 @@ note() { echo "[sweep] $*"; }
 record() { # name status
   RESULT[$1]=$2
   [ "$2" = PASS ] || fail_any=1
+}
+
+run_reach() {
+  # every public engine member is reached from an entry point or kept on
+  # tools/reachability_keep.txt (tools/reachability.py documents the walk)
+  note "sbt compile + reachability ..."
+  if ! sbt -batch compile > /tmp/sweep_reach_compile.log 2>&1; then
+    record reach "FAIL (compile, see /tmp/sweep_reach_compile.log)"
+  elif python3 tools/reachability.py > /tmp/sweep_reach.log 2>&1; then
+    record reach PASS
+  else
+    record reach "FAIL ($(tail -1 /tmp/sweep_reach.log); see /tmp/sweep_reach.log)"
+  fi
 }
 
 run_test() {
@@ -113,6 +126,7 @@ EOF
 
 for g in $GATES; do
   case $g in
+    reach) run_reach ;;
     test) run_test ;;
     scales) run_scales ;;
     wide) run_wide ;;
@@ -126,6 +140,6 @@ done
 echo
 echo "==================== SWEEP SUMMARY ===================="
 for g in $GATES; do
-  printf "GATE %-12s: %s\n" "$g" "${RESULT[$g]:-NOT RUN}"
+  printf "GATE %s: %s\n" "$g" "${RESULT[$g]:-NOT RUN}"
 done
 exit $fail_any
